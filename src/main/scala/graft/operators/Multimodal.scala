@@ -11,16 +11,13 @@ import org.apache.spark.sql.types._
  * `mapInPandas` batches). The Spark-side plumbing — schema, batch
  * iteration, partitioning, metadata propagation — is real and tested.
  *
- * Codec status (round 5): IMAGES decode for real
- * (`pipeline/ImageCodecs` — PPM P6/P3, 24-bit BMP, PNG
- * (inflate/defilter/CRC), GIF (LZW), pure Scala/JDK) and
- * AUDIO decodes for real (`pipeline/AudioCodecs` — RIFF/WAVE PCM);
- * both are oracle-certified end-to-end (q_img_decode / q_lof_media /
- * q_wav_decode). Only VIDEO remains behind the `StubCodecs`
- * deterministic-fake boundary — no video codec exists in this
- * environment, and frame-sampling plumbing (the Spark-side part) is
- * real and oracle-tested (q_frames); swap the stub for ffmpeg
- * bindings in prod.
+ * Codec status: IMAGES decode for real (`pipeline/ImageCodecs` —
+ * PPM P6/P3, 24-bit BMP, PNG (inflate/defilter/CRC), GIF (LZW), pure
+ * Scala/JDK) and AUDIO decodes for real (`pipeline/AudioCodecs` —
+ * RIFF/WAVE PCM); both are oracle-certified end-to-end (q_img_decode /
+ * q_lof_media / q_wav_decode). VIDEO has no codec in this library:
+ * only the frame-sampling plumbing (`sampleFrames`, offsets from the
+ * metadata, oracle-tested by q_frames) is provided.
  */
 object Multimodal {
 
@@ -34,44 +31,6 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("sample_rate", IntegerType),
       StructField("frames", IntegerType))), nullable = false)))
-
-  /**
-   * ======================== STUBBED CODECS =========================
-   * Deterministic stand-ins for image/audio decoding. Every function
-   * is a pure function of the payload bytes so results are
-   * reproducible at any parallelism. Replace with real codecs
-   * (javax.imageio / ffmpeg bindings) outside this sandbox.
-   */
-  object StubCodecs {
-    /** "Decode" an image to a fake pixel-stats feature vector. */
-    def imageFeatures(payload: Array[Byte], dims: Int): Array[Float] = {
-      val out = new Array[Float](dims)
-      var h = 1125899906842597L
-      var i = 0
-      while (i < payload.length) { h = 31 * h + payload(i); i += 1 }
-      var d = 0
-      while (d < dims) {
-        h ^= h >>> 33; h *= -49064778989728563L; h ^= h >>> 33
-        out(d) = ((h % 20001L) / 10000.0f) // [-2, 2] deterministic
-        d += 1
-      }
-      out
-    }
-
-    /** "Resize": deterministic payload shrink keeping a content hash. */
-    def resize(payload: Array[Byte], w: Int, hgt: Int): Array[Byte] = {
-      val target = Math.max(16, Math.min(payload.length, w * hgt / 64))
-      val out = new Array[Byte](target)
-      var i = 0
-      while (i < target) { out(i) = payload(i * payload.length / target); i += 1 }
-      out
-    }
-
-    /** "Frame sample": pick n evenly spaced pseudo-frames. */
-    def frameOffsets(frames: Int, n: Int): Array[Int] =
-      if (frames <= 0 || n <= 0) Array.empty
-      else (0 until n).map(i => (i.toLong * frames / n).toInt).toArray
-  }
 
   /** Deterministic synthetic media corpus (payload = f(media_id)). */
   def syntheticMedia(spark: SparkSession, n: Long): DataFrame = {
@@ -90,52 +49,7 @@ object Multimodal {
           (pmod(col("id") * 7, lit(300L)) + 1).cast("int").as("frames")).as("meta"))
   }
 
-  /** Batch feature extraction: per-partition iterator transform over
-    * the binary column (the mapInPandas batch shape), emitting an
-    * embedding per media row. */
-  def extractFeatures(media: DataFrame, dims: Int = 32): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select("media_id", "kind", "payload")
-      .mapPartitions { rows =>
-        // batch-shaped loop: decode stub runs once per row, vectorizable
-        rows.map { r =>
-          Row(r.getLong(0), r.getString(1),
-            StubCodecs.imageFeatures(r.getAs[Array[Byte]](2), dims).toSeq)
-        }
-      }(enc)
-  }
-
-  /** "Resize" images: binary in → binary out with updated metadata.
-    * Runs in the same per-partition batch shape as [[extractFeatures]]
-    * — the pattern a real codec (native lib handle per batch, not per
-    * row) requires; a per-row Scala UDF would re-enter the JVM↔codec
-    * boundary once per image. */
-  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val images = media.filter(col("kind") === "image")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
-      images.schema.asInstanceOf[StructType])
-    val metaIdx = images.schema.fieldIndex("meta")
-    val payloadIdx = images.schema.fieldIndex("payload")
-    images.mapPartitions { rows =>
-      rows.map { r =>
-        val vals = r.toSeq.toArray
-        vals(payloadIdx) = StubCodecs.resize(r.getAs[Array[Byte]](payloadIdx), w, h)
-        val m = r.getStruct(metaIdx)
-        vals(metaIdx) = Row(w, h, m.get(2), m.get(3))
-        Row.fromSeq(vals.toSeq)
-      }
-    }(enc)
-  }
-
   // ===================== REAL-CODEC PATH (images) =====================
-  // graft.pipeline.ImageCodecs is a REAL decoder (PPM P6/P3, 24-bit
-  // BMP, PNG with inflate/defilter/CRC, GIF with LZW — pure Scala/JDK)
-  // — the stub boundary above remains only for the video kind.
 
   /**
    * Deterministic synthetic image corpus with REAL encoded payloads:
@@ -182,8 +96,7 @@ object Multimodal {
    * REAL decode → per-image pixel statistics: width/height from the
    * parsed header and exact integer channel sums from the decoded
    * pixels (order-free, SQL-replayable). Runs in the per-partition
-   * batch shape (one decoder context per batch, like
-   * [[extractFeatures]]).
+   * batch shape (one decoder context per batch).
    */
   def decodeImageStats(media: DataFrame, idCol: String = "media_id",
       payloadCol: String = "payload"): DataFrame = {

@@ -178,7 +178,7 @@ object SpatialJoins {
    * nearest rows of `targets` (small side, broadcast) by haversine
    * distance. Exact: brute-force over the broadcast side + window
    * top-k — right for dimension-table-sized `targets`. For large
-   * targets use `knnJoinCells`.
+   * targets use `knnJoinQuadtree`.
    */
   def knnJoinBroadcast(points: DataFrame, lonCol: String, latCol: String, pointKey: String,
       targets: DataFrame, tLonCol: String, tLatCol: String, k: Int): DataFrame = {
@@ -190,15 +190,6 @@ object SpatialJoins {
       .filter(col("__rank") <= k)
   }
 
-  /**
-   * Scalable kNN join via cell rings: candidates from the target's
-   * cell + rings at increasing radius (precomputed to `maxRing`), then
-   * exact top-k. Candidate generation is an equi-join on cell —
-   * shuffle-partitioned, no broadcast of the big side. `maxRing` must
-   * be chosen so k neighbours fall within the ring radius (callers
-   * size it from target density; correctness fallback: rows with fewer
-   * than k candidates should be re-run at a coarser level).
-   */
   /**
    * Distance-within join (the ST_DWithin join shape): every pair
    * (a, b) with planar lon/lat distance <= `radius` degrees.
@@ -271,80 +262,27 @@ object SpatialJoins {
       .select(col(idCol), col("__m.s").as("seg_id"), col("__m.d").as("dist"))
   }
 
-  def knnJoinCells(points: DataFrame, lonCol: String, latCol: String, pointKey: String,
-      targets: DataFrame, tLonCol: String, tLatCol: String,
-      k: Int, level: Int, maxRing: Int): DataFrame = {
-    /** One ring pass at `lvl`: every point key gets its in-ring top-k
-      * (possibly fewer than k when the rings are under-populated). */
-    def ringTopK(pts: DataFrame, lvl: Int): DataFrame = {
-      // neighbourhood cells as ONE in-row duplicate-free array per
-      // target (integer index arithmetic: antimeridian wrap, pole-row
-      // drop) exploded in place — no crossJoin with an offset table and
-      // no full-width dropDuplicates shuffle per ring pass; the only
-      // exchange left in the candidate plan is the cell equi-join
-      val tNbr = targets.withColumn("__cell",
-        explode(st_cell_neighborhood(lit(lvl), col(tLonCol), col(tLatCol), lit(maxRing))))
-      val pc = pts.withColumn("__cell", st_cellid(lit(lvl), col(lonCol), col(latCol)))
-      val cand = pc.join(tNbr, Seq("__cell"), "inner")
-        .withColumn("__dist",
-          st_distance_sphere(st_point(col(lonCol), col(latCol)), st_point(col(tLonCol), col(tLatCol))))
-      val w = Window.partitionBy(col(pointKey)).orderBy(col("__dist").asc, col(tLonCol), col(tLatCol))
-      cand.withColumn("__rank", row_number().over(w))
-        .filter(col("__rank") <= k)
-        .drop("__cell")
-    }
-
-    // Automated under-k fallback: point keys whose rings held fewer
-    // than k candidates are re-run at successively coarser levels
-    // (level-2 each round quadruples the ring area); level 0 is a
-    // single global cell, so termination with max(k, |targets|)
-    // candidates is guaranteed. Driver-side work per round is a
-    // boolean isEmpty probe — the data never leaves the cluster.
-    var lvl = level
-    var pending = points
-    var acc: List[DataFrame] = Nil
-    var done = false
-    while (!done) {
-      val topk = ringTopK(pending, lvl).persist()
-      val full = topk.groupBy(col(pointKey).as("__pk"))
-        .agg(count(lit(1)).as("__cnt")).filter(col("__cnt") >= k)
-        .select("__pk")
-      if (lvl <= 0) { acc ::= topk; done = true }
-      else {
-        // `full` is pointKey-sized — join it by shuffle (same pk
-        // partitioning the window already produced), never broadcast.
-        // Zero-candidate points are absent from topk entirely, so
-        // pending is derived by anti-join against the FULL set (not by
-        // filtering counts < k, which would miss them).
-        acc ::= topk.join(full, topk(pointKey) === full("__pk"), "left_semi")
-        pending = pending.join(full, pending(pointKey) === full("__pk"), "left_anti")
-        if (pending.isEmpty) done = true else lvl = math.max(0, lvl - 2)
-      }
-    }
-    acc.reduce(_ unionByName _)
-  }
-
   /**
    * GUARANTEED-EXACT kNN join with LOCAL QUADTREE REFINE (the north
    * rule's "kNN via S2 cell covering + local quadtree refine").
    *
-   * Same cell-ring covering as [[knnJoinCells]], different refine: the
-   * candidate cross product is NEVER materialized. A typed `cogroup`
-   * co-partitions probes (one cell each) with ring-replicated targets
-   * on the cell key, builds a per-cell [[graft.index.Quadtree]] over
-   * the group's targets, and answers each probe's exact top-k locally
-   * in O(log n) best-first descent — versus the window variant's
+   * Candidates come from a cell-ring covering (each target replicated
+   * to the cells within `maxRing` of its own); the candidate cross
+   * product is NEVER materialized. A typed `cogroup` co-partitions
+   * probes (one cell each) with ring-replicated targets on the cell
+   * key, builds a per-cell [[graft.index.Quadtree]] over the group's
+   * targets, and answers each probe's exact top-k locally in O(log n)
+   * best-first descent — versus a window top-k's
    * |probes_in_cell| x |targets_in_ring| candidate rows shuffled and
    * sorted per probe key.
    *
-   * Exactness: unlike [[knnJoinCells]] (whose contract asks the CALLER
-   * to size `maxRing` so k neighbours fall inside the ring), a probe's
-   * result here is accepted only when its k-th distance is strictly
-   * below the ring's provable coverage radius — the minimum great-
-   * circle distance to any point OUTSIDE the covered lat/lon rows
-   * (latitude margin: d >= R*|dPhi|; longitude margin: d >=
-   * 2R*asin(cos(phiMax)*sin(dLambda/2)), both sharp; poles/wrap make a
-   * side unbounded or zero conservatively). Probes that fail coarsen
+   * Exactness: the caller need not size `maxRing` so k neighbours fall
+   * inside the ring — a probe's result is accepted only when its k-th
+   * distance is strictly below the ring's provable coverage radius: the
+   * minimum great-circle distance to any point OUTSIDE the covered
+   * lat/lon rows (latitude margin: d >= R*|dPhi|; longitude margin:
+   * d >= 2R*asin(cos(phiMax)*sin(dLambda/2)), both sharp; poles/wrap
+   * make a side unbounded or zero conservatively). Probes that fail coarsen
    * by two levels (ring area x16) until level 0 — one global cell — so
    * the answer is ALWAYS the true kNN, at any `level`/`maxRing`.
    *

@@ -7,10 +7,8 @@ import java.nio.{ByteBuffer, ByteOrder}
  * canonical container (RIFF header, chunk iteration with unknown
  * chunks skipped, `fmt ` with audioFormat=1, little-endian `data`),
  * 8-bit unsigned and 16-bit signed samples, any channel count
- * (interleaved frames). Together with [[ImageCodecs]] this retires
- * the `StubCodecs` caveat for the audio kind — `decode` really parses
- * container bytes; only video remains stubbed (no codec exists in
- * this environment, and a real video decoder is out of scope by
+ * (interleaved frames). `decode` really parses container bytes;
+ * video has no codec (a real video decoder is out of scope by
  * declaration).
  *
  * Decoded samples are SIGNED AND CENTERED regardless of storage

@@ -8,11 +8,10 @@ package graft.pipeline
  * (BITMAPFILEHEADER + BITMAPINFOHEADER, little-endian, BGR byte
  * order, rows padded to 4 bytes, bottom-up unless biHeight < 0).
  *
- * These retire the `StubCodecs` caveat for images: `decode` really
- * parses payload bytes — header tokenization, comment skipping, row
- * padding, bottom-up flip, BGR→RGB — and the engine's image feature
- * path runs on the decoded pixels, not on a payload hash. The
- * decoded form is row-major top-left RGB, 8 bits per sample.
+ * `decode` really parses payload bytes — header tokenization, comment
+ * skipping, row padding, bottom-up flip, BGR→RGB — and the engine's
+ * image statistics run on the decoded pixels. The decoded form is
+ * row-major top-left RGB, 8 bits per sample.
  *
  * Everything here is a pure function of the payload (no RNG, no
  * native handles), so any parallelism decodes identically — the same
@@ -169,7 +168,7 @@ object ImageCodecs {
           require((b(pos + 18) & 0xff) == 0 && (b(pos + 19) & 0xff) == 0,
             "PNG: unsupported compression/filter method")
           require((b(pos + 20) & 0xff) == 0, "PNG: interlaced images unsupported")
-          checkDims(w, h, b.length, 0)
+          checkDims(w, h, b.length, 0, bpp = if (colorType == 6) 4 else 3)
         case "IDAT" =>
           require(w > 0, "PNG: IDAT before IHDR")
           idat.write(b, pos + 8, len)
@@ -181,6 +180,10 @@ object ImageCodecs {
     require(w > 0 && idat.size() > 0, "PNG: missing IHDR or IDAT")
     val bpp = if (colorType == 6) 4 else 3
     val stride = w * bpp
+    // deflate expands at most 1032:1, so a larger pixel buffer is a
+    // forged header — refused before it is allocated
+    require(h.toLong * (1 + stride) <= idat.size().toLong * 1032 + 1024,
+      s"PNG: dimensions $w x $h exceed the compressed data")
     val raw = new Array[Byte](h * (1 + stride))
     val inflater = new java.util.zip.Inflater()
     inflater.setInput(idat.toByteArray)
@@ -348,12 +351,14 @@ object ImageCodecs {
       require(pos < b.length, "gif: missing image data")
       (b(pos) & 0xff) match {
         case 0x21 => // extension: label + sub-blocks
+          require(pos + 2 < b.length, "gif: truncated extension")
           pos += 2
           var sz = b(pos) & 0xff
           while (sz != 0) { pos += 1 + sz; require(pos < b.length, "gif: truncated extension"); sz = b(pos) & 0xff }
           pos += 1
         case 0x3b => throw new IllegalArgumentException("gif: trailer before image data")
         case 0x2c =>
+          require(pos + 10 <= b.length, "gif: truncated image descriptor")
           val iw = u16(pos + 5); val ih = u16(pos + 7)
           val iflags = b(pos + 9) & 0xff
           pos += 10
@@ -367,6 +372,7 @@ object ImageCodecs {
           }
           require(table != null, "gif: no color table")
           val interlaced = (iflags & 0x40) != 0
+          require(pos + 1 < b.length, "gif: truncated image data")
           val minCode = b(pos) & 0xff; pos += 1
           require(minCode >= 2 && minCode <= 11, s"gif: bad LZW min code size $minCode")
           // concatenate data sub-blocks
@@ -510,10 +516,12 @@ object ImageCodecs {
   /** Adversarial-header guard: dimensions must be positive and the
     * pixel count must fit the payload we actually hold — without this
     * a forged header could drive a negative/overflowed allocation
-    * (raw NegativeArraySizeException instead of the typed error). */
-  private def checkDims(w: Int, h: Int, available: Int, bytesPerPx: Int): Unit = {
+    * (raw NegativeArraySizeException instead of the typed error).
+    * `bpp` is the decoder's bytes per pixel; its largest buffer is
+    * PNG's filtered rows, h * (1 + w * bpp) bytes, sized here in Long. */
+  private def checkDims(w: Int, h: Int, available: Int, bytesPerPx: Int, bpp: Int = 3): Unit = {
     require(w > 0 && h > 0, s"image: non-positive dimensions $w x $h")
-    require(w.toLong * h * 3 <= Int.MaxValue &&
+    require(h.toLong * (1 + w.toLong * bpp) <= Int.MaxValue &&
       (bytesPerPx == 0 || w.toLong * h * bytesPerPx <= available.toLong),
       s"image: dimensions $w x $h exceed the payload")
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
+import GeomExprs.{geomArrayType, geomType}
+
 /**
  * Catalyst expressions for every st_* operator (SURVEY.md §2). Each is
  * a thin wrapper over a static method in [[GeomEval]]; codegen emits a
@@ -13,30 +15,69 @@ import org.apache.spark.sql.types._
  */
 object GeomExprs {
   val geomType: DataType = GeomSchema.dataType
+  val geomArrayType: DataType = ArrayType(geomType, containsNull = false)
+  /** (center, nearest, radius) of the inscribed / empty circle kernels. */
+  val circleType: DataType = StructType(Seq(
+    StructField("center", geomType),
+    StructField("nearest", geomType),
+    StructField("radius", DoubleType)))
+  /** GeomEval kernel of a heterogeneous overlay op (kernels/Overlay codes). */
+  def heteroKernel(op: Int): String = op match {
+    case graft.kernels.Overlay.OpIntersection => "heteroIntersection"
+    case graft.kernels.Overlay.OpUnion => "heteroUnion"
+    case graft.kernels.Overlay.OpDifference => "heteroDifference"
+    case _ => "heteroSymDifference"
+  }
 }
 
 // ----------------------------------------------------------- base forms
 
-/** Shared codegen: object-typed results (geom struct, string, array,
-  * binary) get an explicit `== null` check after the static call —
-  * `defineCodeGen` alone would leave isNull=false when the kernel
-  * returns null (e.g. closest point of an EMPTY geometry), handing a
-  * null struct to the next expression inside whole-stage codegen. */
+/** Kernel plumbing shared by the Geom*Expr bases. Codegen: object-typed
+  * results (geom struct, string, array, binary) get an explicit
+  * `== null` check after the static call — `defineCodeGen` alone would
+  * leave isNull=false when the kernel returns null (e.g. closest point
+  * of an EMPTY geometry), handing a null struct to the next expression
+  * inside whole-stage codegen. Interpreted eval invokes the same static
+  * method reflectively, as Spark's `StaticInvoke` does. */
 private[sql] object GeomCodegen {
+  import java.lang.reflect.{InvocationTargetException, Method, Modifier}
   import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   def isPrimitive(dt: DataType): Boolean = CodeGenerator.isPrimitiveType(dt)
+
+  /** GeomEval's static methods keyed by (name, arity); a key held by
+    * two overloads is left out, so a lookup never guesses. */
+  private lazy val kernels: Map[(String, Int), Method] =
+    Class.forName("graft.sql.GeomEval").getMethods.toSeq
+      .filter(m => Modifier.isStatic(m.getModifiers))
+      .groupBy(m => (m.getName, m.getParameterCount))
+      .collect { case (key, Seq(m)) => key -> m }
+
+  def kernel(fname: String, arity: Int): Method = kernels.getOrElse((fname, arity),
+    throw new IllegalStateException(s"GeomEval has no unique static $fname with $arity arguments"))
+
+  def invoke(kernel: Method, args: Any*): Any =
+    try kernel.invoke(null, args.asInstanceOf[Seq[AnyRef]]: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+
+  /** Interpreted eval of a kernel over every child; NULL in, NULL out. */
+  def evalAll(kernel: Method, children: Seq[Expression], input: InternalRow): Any = {
+    val vs = children.map(_.eval(input))
+    if (vs.contains(null)) null else invoke(kernel, vs: _*)
+  }
 }
 
-abstract class GeomUnaryExpr extends UnaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
+/** An expression that is exactly one call of the [[GeomEval]] kernel
+  * named `fname` — the only place the kernel is named. Primitive-typed
+  * kernels that can still yield SQL NULL pass `nullableResult = true`;
+  * object-typed results are always nullable (EMPTY geometry,
+  * non-convergence). */
+abstract class GeomUnaryExpr(val fname: String, override val dataType: DataType,
+    nullableResult: Boolean = false) extends UnaryExpression with Serializable {
   override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  /** Name of the static method on graft.sql.GeomEval. */
-  def fname: String
-  protected def evalFn(input: Any): Any
+    nullableResult || !GeomCodegen.isPrimitive(dataType) || super.nullable
+  @transient private lazy val kernel = GeomCodegen.kernel(fname, 1)
   override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any = evalFn(input)
+  override protected def nullSafeEval(input: Any): Any = GeomCodegen.invoke(kernel, input)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     if (GeomCodegen.isPrimitive(dataType))
       defineCodeGen(ctx, ev, c => s"graft.sql.GeomEval.$fname($c)")
@@ -46,15 +87,14 @@ abstract class GeomUnaryExpr extends UnaryExpression with Serializable {
   override def prettyName: String = fname
 }
 
-abstract class GeomBinaryExpr extends BinaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
+/** Two-argument form of [[GeomUnaryExpr]]. */
+abstract class GeomBinaryExpr(val fname: String, override val dataType: DataType,
+    nullableResult: Boolean = false) extends BinaryExpression with Serializable {
   override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  def fname: String
-  protected def evalFn(a: Any, b: Any): Any
+    nullableResult || !GeomCodegen.isPrimitive(dataType) || super.nullable
+  @transient private lazy val kernel = GeomCodegen.kernel(fname, 2)
   override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any = evalFn(a, b)
+  override protected def nullSafeEval(a: Any, b: Any): Any = GeomCodegen.invoke(kernel, a, b)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     if (GeomCodegen.isPrimitive(dataType))
       defineCodeGen(ctx, ev, (a, b) => s"graft.sql.GeomEval.$fname($a, $b)")
@@ -64,15 +104,15 @@ abstract class GeomBinaryExpr extends BinaryExpression with Serializable {
   override def prettyName: String = fname
 }
 
-abstract class GeomTernaryExpr extends TernaryExpression with Serializable {
-  /** Object-typed kernels may return null even for non-null inputs
-    * (EMPTY geometry, non-convergence) — declare it. */
+/** Three-argument form of [[GeomUnaryExpr]]. */
+abstract class GeomTernaryExpr(val fname: String, override val dataType: DataType,
+    nullableResult: Boolean = false) extends TernaryExpression with Serializable {
   override def nullable: Boolean =
-    !GeomCodegen.isPrimitive(dataType) || super.nullable
-  def fname: String
-  protected def evalFn(a: Any, b: Any, c: Any): Any
+    nullableResult || !GeomCodegen.isPrimitive(dataType) || super.nullable
+  @transient private lazy val kernel = GeomCodegen.kernel(fname, 3)
   override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any = evalFn(a, b, c)
+  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    GeomCodegen.invoke(kernel, a, b, c)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     if (GeomCodegen.isPrimitive(dataType))
       defineCodeGen(ctx, ev, (a, b, c) => s"graft.sql.GeomEval.$fname($a, $b, $c)")
@@ -84,61 +124,34 @@ abstract class GeomTernaryExpr extends TernaryExpression with Serializable {
 
 // --------------------------------------------------------------- codecs
 
-case class StGeomFromText(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromTextOrNull"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromTextOrNull(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StGeomFromText(child: Expression) extends GeomUnaryExpr("geomFromTextOrNull", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** Lossy 2-D parse: XYZ/XYM/XYZM WKT accepted, Z/M dropped. */
-case class StGeomFromTextForce2D(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromTextForce2D"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromTextForce2D(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StGeomFromTextForce2D(child: Expression)
+    extends GeomUnaryExpr("geomFromTextForce2D", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StAsText(child: Expression) extends GeomUnaryExpr {
-  def fname = "asText"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.asText(v.asInstanceOf[InternalRow])
+case class StAsText(child: Expression) extends GeomUnaryExpr("asText", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StAsGeoJson(child: Expression) extends GeomUnaryExpr {
-  def fname = "asGeoJson"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.asGeoJson(v.asInstanceOf[InternalRow])
+case class StAsGeoJson(child: Expression) extends GeomUnaryExpr("asGeoJson", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StGeomFromGeoJson(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromGeoJsonOrNull"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geomFromGeoJsonOrNull(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StGeomFromGeoJson(child: Expression)
+    extends GeomUnaryExpr("geomFromGeoJsonOrNull", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StCollectionFromText(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionFromText"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.collectionFromText(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StCollectionFromText(child: Expression)
+    extends GeomUnaryExpr("collectionFromText", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCollectionAsText(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionAsText"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) =
-    GeomEval.collectionAsText(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StCollectionAsText(child: Expression) extends GeomUnaryExpr("collectionAsText", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** Unary union over the array<geom> collection form: dissolve the
@@ -146,52 +159,30 @@ case class StCollectionAsText(child: Expression) extends GeomUnaryExpr {
   * noded + dissolved linework, residual points (kernels/UnaryUnion).
   * The geo crate's BooleanOps is binary-only; this is the JTS
   * `Geometry.union()` shape, gated by TestUnaryUnion(-Floating).xml. */
-case class StUnaryUnion(child: Expression) extends GeomUnaryExpr {
-  def fname = "unaryUnion"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.unaryUnion(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StUnaryUnion(child: Expression) extends GeomUnaryExpr("unaryUnion", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** OGC Mod-2 boundary: empty for 0-D, odd-occurrence endpoints for
   * 1-D, rings as linework for 2-D (kernels/Topo.boundary). */
-case class StBoundary(child: Expression) extends GeomUnaryExpr {
-  def fname = "boundary"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.boundary(v.asInstanceOf[InternalRow])
+case class StBoundary(child: Expression) extends GeomUnaryExpr("boundary", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** Polygonize linework into the maximal set of polygons (dangles
   * dropped, holes assigned) — kernels/Polygonize. */
-case class StPolygonize(child: Expression) extends GeomUnaryExpr {
-  def fname = "polygonize"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.polygonize(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StPolygonize(child: Expression) extends GeomUnaryExpr("polygonize", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** Minimum clearance: smallest positive vertex-vertex or
   * vertex-to-non-incident-segment distance (JTS MinimumClearance);
   * Double.MaxValue when undefined. */
-case class StMinClearance(child: Expression) extends GeomUnaryExpr {
-  def fname = "minClearance"
-  override def dataType: DataType = DoubleType
-  protected def evalFn(v: Any) = GeomEval.minClearance(v.asInstanceOf[InternalRow])
+case class StMinClearance(child: Expression) extends GeomUnaryExpr("minClearance", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StMinClearanceLine(child: Expression) extends GeomUnaryExpr {
-  def fname = "minClearanceLine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.minClearanceLine(v.asInstanceOf[InternalRow])
+case class StMinClearanceLine(child: Expression) extends GeomUnaryExpr("minClearanceLine", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** Number of parts of a (multi-)geometry (1 for simple kinds). */
-case class StNumParts(child: Expression) extends GeomUnaryExpr {
-  def fname = "numParts"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.numParts(v.asInstanceOf[InternalRow])
+case class StNumParts(child: Expression) extends GeomUnaryExpr("numParts", IntegerType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 case class StWinnowFingerprints(first: Expression, second: Expression, third: Expression)
@@ -207,10 +198,7 @@ case class StWinnowFingerprints(first: Expression, second: Expression, third: Ex
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StGeometryType(child: Expression) extends GeomUnaryExpr {
-  def fname = "geometryType"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.geometryType(v.asInstanceOf[InternalRow])
+case class StGeometryType(child: Expression) extends GeomUnaryExpr("geometryType", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
@@ -230,353 +218,206 @@ case class StRect(first: Expression, second: Expression, third: Expression, four
       c: Expression, d: Expression): Expression = copy(a, b, c, d)
 }
 
-case class StPoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "point"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.point(a.asInstanceOf[Double], b.asInstanceOf[Double])
+case class StPoint(left: Expression, right: Expression) extends GeomBinaryExpr("point", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 // ----------------------------------------------------- unary geom -> num
 
-abstract class GeomToDouble extends GeomUnaryExpr {
-  override def dataType: DataType = DoubleType
-}
-
-case class StArea(child: Expression) extends GeomToDouble {
-  def fname = "area"
-  protected def evalFn(v: Any) = GeomEval.area(v.asInstanceOf[InternalRow])
+case class StArea(child: Expression) extends GeomUnaryExpr("area", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StUnsignedArea(child: Expression) extends GeomToDouble {
-  def fname = "unsignedArea"
-  protected def evalFn(v: Any) = GeomEval.unsignedArea(v.asInstanceOf[InternalRow])
+case class StUnsignedArea(child: Expression) extends GeomUnaryExpr("unsignedArea", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StSphereArea(child: Expression) extends GeomToDouble {
-  def fname = "sphereArea"
-  protected def evalFn(v: Any) = GeomEval.sphereArea(v.asInstanceOf[InternalRow])
+case class StSphereArea(child: Expression) extends GeomUnaryExpr("sphereArea", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StGeodesicArea(child: Expression) extends GeomToDouble {
-  def fname = "geodesicArea"
-  protected def evalFn(v: Any) = GeomEval.geodesicArea(v.asInstanceOf[InternalRow])
+case class StGeodesicArea(child: Expression) extends GeomUnaryExpr("geodesicArea", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StGeodesicAreaUnsigned(child: Expression) extends GeomToDouble {
-  def fname = "geodesicAreaUnsigned"
-  protected def evalFn(v: Any) = GeomEval.geodesicAreaUnsigned(v.asInstanceOf[InternalRow])
+case class StGeodesicAreaUnsigned(child: Expression)
+    extends GeomUnaryExpr("geodesicAreaUnsigned", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StLength(child: Expression) extends GeomToDouble {
-  def fname = "length"
-  protected def evalFn(v: Any) = GeomEval.length(v.asInstanceOf[InternalRow])
+case class StLength(child: Expression) extends GeomUnaryExpr("length", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StLengthSphere(child: Expression) extends GeomToDouble {
-  def fname = "lengthSphere"
-  protected def evalFn(v: Any) = GeomEval.lengthSphere(v.asInstanceOf[InternalRow])
+case class StLengthSphere(child: Expression) extends GeomUnaryExpr("lengthSphere", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StLengthRhumb(child: Expression) extends GeomToDouble {
-  def fname = "lengthRhumb"
-  protected def evalFn(v: Any) = GeomEval.lengthRhumb(v.asInstanceOf[InternalRow])
+case class StLengthRhumb(child: Expression) extends GeomUnaryExpr("lengthRhumb", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StLengthGeodesic(child: Expression) extends GeomToDouble {
-  def fname = "lengthGeodesic"
-  protected def evalFn(v: Any) = GeomEval.lengthGeodesic(v.asInstanceOf[InternalRow])
+case class StLengthGeodesic(child: Expression) extends GeomUnaryExpr("lengthGeodesic", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StPerimeter(child: Expression) extends GeomToDouble {
-  def fname = "perimeter"
-  protected def evalFn(v: Any) = GeomEval.perimeter(v.asInstanceOf[InternalRow])
+case class StPerimeter(child: Expression) extends GeomUnaryExpr("perimeter", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StXMin(child: Expression) extends GeomToDouble {
-  def fname = "xMin"
-  protected def evalFn(v: Any) = GeomEval.xMin(v.asInstanceOf[InternalRow])
+case class StXMin(child: Expression) extends GeomUnaryExpr("xMin", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StYMin(child: Expression) extends GeomToDouble {
-  def fname = "yMin"
-  protected def evalFn(v: Any) = GeomEval.yMin(v.asInstanceOf[InternalRow])
+case class StYMin(child: Expression) extends GeomUnaryExpr("yMin", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StXMax(child: Expression) extends GeomToDouble {
-  def fname = "xMax"
-  protected def evalFn(v: Any) = GeomEval.xMax(v.asInstanceOf[InternalRow])
+case class StXMax(child: Expression) extends GeomUnaryExpr("xMax", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StYMax(child: Expression) extends GeomToDouble {
-  def fname = "yMax"
-  protected def evalFn(v: Any) = GeomEval.yMax(v.asInstanceOf[InternalRow])
+case class StYMax(child: Expression) extends GeomUnaryExpr("yMax", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StX(child: Expression) extends GeomToDouble {
-  def fname = "pointX"
-  protected def evalFn(v: Any) = GeomEval.pointX(v.asInstanceOf[InternalRow])
+case class StX(child: Expression) extends GeomUnaryExpr("pointX", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StY(child: Expression) extends GeomToDouble {
-  def fname = "pointY"
-  protected def evalFn(v: Any) = GeomEval.pointY(v.asInstanceOf[InternalRow])
+case class StY(child: Expression) extends GeomUnaryExpr("pointY", DoubleType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StNumPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "numPoints"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.numPoints(v.asInstanceOf[InternalRow])
+case class StNumPoints(child: Expression) extends GeomUnaryExpr("numPoints", IntegerType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsEmpty(child: Expression) extends GeomUnaryExpr {
-  def fname = "isEmpty"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isEmpty(v.asInstanceOf[InternalRow])
+case class StIsEmpty(child: Expression) extends GeomUnaryExpr("isEmpty", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsCcw(child: Expression) extends GeomUnaryExpr {
-  def fname = "isCcw"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isCcw(v.asInstanceOf[InternalRow])
+case class StIsCcw(child: Expression) extends GeomUnaryExpr("isCcw", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsConvex(child: Expression) extends GeomUnaryExpr {
-  def fname = "isConvex"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isConvex(v.asInstanceOf[InternalRow])
+case class StIsConvex(child: Expression) extends GeomUnaryExpr("isConvex", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StWindingOrder(child: Expression) extends GeomUnaryExpr {
-  def fname = "windingOrder"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.windingOrder(v.asInstanceOf[InternalRow])
+case class StWindingOrder(child: Expression) extends GeomUnaryExpr("windingOrder", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 // ---------------------------------------------------- unary geom -> geom
 
-abstract class GeomToGeom extends GeomUnaryExpr {
-  override def dataType: DataType = GeomExprs.geomType
-}
-
-case class StCentroid(child: Expression) extends GeomToGeom {
-  def fname = "centroid"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.centroid(v.asInstanceOf[InternalRow])
+case class StCentroid(child: Expression) extends GeomUnaryExpr("centroid", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StEnvelope(child: Expression) extends GeomToGeom {
-  def fname = "envelope"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.envelope(v.asInstanceOf[InternalRow])
+case class StEnvelope(child: Expression) extends GeomUnaryExpr("envelope", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StInteriorPoint(child: Expression) extends GeomToGeom {
-  def fname = "interiorPoint"
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.interiorPoint(v.asInstanceOf[InternalRow])
+case class StInteriorPoint(child: Expression) extends GeomUnaryExpr("interiorPoint", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StConvexHull(child: Expression) extends GeomToGeom {
-  def fname = "convexHull"
-  protected def evalFn(v: Any) = GeomEval.convexHull(v.asInstanceOf[InternalRow])
+case class StConvexHull(child: Expression) extends GeomUnaryExpr("convexHull", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StRemoveRepeated(child: Expression) extends GeomToGeom {
-  def fname = "removeRepeated"
-  protected def evalFn(v: Any) = GeomEval.removeRepeated(v.asInstanceOf[InternalRow])
+case class StRemoveRepeated(child: Expression) extends GeomUnaryExpr("removeRepeated", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StToRadians(child: Expression) extends GeomToGeom {
-  def fname = "toRadians"
-  protected def evalFn(v: Any) = GeomEval.toRadians(v.asInstanceOf[InternalRow])
+case class StToRadians(child: Expression) extends GeomUnaryExpr("toRadians", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StToDegrees(child: Expression) extends GeomToGeom {
-  def fname = "toDegrees"
-  protected def evalFn(v: Any) = GeomEval.toDegrees(v.asInstanceOf[InternalRow])
+case class StToDegrees(child: Expression) extends GeomUnaryExpr("toDegrees", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StForceCw(child: Expression) extends GeomToGeom {
-  def fname = "forceCw"
-  protected def evalFn(v: Any) = GeomEval.forceCw(v.asInstanceOf[InternalRow])
+case class StForceCw(child: Expression) extends GeomUnaryExpr("forceCw", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StForceCcw(child: Expression) extends GeomToGeom {
-  def fname = "forceCcw"
-  protected def evalFn(v: Any) = GeomEval.forceCcw(v.asInstanceOf[InternalRow])
+case class StForceCcw(child: Expression) extends GeomUnaryExpr("forceCcw", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-case class StDumpPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpPoints"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpPoints(v.asInstanceOf[InternalRow])
+case class StDumpPoints(child: Expression) extends GeomUnaryExpr("dumpPoints", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StDumpSegments(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpSegments"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpSegments(v.asInstanceOf[InternalRow])
+case class StDumpSegments(child: Expression) extends GeomUnaryExpr("dumpSegments", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StExtremes(child: Expression) extends GeomUnaryExpr {
-  def fname = "extremes"
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("xmin_idx", IntegerType), StructField("xmin", DoubleType),
-    StructField("ymin_idx", IntegerType), StructField("ymin", DoubleType),
-    StructField("xmax_idx", IntegerType), StructField("xmax", DoubleType),
-    StructField("ymax_idx", IntegerType), StructField("ymax", DoubleType)))
-  protected def evalFn(v: Any) = GeomEval.extremes(v.asInstanceOf[InternalRow])
+case class StExtremes(child: Expression)
+    extends GeomUnaryExpr("extremes", StructType(Seq(
+      StructField("xmin_idx", IntegerType), StructField("xmin", DoubleType),
+      StructField("ymin_idx", IntegerType), StructField("ymin", DoubleType),
+      StructField("xmax_idx", IntegerType), StructField("xmax", DoubleType),
+      StructField("ymax_idx", IntegerType), StructField("ymax", DoubleType)))) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 // --------------------------------------------------------- binary preds
 
-abstract class GeomPairToBool extends GeomBinaryExpr {
-  override def dataType: DataType = BooleanType
-}
-
-case class StContains(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "contains"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.contains(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StContains(left: Expression, right: Expression)
+    extends GeomBinaryExpr("contains", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StWithin(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "within"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.within(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StWithin(left: Expression, right: Expression) extends GeomBinaryExpr("within", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StIntersects(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "intersects"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.intersects(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StIntersects(left: Expression, right: Expression)
+    extends GeomBinaryExpr("intersects", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDisjoint(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "disjoint"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.disjoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDisjoint(left: Expression, right: Expression)
+    extends GeomBinaryExpr("disjoint", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 /** Hot-path PIP with raw coordinates (join refine stage). */
 case class StContainsXY(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "containsXY"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.containsXY(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("containsXY", BooleanType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StIntersectsXY(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "intersectsXY"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.intersectsXY(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("intersectsXY", BooleanType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 
 // ------------------------------------------------------ binary measures
 
-abstract class GeomPairToDouble extends GeomBinaryExpr {
-  override def dataType: DataType = DoubleType
-}
-
-case class StDistance(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distance"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distance(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDistance(left: Expression, right: Expression)
+    extends GeomBinaryExpr("distance", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDistanceSphere(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceSphere"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDistanceSphere(left: Expression, right: Expression)
+    extends GeomBinaryExpr("distanceSphere", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDistanceRhumb(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceRhumb"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDistanceRhumb(left: Expression, right: Expression)
+    extends GeomBinaryExpr("distanceRhumb", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDistanceGeodesic(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "distanceGeodesic"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDistanceGeodesic(left: Expression, right: Expression)
+    extends GeomBinaryExpr("distanceGeodesic", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StBearing(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearing"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearing(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StBearing(left: Expression, right: Expression) extends GeomBinaryExpr("bearing", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StBearingRhumb(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearingRhumb"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearingRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StBearingRhumb(left: Expression, right: Expression)
+    extends GeomBinaryExpr("bearingRhumb", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StBearingGeodesic(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "bearingGeodesic"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.bearingGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StBearingGeodesic(left: Expression, right: Expression)
+    extends GeomBinaryExpr("bearingGeodesic", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StHausdorff(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "hausdorff"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.hausdorff(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StHausdorff(left: Expression, right: Expression)
+    extends GeomBinaryExpr("hausdorff", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StFrechet(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "frechet"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.frechet(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StFrechet(left: Expression, right: Expression) extends GeomBinaryExpr("frechet", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLineLocatePoint(left: Expression, right: Expression) extends GeomPairToDouble {
-  def fname = "lineLocatePoint"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineLocatePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StLineLocatePoint(left: Expression, right: Expression)
+    extends GeomBinaryExpr("lineLocatePoint", DoubleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
-case class StClosestPoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "closestPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.closestPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StClosestPoint(left: Expression, right: Expression)
+    extends GeomBinaryExpr("closestPoint", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLineIntersection(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineIntersection"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineIntersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StLineIntersection(left: Expression, right: Expression)
+    extends GeomBinaryExpr("lineIntersection", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 // ----------------------------------------------- geom + scalar -> geom
 
-case class StVoronoi(child: Expression) extends GeomUnaryExpr {
-  def fname = "voronoi"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.voronoi(v.asInstanceOf[InternalRow])
+case class StVoronoi(child: Expression) extends GeomUnaryExpr("voronoi", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** st_voronoi(geom, minx, miny, maxx, maxy) — explicit clip window. */
@@ -585,115 +426,67 @@ case class StVoronoiClip(children: Seq[Expression]) extends Expression
   require(children.length == 5, "st_voronoi takes (geom[, minx, miny, maxx, maxy])")
   override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
   override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.voronoiClip(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-      vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Double])
-  }
+  @transient private lazy val kernel = GeomCodegen.kernel("voronoiClip", 5)
+  override def eval(input: InternalRow): Any = GeomCodegen.evalAll(kernel, children, input)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
 }
-case class StShortestLine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "shortestLine"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.shortestLine(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StShortestLine(left: Expression, right: Expression)
+    extends GeomBinaryExpr("shortestLine", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 case class StSnap(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "snapTo"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.snapTo(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[Double])
+    extends GeomTernaryExpr("snapTo", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StLineSubstring(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineSubstring"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // non-line / out-of-range fractions
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineSubstring(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("lineSubstring", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StReverse(child: Expression) extends GeomUnaryExpr {
-  def fname = "reverseGeom"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.reverseGeom(v.asInstanceOf[InternalRow])
+case class StReverse(child: Expression) extends GeomUnaryExpr("reverseGeom", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StExteriorRing(child: Expression) extends GeomUnaryExpr {
-  def fname = "exteriorRing"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.exteriorRing(v.asInstanceOf[InternalRow])
+case class StExteriorRing(child: Expression) extends GeomUnaryExpr("exteriorRing", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StNumInteriorRings(child: Expression) extends GeomUnaryExpr {
-  def fname = "numInteriorRings"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.numInteriorRings(v.asInstanceOf[InternalRow])
+case class StNumInteriorRings(child: Expression)
+    extends GeomUnaryExpr("numInteriorRings", IntegerType, nullableResult = true) {
+  // the kernel returns a boxed Integer, null for non-polygons
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val raw = ctx.freshName("rings")
+      s"""
+         |Object $raw = graft.sql.GeomEval.numInteriorRings($c);
+         |${ev.isNull} = $raw == null;
+         |if (!${ev.isNull}) ${ev.value} = (Integer) $raw;
+       """.stripMargin
+    })
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StInteriorRingN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "interiorRingN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.interiorRingN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StInteriorRingN(left: Expression, right: Expression)
+    extends GeomBinaryExpr("interiorRingN", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StPointN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "pointN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.pointN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StPointN(left: Expression, right: Expression) extends GeomBinaryExpr("pointN", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StStartPoint(child: Expression) extends GeomUnaryExpr {
-  def fname = "startPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.startPoint(v.asInstanceOf[InternalRow])
+case class StStartPoint(child: Expression) extends GeomUnaryExpr("startPoint", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StEndPoint(child: Expression) extends GeomUnaryExpr {
-  def fname = "endPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.endPoint(v.asInstanceOf[InternalRow])
+case class StEndPoint(child: Expression) extends GeomUnaryExpr("endPoint", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StGeometryN(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "geometryN"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.geometryN(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StGeometryN(left: Expression, right: Expression)
+    extends GeomBinaryExpr("geometryN", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDumpRings(child: Expression) extends GeomUnaryExpr {
-  def fname = "dumpRings"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.dumpRings(v.asInstanceOf[InternalRow])
+case class StDumpRings(child: Expression) extends GeomUnaryExpr("dumpRings", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StMaxDistance(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "maxDistance"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.maxDistance(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StMaxDistance(left: Expression, right: Expression)
+    extends GeomBinaryExpr("maxDistance", DoubleType, nullableResult = true) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
@@ -702,67 +495,35 @@ case class StMaxDistance(left: Expression, right: Expression) extends GeomBinary
        """.stripMargin)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLongestLine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "longestLine"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.longestLine(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StLongestLine(left: Expression, right: Expression)
+    extends GeomBinaryExpr("longestLine", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 case class StAddPoint(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "addPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.addPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[Int])
+    extends GeomTernaryExpr("addPoint", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 case class StSetPoint(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "setPoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.setPoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Int],
-      c.asInstanceOf[InternalRow])
+    extends GeomTernaryExpr("setPoint", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
-case class StRemovePoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "removePoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.removePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StRemovePoint(left: Expression, right: Expression)
+    extends GeomBinaryExpr("removePoint", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StFlipCoordinates(child: Expression) extends GeomUnaryExpr {
-  def fname = "flipCoordinates"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.flipCoordinates(v.asInstanceOf[InternalRow])
+case class StFlipCoordinates(child: Expression) extends GeomUnaryExpr("flipCoordinates", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsClosed(child: Expression) extends GeomUnaryExpr {
-  def fname = "isClosed"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isClosed(v.asInstanceOf[InternalRow])
+case class StIsClosed(child: Expression) extends GeomUnaryExpr("isClosed", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsSimple(child: Expression) extends GeomUnaryExpr {
-  def fname = "isSimple"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isSimple(v.asInstanceOf[InternalRow])
+case class StIsSimple(child: Expression) extends GeomUnaryExpr("isSimple", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsRing(child: Expression) extends GeomUnaryExpr {
-  def fname = "isRing"
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.isRing(v.asInstanceOf[InternalRow])
+case class StIsRing(child: Expression)
+    extends GeomUnaryExpr("isRing", BooleanType, nullableResult = true) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val raw = ctx.freshName("isRingRaw")
@@ -774,100 +535,54 @@ case class StIsRing(child: Expression) extends GeomUnaryExpr {
     })
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StMulti(child: Expression) extends GeomUnaryExpr {
-  def fname = "toMulti"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.toMulti(v.asInstanceOf[InternalRow])
+case class StMulti(child: Expression) extends GeomUnaryExpr("toMulti", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "pointsOf"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.pointsOf(v.asInstanceOf[InternalRow])
+case class StPoints(child: Expression) extends GeomUnaryExpr("pointsOf", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StBoundingDiagonal(child: Expression) extends GeomUnaryExpr {
-  def fname = "boundingDiagonal"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.boundingDiagonal(v.asInstanceOf[InternalRow])
+case class StBoundingDiagonal(child: Expression) extends GeomUnaryExpr("boundingDiagonal", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StScroll(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "scroll"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.scroll(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StScroll(left: Expression, right: Expression) extends GeomBinaryExpr("scroll", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StShiftLongitude(child: Expression) extends GeomUnaryExpr {
-  def fname = "shiftLongitude"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.shiftLongitude(v.asInstanceOf[InternalRow])
+case class StShiftLongitude(child: Expression) extends GeomUnaryExpr("shiftLongitude", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 case class StMinimumBoundingCircle(left: Expression, right: Expression)
-    extends GeomBinaryExpr {
-  def fname = "minimumBoundingCircle"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.minimumBoundingCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+    extends GeomBinaryExpr("minimumBoundingCircle", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StMinimumBoundingRadius(child: Expression) extends GeomUnaryExpr {
-  def fname = "minimumBoundingRadius"
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", GeomExprs.geomType, nullable = false),
-    StructField("radius", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.minimumBoundingRadius(v.asInstanceOf[InternalRow])
+case class StMinimumBoundingRadius(child: Expression)
+    extends GeomUnaryExpr("minimumBoundingRadius", StructType(Seq(
+      StructField("center", geomType, nullable = false),
+      StructField("radius", DoubleType, nullable = false)))) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 case class StHexBin(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexBin"
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", LongType, nullable = false),
-    StructField("r", LongType, nullable = false)))
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexBin(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("hexBin", StructType(Seq(
+      StructField("q", LongType, nullable = false),
+      StructField("r", LongType, nullable = false)))) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 case class StHexBinCenter(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexBinCenter"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexBinCenter(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("hexBinCenter", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 case class StHexagon(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "hexagonCell"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexagonCell(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("hexagonCell", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
-case class StSharedPaths(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "sharedPaths"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.sharedPaths(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StSharedPaths(left: Expression, right: Expression)
+    extends GeomBinaryExpr("sharedPaths", geomArrayType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLineCrossingDirection(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineCrossingDirection"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineCrossingDirection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StLineCrossingDirection(left: Expression, right: Expression)
+    extends GeomBinaryExpr("lineCrossingDirection", IntegerType, nullableResult = true) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val raw = ctx.freshName("lcdRaw")
@@ -880,21 +595,11 @@ case class StLineCrossingDirection(left: Expression, right: Expression) extends 
     })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StMakeLine(child: Expression) extends GeomUnaryExpr {
-  def fname = "makeLine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.makeLine(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StMakeLine(child: Expression) extends GeomUnaryExpr("makeLine", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 case class StAngle(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "angle3"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.angle3(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[InternalRow])
+    extends GeomTernaryExpr("angle3", DoubleType, nullableResult = true) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b, c) =>
       s"""
@@ -904,276 +609,146 @@ case class StAngle(first: Expression, second: Expression, third: Expression)
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
-case class StExpand(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "expandEnvelope"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.expandEnvelope(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StExpand(left: Expression, right: Expression)
+    extends GeomBinaryExpr("expandEnvelope", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StNormalize(child: Expression) extends GeomUnaryExpr {
-  def fname = "normalizeGeom"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.normalizeGeom(v.asInstanceOf[InternalRow])
+case class StNormalize(child: Expression) extends GeomUnaryExpr("normalizeGeom", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StSplit(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "splitBy"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.splitBy(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StSplit(left: Expression, right: Expression)
+    extends GeomBinaryExpr("splitBy", geomArrayType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StMakeValid(child: Expression) extends GeomUnaryExpr {
-  def fname = "makeValid"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.makeValid(v.asInstanceOf[InternalRow])
+case class StMakeValid(child: Expression) extends GeomUnaryExpr("makeValid", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StOffsetCurve(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "offsetCurve"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.offsetCurve(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StOffsetCurve(left: Expression, right: Expression)
+    extends GeomBinaryExpr("offsetCurve", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLineMerge(child: Expression) extends GeomUnaryExpr {
-  def fname = "lineMerge"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.lineMerge(v.asInstanceOf[InternalRow])
+case class StLineMerge(child: Expression) extends GeomUnaryExpr("lineMerge", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StNode(child: Expression) extends GeomUnaryExpr {
-  def fname = "nodeLines"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.nodeLines(v.asInstanceOf[InternalRow])
+case class StNode(child: Expression) extends GeomUnaryExpr("nodeLines", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-abstract class GeomCircleExpr extends GeomBinaryExpr {
-  override def nullable: Boolean = true // non-areal / degenerate input
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", GeomExprs.geomType),
-    StructField("nearest", GeomExprs.geomType),
-    StructField("radius", DoubleType)))
-}
-case class StMaximumInscribedCircle(left: Expression, right: Expression) extends GeomCircleExpr {
-  def fname = "maximumInscribedCircle"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.maximumInscribedCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StMaximumInscribedCircle(left: Expression, right: Expression)
+    extends GeomBinaryExpr("maximumInscribedCircle", GeomExprs.circleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLargestEmptyCircle(left: Expression, right: Expression) extends GeomCircleExpr {
-  def fname = "largestEmptyCircle"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.largestEmptyCircle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StLargestEmptyCircle(left: Expression, right: Expression)
+    extends GeomBinaryExpr("largestEmptyCircle", GeomExprs.circleType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSubdivide(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "subdivide"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.subdivide(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StSubdivide(left: Expression, right: Expression)
+    extends GeomBinaryExpr("subdivide", geomArrayType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StBuffer(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "buffer"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // NaN/Infinity distance -> null
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.buffer(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StBuffer(left: Expression, right: Expression) extends GeomBinaryExpr("buffer", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 /** st_buffer(geom, dist, 'quad_segs=8 endcap=flat join=mitre
   * mitre_limit=5') — the PostGIS buffer-style parameter string. */
 case class StBufferStyle(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "bufferStyle"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true // malformed style string -> null
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.bufferStyle(a.asInstanceOf[InternalRow], b.asInstanceOf[Double],
-      c.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    extends GeomTernaryExpr("bufferStyle", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StSimplify(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplify"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplify(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSimplify(left: Expression, right: Expression) extends GeomBinaryExpr("simplify", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSimplifyVw(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVw"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVw(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSimplifyVw(left: Expression, right: Expression)
+    extends GeomBinaryExpr("simplifyVw", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSimplifyIdx(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyIdx"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true // LineString-only contract
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyIdx(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSimplifyIdx(left: Expression, right: Expression)
+    extends GeomBinaryExpr("simplifyIdx", ArrayType(IntegerType, containsNull = false)) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSimplifyVwIdx(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVwIdx"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true // LineString-only contract
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVwIdx(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSimplifyVwIdx(left: Expression, right: Expression)
+    extends GeomBinaryExpr("simplifyVwIdx", ArrayType(IntegerType, containsNull = false)) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDensify(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densify"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densify(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StDensify(left: Expression, right: Expression) extends GeomBinaryExpr("densify", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDensifyHaversine(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyHaversine"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyHaversine(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StDensifyHaversine(left: Expression, right: Expression)
+    extends GeomBinaryExpr("densifyHaversine", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDensifyRhumb(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StDensifyRhumb(left: Expression, right: Expression)
+    extends GeomBinaryExpr("densifyRhumb", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDensifyGeodesic(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "densifyGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.densifyGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StDensifyGeodesic(left: Expression, right: Expression)
+    extends GeomBinaryExpr("densifyGeodesic", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StChaikin(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "chaikin"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.chaikin(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StChaikin(left: Expression, right: Expression) extends GeomBinaryExpr("chaikin", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StRotate(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "rotate"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.rotate(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StRotate(left: Expression, right: Expression) extends GeomBinaryExpr("rotate", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StGrahamHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "grahamHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.grahamHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Boolean])
+case class StGrahamHull(left: Expression, right: Expression)
+    extends GeomBinaryExpr("grahamHull", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StLineInterpolatePoint(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "lineInterpolatePoint"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineInterpolatePoint(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StLineInterpolatePoint(left: Expression, right: Expression)
+    extends GeomBinaryExpr("lineInterpolatePoint", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 // ------------------------------------------------------------- ternary
 
 case class StProject(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "project"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.project(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("project", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StProjectRhumb(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "projectRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.projectRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("projectRhumb", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StProjectGeodesic(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "projectGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.projectGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("projectGeodesic", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StTranslate(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "translate"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.translate(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("translate", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StScale(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "scale"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.scale(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("scale", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StSkew(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "skew"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.skew(a.asInstanceOf[InternalRow], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("skew", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StCrossTrack(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "crossTrack"
-  override def dataType: DataType = DoubleType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.crossTrack(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[InternalRow])
+    extends GeomTernaryExpr("crossTrack", DoubleType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StLineInterpolateSphere(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("lineInterpolateSphere", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StLineInterpolateRhumb(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateRhumb"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateRhumb(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("lineInterpolateRhumb", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
 case class StLineInterpolateGeodesic(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "lineInterpolateGeodesic"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.lineInterpolateGeodesic(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("lineInterpolateGeodesic", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
@@ -1185,88 +760,51 @@ case class StAffine(children: Seq[Expression]) extends Expression
   require(children.length == 7, "st_affine takes (geom, a, b, xoff, d, e, yoff)")
   override def dataType: DataType = GeomExprs.geomType
   override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.affine(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Double], vs(5).asInstanceOf[Double], vs(6).asInstanceOf[Double])
-  }
+  @transient private lazy val kernel = GeomCodegen.kernel("affine", 7)
+  override def eval(input: InternalRow): Any = GeomCodegen.evalAll(kernel, children, input)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(newChildren)
 }
 
 // ------------------------------------------------ wkb / validation
 
-case class StGeomFromWkb(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromWkb"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.geomFromWkb(v.asInstanceOf[Array[Byte]])
+case class StGeomFromWkb(child: Expression) extends GeomUnaryExpr("geomFromWkb", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** Lossy 2-D parse: EWKB flags / ISO Z/M type codes accepted, extra
   * ordinates dropped. */
-case class StGeomFromWkbForce2D(child: Expression) extends GeomUnaryExpr {
-  def fname = "geomFromWkbForce2D"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.geomFromWkbForce2D(v.asInstanceOf[Array[Byte]])
+case class StGeomFromWkbForce2D(child: Expression)
+    extends GeomUnaryExpr("geomFromWkbForce2D", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StAsWkb(child: Expression) extends GeomUnaryExpr {
-  def fname = "asWkb"
-  override def dataType: DataType = BinaryType
-  protected def evalFn(v: Any) = GeomEval.asWkb(v.asInstanceOf[InternalRow])
+case class StAsWkb(child: Expression) extends GeomUnaryExpr("asWkb", BinaryType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 /** PostGIS extended WKB with an SRID tag (geo-postgis wire format,
   * to_postgis.rs:12). */
-case class StAsEwkb(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "asEwkb"
-  override def dataType: DataType = BinaryType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.asEwkb(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StAsEwkb(left: Expression, right: Expression) extends GeomBinaryExpr("asEwkb", BinaryType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 /** SRID of an (E)WKB payload; 0 for plain WKB. */
-case class StSrid(child: Expression) extends GeomUnaryExpr {
-  def fname = "sridOf"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.sridOf(v.asInstanceOf[Array[Byte]])
+case class StSrid(child: Expression) extends GeomUnaryExpr("sridOf", IntegerType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsValid(child: Expression) extends GeomUnaryExpr {
-  def fname = "isValid"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(v: Any) = GeomEval.isValid(v.asInstanceOf[InternalRow])
+case class StIsValid(child: Expression) extends GeomUnaryExpr("isValid", BooleanType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StIsValidReason(child: Expression) extends GeomUnaryExpr {
-  def fname = "isValidReason"
-  override def dataType: DataType = StringType
-  protected def evalFn(v: Any) = GeomEval.isValidReason(v.asInstanceOf[InternalRow])
+case class StIsValidReason(child: Expression) extends GeomUnaryExpr("isValidReason", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StSimplifyVwPreserve(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "simplifyVwPreserve"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.simplifyVwPreserve(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSimplifyVwPreserve(left: Expression, right: Expression)
+    extends GeomBinaryExpr("simplifyVwPreserve", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 // ------------------------------------------------------------- overlay
 
-abstract class GeomPairToGeom extends GeomBinaryExpr {
-  override def dataType: DataType = GeomExprs.geomType
-}
-
-case class StIntersection(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "intersection"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.intersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StIntersection(left: Expression, right: Expression)
+    extends GeomBinaryExpr("intersection", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 /** Heterogeneous boolean op over ANY dimension mix — points, lines,
@@ -1276,60 +814,28 @@ case class StIntersection(left: Expression, right: Expression) extends GeomPairT
   * with empty components omitted (JTS OverlayNG mixed-input
   * semantics). */
 case class StOverlayHetero(left: Expression, right: Expression, op: Int)
-    extends GeomBinaryExpr {
-  def fname = op match {
-    case graft.kernels.Overlay.OpIntersection => "heteroIntersection"
-    case graft.kernels.Overlay.OpUnion => "heteroUnion"
-    case graft.kernels.Overlay.OpDifference => "heteroDifference"
-    case _ => "heteroSymDifference"
-  }
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) = op match {
-    case graft.kernels.Overlay.OpIntersection =>
-      GeomEval.heteroIntersection(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case graft.kernels.Overlay.OpUnion =>
-      GeomEval.heteroUnion(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case graft.kernels.Overlay.OpDifference =>
-      GeomEval.heteroDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-    case _ =>
-      GeomEval.heteroSymDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
-  }
+    extends GeomBinaryExpr(GeomExprs.heteroKernel(op), geomArrayType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
 }
-case class StUnion(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "union"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.union(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StUnion(left: Expression, right: Expression) extends GeomBinaryExpr("union", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDifference(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "difference"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.difference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDifference(left: Expression, right: Expression)
+    extends GeomBinaryExpr("difference", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSymDifference(left: Expression, right: Expression) extends GeomPairToGeom {
-  def fname = "symDifference"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.symDifference(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StSymDifference(left: Expression, right: Expression)
+    extends GeomBinaryExpr("symDifference", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 case class StClip(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "clip"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.clip(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow], c.asInstanceOf[Boolean])
+    extends GeomTernaryExpr("clip", geomType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StSnapToGrid(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "snapToGrid"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.snapToGrid(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSnapToGrid(left: Expression, right: Expression)
+    extends GeomBinaryExpr("snapToGrid", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -1372,161 +878,94 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
     copy(first = a, second = b, third = c)
 }
 
-case class StUnionAll(child: Expression) extends GeomUnaryExpr {
-  def fname = "unionAll"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.unionAll(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StUnionAll(child: Expression) extends GeomUnaryExpr("unionAll", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** Dimension-weighted centroid of an array<geom> collection (the JTS
   * Centroid rule over a GeometryCollection — highest dimension wins). */
-case class StCollectionCentroid(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectionCentroid"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.collectionCentroid(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StCollectionCentroid(child: Expression)
+    extends GeomUnaryExpr("collectionCentroid", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 // -------------------------------------------------------------- relate
 
-case class StRelate(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "relate"
-  override def dataType: DataType = StringType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.relate(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StRelate(left: Expression, right: Expression) extends GeomBinaryExpr("relate", StringType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 case class StRelateMatch(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "relateMatch"
-  override def dataType: DataType = BooleanType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.relateMatch(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow],
-      c.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    extends GeomTernaryExpr("relateMatch", BooleanType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StTouches(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "touches"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.touches(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StTouches(left: Expression, right: Expression)
+    extends GeomBinaryExpr("touches", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCrosses(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "crosses"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.crosses(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StCrosses(left: Expression, right: Expression)
+    extends GeomBinaryExpr("crosses", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StOverlaps(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "overlaps"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.overlaps(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StOverlaps(left: Expression, right: Expression)
+    extends GeomBinaryExpr("overlaps", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCovers(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "covers"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.covers(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StCovers(left: Expression, right: Expression) extends GeomBinaryExpr("covers", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCoveredBy(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "coveredBy"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.coveredBy(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StCoveredBy(left: Expression, right: Expression)
+    extends GeomBinaryExpr("coveredBy", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StEqualsTopo(left: Expression, right: Expression) extends GeomPairToBool {
-  def fname = "equalsTopo"
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.equalsTopo(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StEqualsTopo(left: Expression, right: Expression)
+    extends GeomBinaryExpr("equalsTopo", BooleanType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 // ------------------------------------------------------- shapes (v1.1)
 
-case class StConcaveHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "concaveHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.concaveHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StConcaveHull(left: Expression, right: Expression)
+    extends GeomBinaryExpr("concaveHull", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StKnnConcaveHull(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "knnConcaveHull"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.knnConcaveHull(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StKnnConcaveHull(left: Expression, right: Expression)
+    extends GeomBinaryExpr("knnConcaveHull", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StMinRotatedRect(child: Expression) extends GeomToGeom {
-  def fname = "minRotatedRect"
-  protected def evalFn(v: Any) = GeomEval.minRotatedRect(v.asInstanceOf[InternalRow])
+case class StMinRotatedRect(child: Expression) extends GeomUnaryExpr("minRotatedRect", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StTriangulate(child: Expression) extends GeomUnaryExpr {
-  def fname = "triangulate"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.triangulate(v.asInstanceOf[InternalRow])
+case class StTriangulate(child: Expression) extends GeomUnaryExpr("triangulate", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StDelaunay(child: Expression) extends GeomUnaryExpr {
-  def fname = "delaunay"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.delaunay(v.asInstanceOf[InternalRow])
+case class StDelaunay(child: Expression) extends GeomUnaryExpr("delaunay", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StDelaunayUnconstrained(child: Expression) extends GeomUnaryExpr {
-  def fname = "delaunayUnconstrained"
-  override def dataType: DataType = ArrayType(GeomExprs.geomType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.delaunayUnconstrained(v.asInstanceOf[InternalRow])
+case class StDelaunayUnconstrained(child: Expression)
+    extends GeomUnaryExpr("delaunayUnconstrained", geomArrayType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StStitch(child: Expression) extends GeomUnaryExpr {
-  def fname = "stitch"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.stitch(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StStitch(child: Expression) extends GeomUnaryExpr("stitch", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StSegmentize(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "segmentize"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.segmentize(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StSegmentize(left: Expression, right: Expression)
+    extends GeomBinaryExpr("segmentize", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StSegmentizeSphere(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "segmentizeSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.segmentizeSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[Int])
+case class StSegmentizeSphere(left: Expression, right: Expression)
+    extends GeomBinaryExpr("segmentizeSphere", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDimension(child: Expression) extends GeomUnaryExpr {
-  def fname = "dimension"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.dimension(v.asInstanceOf[InternalRow])
+case class StDimension(child: Expression) extends GeomUnaryExpr("dimension", IntegerType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StClosestPointSphere(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "closestPointSphere"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.closestPointSphere(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StClosestPointSphere(left: Expression, right: Expression)
+    extends GeomBinaryExpr("closestPointSphere", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDistanceVincenty(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "distanceVincenty"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.distanceVincenty(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StDistanceVincenty(left: Expression, right: Expression)
+    extends GeomBinaryExpr("distanceVincenty", DoubleType, nullableResult = true) {
   // stay inside whole-stage codegen: call the primitive-returning
   // kernel and surface Vincenty non-convergence (NaN) as SQL NULL
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -1541,12 +980,8 @@ case class StDistanceVincenty(left: Expression, right: Expression) extends GeomB
 /** PostGIS ST_Azimuth: planar angle in radians clockwise from north
   * of the segment a→b, in [0, 2π); NULL for non-point, empty or
   * coincident inputs. */
-case class StAzimuth(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "azimuth"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.azimuth(a.asInstanceOf[InternalRow], b.asInstanceOf[InternalRow])
+case class StAzimuth(left: Expression, right: Expression)
+    extends GeomBinaryExpr("azimuth", DoubleType, nullableResult = true) {
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
@@ -1560,101 +995,57 @@ case class StAzimuth(left: Expression, right: Expression) extends GeomBinaryExpr
   * MultiPoint of all their coordinates — the bridge that turns the
   * built-in collect aggregates into geometric aggregations
   * (hull_agg = st_convexhull ∘ st_collect ∘ collect_list). */
-case class StCollectPoints(child: Expression) extends GeomUnaryExpr {
-  def fname = "collectPoints"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.collectPoints(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StCollectPoints(child: Expression) extends GeomUnaryExpr("collectPoints", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 // --------------------------------------------------------------- cells
 
 case class StCellId(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "cellId"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.cellId(a.asInstanceOf[Int], b.asInstanceOf[Double], c.asInstanceOf[Double])
+    extends GeomTernaryExpr("cellId", LongType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StCellOfGeom(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellOfGeomCentroid"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellOfGeomCentroid(a.asInstanceOf[Int], b.asInstanceOf[InternalRow])
+case class StCellOfGeom(left: Expression, right: Expression)
+    extends GeomBinaryExpr("cellOfGeomCentroid", LongType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCovering(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "covering"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.covering(a.asInstanceOf[Int], b.asInstanceOf[InternalRow])
+case class StCovering(left: Expression, right: Expression)
+    extends GeomBinaryExpr("covering", ArrayType(LongType, containsNull = false)) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCellBounds(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellBounds"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) = GeomEval.cellBounds(v.asInstanceOf[Long])
+case class StCellBounds(child: Expression) extends GeomUnaryExpr("cellBounds", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCellParent(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellParent"
-  override def dataType: DataType = LongType
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellParent(a.asInstanceOf[Long], b.asInstanceOf[Int])
+case class StCellParent(left: Expression, right: Expression)
+    extends GeomBinaryExpr("cellParent", LongType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StCellLevel(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellLevel"
-  override def dataType: DataType = IntegerType
-  protected def evalFn(v: Any) = GeomEval.cellLevel(v.asInstanceOf[Long])
+case class StCellLevel(child: Expression) extends GeomUnaryExpr("cellLevel", IntegerType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCellChildren(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellChildren"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(v: Any) = GeomEval.cellChildren(v.asInstanceOf[Long])
+case class StCellChildren(child: Expression)
+    extends GeomUnaryExpr("cellChildren", ArrayType(LongType, containsNull = false)) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCellCompact(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellCompact"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(v: Any) =
-    GeomEval.cellCompact(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+case class StCellCompact(child: Expression)
+    extends GeomUnaryExpr("cellCompact", ArrayType(LongType, containsNull = false)) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 case class StGeohash(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr {
-  def fname = "geohashEncode"
-  override def dataType: DataType = StringType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.geohashEncode(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
+    extends GeomTernaryExpr("geohashEncode", StringType) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(a, b, c)
 }
-case class StGeohashNeighbors(child: Expression) extends GeomUnaryExpr {
-  def fname = "geohashNeighbors"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.geohashNeighbors(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StGeohashNeighbors(child: Expression)
+    extends GeomUnaryExpr("geohashNeighbors", ArrayType(StringType, containsNull = false)) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StGeohashRect(child: Expression) extends GeomUnaryExpr {
-  def fname = "geohashRect"
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(v: Any) =
-    GeomEval.geohashRect(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StGeohashRect(child: Expression) extends GeomUnaryExpr("geohashRect", geomType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCellUncompact(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "cellUncompact"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.cellUncompact(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[Int])
+case class StCellUncompact(left: Expression, right: Expression)
+    extends GeomBinaryExpr("cellUncompact", ArrayType(LongType, containsNull = false)) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 /** Distinct cells within Chebyshev index distance `ring` of the cell
@@ -1678,16 +1069,10 @@ case class StCellNeighborhood(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression, d: Expression): Expression = copy(a, b, c, d)
 }
-case class StCellX(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellX"
-  override def dataType: DataType = LongType
-  protected def evalFn(v: Any) = GeomEval.cellX(v.asInstanceOf[Long])
+case class StCellX(child: Expression) extends GeomUnaryExpr("cellX", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StCellY(child: Expression) extends GeomUnaryExpr {
-  def fname = "cellY"
-  override def dataType: DataType = LongType
-  protected def evalFn(v: Any) = GeomEval.cellY(v.asInstanceOf[Long])
+case class StCellY(child: Expression) extends GeomUnaryExpr("cellY", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
@@ -1724,13 +1109,8 @@ case class StAsMvtGeom(children: Seq[Expression]) extends Expression with Serial
     "st_asmvtgeom takes (geom, z, x, y, extent, buffer, clip)")
   override def dataType: DataType = GeomExprs.geomType
   override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else GeomEval.asMvtGeom(vs(0).asInstanceOf[InternalRow],
-      vs(1).asInstanceOf[Int], vs(2).asInstanceOf[Long], vs(3).asInstanceOf[Long],
-      vs(4).asInstanceOf[Int], vs(5).asInstanceOf[Int], vs(6).asInstanceOf[Boolean])
-  }
+  @transient private lazy val kernel = GeomCodegen.kernel("asMvtGeom", 7)
+  override def eval(input: InternalRow): Any = GeomCodegen.evalAll(kernel, children, input)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -1756,55 +1136,36 @@ case class StAsMvtGeom(children: Seq[Expression]) extends Expression with Serial
 
 /** st_squaregrid(geom, size) — array of (i, j) grid-cell indices
   * covering the envelope; null over the cell cap (typed, never OOM). */
-case class StSquareGrid(left: Expression, right: Expression) extends GeomBinaryExpr {
-  def fname = "squareGrid"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("i", LongType, nullable = false),
-    StructField("j", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.squareGrid(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+case class StSquareGrid(left: Expression, right: Expression)
+    extends GeomBinaryExpr("squareGrid", ArrayType(StructType(Seq(
+      StructField("i", LongType, nullable = false),
+      StructField("j", LongType, nullable = false))), containsNull = false)) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
 /** st_squaregrid_cell(i, j, size) — the cell polygon. */
 case class StSquareGridCell(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "squareGridCell"
+    extends GeomTernaryExpr("squareGridCell", geomType) with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(LongType, LongType, DoubleType)
-  override def dataType: DataType = GeomExprs.geomType
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.squareGridCell(a.asInstanceOf[Long], b.asInstanceOf[Long],
-      c.asInstanceOf[Double])
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 
 /** st_mvt_decode(tile) — (id, geom) features of the first layer;
   * null on malformed bytes. */
-case class StMvtDecode(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtDecode"
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("geom", GeomExprs.geomType, nullable = false),
-    StructField("tags", MapType(StringType, StringType, valueContainsNull = false),
-      nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtDecode(v.asInstanceOf[Array[Byte]])
+case class StMvtDecode(child: Expression)
+    extends GeomUnaryExpr("mvtDecode", ArrayType(StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("geom", geomType, nullable = false),
+      StructField("tags", MapType(StringType, StringType, valueContainsNull = false),
+        nullable = false))), containsNull = false)) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StMvtLayerName(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtLayerName"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtLayerName(v.asInstanceOf[Array[Byte]])
+case class StMvtLayerName(child: Expression) extends GeomUnaryExpr("mvtLayerName", StringType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
-case class StMvtExtent(child: Expression) extends GeomUnaryExpr {
-  def fname = "mvtExtent"
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) = GeomEval.mvtExtent(v.asInstanceOf[Array[Byte]])
+case class StMvtExtent(child: Expression)
+    extends GeomUnaryExpr("mvtExtent", IntegerType, nullableResult = true) {
   // primitive result but nullable on malformed bytes: -1 sentinel
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
@@ -1821,15 +1182,9 @@ case class StMvtExtent(child: Expression) extends GeomUnaryExpr {
 /** st_geometricmedian(geom[, tol, max_iter]) — Weiszfeld/Vardi-Zhang
   * fixed point; points-only operand contract (PostGIS). */
 case class StGeometricMedian(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "geometricMedian"
+    extends GeomTernaryExpr("geometricMedian", geomType) with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] =
     Seq(GeomExprs.geomType, DoubleType, IntegerType)
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.geometricMedian(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Double], c.asInstanceOf[Int])
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
@@ -1838,15 +1193,9 @@ case class StGeometricMedian(first: Expression, second: Expression, third: Expre
   * points in a polygon (triangulate + area-weighted sampling, never a
   * rejection loop). */
 case class StGeneratePoints(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "generatePoints"
+    extends GeomTernaryExpr("generatePoints", geomType) with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] =
     Seq(GeomExprs.geomType, IntegerType, LongType)
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.generatePoints(a.asInstanceOf[InternalRow],
-      b.asInstanceOf[Int], c.asInstanceOf[Long])
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
@@ -1871,53 +1220,35 @@ case class StHexDistance(first: Expression, second: Expression,
 
 /** st_hexring(q, r, k) — cells at hex distance exactly k (H3 hexRing). */
 case class StHexRing(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "hexRing"
+    extends GeomTernaryExpr("hexRing", ArrayType(StructType(Seq(
+      StructField("q", LongType, nullable = false),
+      StructField("r", LongType, nullable = false))), containsNull = false))
+    with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(LongType, LongType, IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("q", LongType, nullable = false),
-    StructField("r", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.hexRing(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Int])
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 
 /** st_quadkey(z, x, y) — Bing tile-system quadkey string. */
 case class StQuadkey(first: Expression, second: Expression, third: Expression)
-    extends GeomTernaryExpr with ImplicitCastInputTypes {
-  def fname = "quadkey"
+    extends GeomTernaryExpr("quadkey", StringType) with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(IntegerType, LongType, LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any, c: Any) =
-    GeomEval.quadkey(a.asInstanceOf[Int], b.asInstanceOf[Long], c.asInstanceOf[Long])
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): Expression = copy(a, b, c)
 }
 
 /** st_quadkey_decode(qk) — struct(z, x, y); null on malformed keys. */
-case class StQuadkeyDecode(child: Expression) extends GeomUnaryExpr {
-  def fname = "quadkeyDecode"
-  override def dataType: DataType = StructType(Seq(
-    StructField("z", IntegerType, nullable = false),
-    StructField("x", LongType, nullable = false),
-    StructField("y", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  protected def evalFn(v: Any) =
-    GeomEval.quadkeyDecode(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+case class StQuadkeyDecode(child: Expression)
+    extends GeomUnaryExpr("quadkeyDecode", StructType(Seq(
+      StructField("z", IntegerType, nullable = false),
+      StructField("x", LongType, nullable = false),
+      StructField("y", LongType, nullable = false)))) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** st_lineinterpolatepoints(line, fraction) — points at every multiple
   * of `fraction` (PostGIS repeat=true contract), as MULTIPOINT. */
 case class StLineInterpolatePoints(left: Expression, right: Expression)
-    extends GeomBinaryExpr {
-  def fname = "lineInterpolatePoints"
-  override def dataType: DataType = GeomExprs.geomType
-  override def nullable: Boolean = true
-  protected def evalFn(a: Any, b: Any) =
-    GeomEval.lineInterpolatePoints(a.asInstanceOf[InternalRow], b.asInstanceOf[Double])
+    extends GeomBinaryExpr("lineInterpolatePoints", geomType) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }

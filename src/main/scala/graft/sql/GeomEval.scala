@@ -92,9 +92,6 @@ object GeomEval {
 
   // ------------------------------------------------------------ codecs
 
-  def geomFromText(s: UTF8String): InternalRow =
-    GeomSchema.toRow(Wkt.read(s.toString))
-
   def geomFromTextOrNull(s: UTF8String): InternalRow =
     Wkt.readOpt(s.toString) match {
       case Some(geom) => GeomSchema.toRow(geom)
@@ -198,7 +195,6 @@ object GeomEval {
   def area(r: InternalRow): Double = Planar.signedArea(g(r))
   def unsignedArea(r: InternalRow): Double = Planar.unsignedArea(g(r))
   def sphereArea(r: InternalRow): Double = Sphere.cdSignedArea(g(r))
-  def sphereAreaUnsigned(r: InternalRow): Double = Sphere.cdUnsignedArea(g(r))
   /** Exact ellipsoidal polygon area (Karney semantics, signed):
     * geodesic-edge integration on WGS-84 — see [[GeodesicArea]]. */
   def geodesicArea(r: InternalRow): Double = GeodesicArea.signedArea(g(r))

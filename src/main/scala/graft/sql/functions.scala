@@ -1,8 +1,10 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, ErrorBridge}
+import scala.reflect.ClassTag
 
 /**
  * Column API for the st_* operators plus SQL function registration
@@ -419,7 +421,7 @@ object functions {
     * Double — so coercing decimal/float arguments to double at the
     * registration boundary is always the intended call. Int/long/string
     * args pass through untouched (int params stay ints). */
-  private[sql] def coerceArgs(args: Seq[Expression]): Seq[Expression] = args.map {
+  private def coerceArgs(args: Seq[Expression]): Seq[Expression] = args.map {
     case a if a.resolved && (a.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
         || a.dataType == org.apache.spark.sql.types.FloatType) =>
       org.apache.spark.sql.catalyst.expressions.Cast(
@@ -427,260 +429,283 @@ object functions {
     case a => a
   }
 
-  /** Register every st_* function for SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String, builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, args => builder(coerceArgs(args)), "built-in")
+  private type Builder = Seq[Expression] => Expression
 
-    f("st_geomfromtext", e => StGeomFromText(e.head))
-    f("st_geomfromtext_force2d", e => StGeomFromTextForce2D(e.head))
-    f("st_collection_fromtext", e => StCollectionFromText(e.head))
-    f("st_collection_astext", e => StCollectionAsText(e.head))
-    f("st_unary_union", e => StUnaryUnion(e.head))
-    f("st_collection_centroid", e => StCollectionCentroid(e.head))
-    f("st_numparts", e => StNumParts(e.head))
-    f("st_boundary", e => StBoundary(e.head))
-    f("st_polygonize", e => StPolygonize(e.head))
-    f("st_minclearance", e => StMinClearance(e.head))
-    f("st_minclearanceline", e => StMinClearanceLine(e.head))
-    f("st_winnow", e => StWinnowFingerprints(e(0), e(1), e(2)))
-    f("st_astext", e => StAsText(e.head))
-    f("st_geometrytype", e => StGeometryType(e.head))
-    f("st_point", e => StPoint(e(0), e(1)))
-    f("st_makepoint", e => StPoint(e(0), e(1))) // PostGIS alias
-    f("st_rect", e => StRect(e(0), e(1), e(2), e(3)))
-    f("st_area", e => StArea(e.head))
-    f("st_unsigned_area", e => StUnsignedArea(e.head))
-    f("st_sphere_area", e => StSphereArea(e.head))
-    f("st_geodesic_area", e => StGeodesicArea(e.head))
-    f("st_geodesic_area_unsigned", e => StGeodesicAreaUnsigned(e.head))
-    f("st_length", e => StLength(e.head))
-    f("st_length_sphere", e => StLengthSphere(e.head))
-    f("st_length_rhumb", e => StLengthRhumb(e.head))
-    f("st_length_geodesic", e => StLengthGeodesic(e.head))
-    f("st_perimeter", e => StPerimeter(e.head))
-    f("st_numpoints", e => StNumPoints(e.head))
-    f("st_npoints", e => StNumPoints(e.head)) // PostGIS alias
-    f("st_isempty", e => StIsEmpty(e.head))
-    f("st_isccw", e => StIsCcw(e.head))
-    f("st_isconvex", e => StIsConvex(e.head))
-    f("st_windingorder", e => StWindingOrder(e.head))
-    f("st_xmin", e => StXMin(e.head))
-    f("st_ymin", e => StYMin(e.head))
-    f("st_xmax", e => StXMax(e.head))
-    f("st_ymax", e => StYMax(e.head))
-    f("st_x", e => StX(e.head))
-    f("st_y", e => StY(e.head))
-    f("st_extremes", e => StExtremes(e.head))
-    f("st_centroid", e => StCentroid(e.head))
-    f("st_envelope", e => StEnvelope(e.head))
-    f("st_interiorpoint", e => StInteriorPoint(e.head))
-    f("st_convexhull", e => StConvexHull(e.head))
-    f("st_grahamhull", e => StGrahamHull(e(0), e(1)))
-    f("st_buffer", e => if (e.length >= 3) StBufferStyle(e(0), e(1), e(2)) else StBuffer(e(0), e(1)))
-    f("st_voronoi", e => if (e.length >= 5) StVoronoiClip(e.take(5)) else StVoronoi(e.head))
-    f("st_subdivide", e => StSubdivide(e(0), e(1)))
-    f("st_maximuminscribedcircle", e => StMaximumInscribedCircle(e(0), e(1)))
-    f("st_linemerge", e => StLineMerge(e.head))
-    f("st_offsetcurve", e => StOffsetCurve(e(0), e(1)))
-    f("st_makevalid", e => StMakeValid(e.head))
-    f("st_shortestline", e => StShortestLine(e(0), e(1)))
-    f("st_snap", e => StSnap(e(0), e(1), e(2)))
-    f("st_split", e => StSplit(e(0), e(1)))
-    f("st_linesubstring", e => StLineSubstring(e(0), e(1), e(2)))
-    f("st_reverse", e => StReverse(e.head))
-    f("st_normalize", e => StNormalize(e.head))
-    f("st_exteriorring", e => StExteriorRing(e.head))
-    f("st_numinteriorrings", e => StNumInteriorRings(e.head))
-    f("st_interiorringn", e => StInteriorRingN(e(0), e(1)))
-    f("st_pointn", e => StPointN(e(0), e(1)))
-    f("st_startpoint", e => StStartPoint(e.head))
-    f("st_endpoint", e => StEndPoint(e.head))
-    f("st_geometryn", e => StGeometryN(e(0), e(1)))
-    f("st_dumprings", e => StDumpRings(e.head))
-    f("st_maxdistance", e => StMaxDistance(e(0), e(1)))
-    f("st_longestline", e => StLongestLine(e(0), e(1)))
-    f("st_makeline", e => StMakeLine(e.head))
-    f("st_flipcoordinates", e => StFlipCoordinates(e.head))
-    f("st_isclosed", e => StIsClosed(e.head))
-    f("st_issimple", e => StIsSimple(e.head))
-    f("st_isring", e => StIsRing(e.head))
-    f("st_multi", e => StMulti(e.head))
-    f("st_points", e => StPoints(e.head))
-    f("st_boundingdiagonal", e => StBoundingDiagonal(e.head))
-    f("st_scroll", e => StScroll(e(0), e(1)))
-    f("st_shift_longitude", e => StShiftLongitude(e.head))
-    f("st_minimumboundingcircle", e =>
-      StMinimumBoundingCircle(e(0), if (e.length > 1) e(1) else Literal(48)))
-    f("st_minimumboundingradius", e => StMinimumBoundingRadius(e.head))
-    f("st_sharedpaths", e => StSharedPaths(e(0), e(1)))
-    f("st_linecrossingdirection", e => StLineCrossingDirection(e(0), e(1)))
-    f("st_hexbin", e => StHexBin(e(0), e(1), e(2)))
-    f("st_hexbin_center", e => StHexBinCenter(e(0), e(1), e(2)))
-    f("st_hexagon", e => StHexagon(e(0), e(1), e(2)))
-    f("st_tileenvelope", e => StTileEnvelope(e(0), e(1), e(2),
-      if (e.length > 3) e(3) else Literal(0.0)))
-    f("st_asmvtgeom", e => StAsMvtGeom(Seq(e(0), e(1), e(2), e(3),
+  /** Entry for an expression whose constructor takes exactly its SQL
+    * arguments: Spark's own reflective builder, which fails a bad
+    * argument count with `WRONG_NUM_ARGS`. */
+  private def fixed[T <: Expression : ClassTag](name: String): (String, Builder) = {
+    val build = FunctionRegistryBase.build[T](name, None)._2
+    name -> (e => build(coerceArgs(e)))
+  }
+
+  /** Entry with defaults or dispatch: `arities` lists the accepted
+    * argument counts, anything else is `WRONG_NUM_ARGS`. */
+  private def custom(name: String, arities: Int*)(build: Builder): (String, Builder) =
+    name -> { e =>
+      if (!arities.contains(e.length)) throw ErrorBridge.wrongNumArgs(name, arities, e.length)
+      build(coerceArgs(e))
+    }
+
+  /** The SQL surface: every st_* name and its builder (arguments pass
+    * through [[coerceArgs]]). [[register]] and [[GraftExtensions]] both
+    * install exactly this table. */
+  private[sql] lazy val sqlFunctions: Seq[(String, Builder)] = Seq(
+    fixed[StGeomFromText]("st_geomfromtext"),
+    fixed[StGeomFromTextForce2D]("st_geomfromtext_force2d"),
+    fixed[StCollectionFromText]("st_collection_fromtext"),
+    fixed[StCollectionAsText]("st_collection_astext"),
+    fixed[StUnaryUnion]("st_unary_union"),
+    fixed[StCollectionCentroid]("st_collection_centroid"),
+    fixed[StNumParts]("st_numparts"),
+    fixed[StBoundary]("st_boundary"),
+    fixed[StPolygonize]("st_polygonize"),
+    fixed[StMinClearance]("st_minclearance"),
+    fixed[StMinClearanceLine]("st_minclearanceline"),
+    fixed[StWinnowFingerprints]("st_winnow"),
+    fixed[StAsText]("st_astext"),
+    fixed[StGeometryType]("st_geometrytype"),
+    fixed[StPoint]("st_point"),
+    fixed[StPoint]("st_makepoint"), // PostGIS alias
+    fixed[StRect]("st_rect"),
+    fixed[StArea]("st_area"),
+    fixed[StUnsignedArea]("st_unsigned_area"),
+    fixed[StSphereArea]("st_sphere_area"),
+    fixed[StGeodesicArea]("st_geodesic_area"),
+    fixed[StGeodesicAreaUnsigned]("st_geodesic_area_unsigned"),
+    fixed[StLength]("st_length"),
+    fixed[StLengthSphere]("st_length_sphere"),
+    fixed[StLengthRhumb]("st_length_rhumb"),
+    fixed[StLengthGeodesic]("st_length_geodesic"),
+    fixed[StPerimeter]("st_perimeter"),
+    fixed[StNumPoints]("st_numpoints"),
+    fixed[StNumPoints]("st_npoints"), // PostGIS alias
+    fixed[StIsEmpty]("st_isempty"),
+    fixed[StIsCcw]("st_isccw"),
+    fixed[StIsConvex]("st_isconvex"),
+    fixed[StWindingOrder]("st_windingorder"),
+    fixed[StXMin]("st_xmin"),
+    fixed[StYMin]("st_ymin"),
+    fixed[StXMax]("st_xmax"),
+    fixed[StYMax]("st_ymax"),
+    fixed[StX]("st_x"),
+    fixed[StY]("st_y"),
+    fixed[StExtremes]("st_extremes"),
+    fixed[StCentroid]("st_centroid"),
+    fixed[StEnvelope]("st_envelope"),
+    fixed[StInteriorPoint]("st_interiorpoint"),
+    fixed[StConvexHull]("st_convexhull"),
+    fixed[StGrahamHull]("st_grahamhull"),
+    custom("st_buffer", 2, 3)(e =>
+      if (e.length == 3) StBufferStyle(e(0), e(1), e(2)) else StBuffer(e(0), e(1))),
+    custom("st_voronoi", 1, 5)(e => if (e.length == 5) StVoronoiClip(e) else StVoronoi(e.head)),
+    fixed[StSubdivide]("st_subdivide"),
+    fixed[StMaximumInscribedCircle]("st_maximuminscribedcircle"),
+    fixed[StLineMerge]("st_linemerge"),
+    fixed[StOffsetCurve]("st_offsetcurve"),
+    fixed[StMakeValid]("st_makevalid"),
+    fixed[StShortestLine]("st_shortestline"),
+    fixed[StSnap]("st_snap"),
+    fixed[StSplit]("st_split"),
+    fixed[StLineSubstring]("st_linesubstring"),
+    fixed[StReverse]("st_reverse"),
+    fixed[StNormalize]("st_normalize"),
+    fixed[StExteriorRing]("st_exteriorring"),
+    fixed[StNumInteriorRings]("st_numinteriorrings"),
+    fixed[StInteriorRingN]("st_interiorringn"),
+    fixed[StPointN]("st_pointn"),
+    fixed[StStartPoint]("st_startpoint"),
+    fixed[StEndPoint]("st_endpoint"),
+    fixed[StGeometryN]("st_geometryn"),
+    fixed[StDumpRings]("st_dumprings"),
+    fixed[StMaxDistance]("st_maxdistance"),
+    fixed[StLongestLine]("st_longestline"),
+    fixed[StMakeLine]("st_makeline"),
+    fixed[StFlipCoordinates]("st_flipcoordinates"),
+    fixed[StIsClosed]("st_isclosed"),
+    fixed[StIsSimple]("st_issimple"),
+    fixed[StIsRing]("st_isring"),
+    fixed[StMulti]("st_multi"),
+    fixed[StPoints]("st_points"),
+    fixed[StBoundingDiagonal]("st_boundingdiagonal"),
+    fixed[StScroll]("st_scroll"),
+    fixed[StShiftLongitude]("st_shift_longitude"),
+    custom("st_minimumboundingcircle", 1, 2)(e =>
+      StMinimumBoundingCircle(e(0), if (e.length > 1) e(1) else Literal(48))),
+    fixed[StMinimumBoundingRadius]("st_minimumboundingradius"),
+    fixed[StSharedPaths]("st_sharedpaths"),
+    fixed[StLineCrossingDirection]("st_linecrossingdirection"),
+    fixed[StHexBin]("st_hexbin"),
+    fixed[StHexBinCenter]("st_hexbin_center"),
+    fixed[StHexagon]("st_hexagon"),
+    custom("st_tileenvelope", 3, 4)(e => StTileEnvelope(e(0), e(1), e(2),
+      if (e.length > 3) e(3) else Literal(0.0))),
+    custom("st_asmvtgeom", 4, 5, 6, 7)(e => StAsMvtGeom(Seq(e(0), e(1), e(2), e(3),
       if (e.length > 4) e(4) else Literal(4096),
       if (e.length > 5) e(5) else Literal(256),
-      if (e.length > 6) e(6) else Literal(true))))
-    f("st_squaregrid", e => StSquareGrid(e(0), e(1)))
-    f("st_squaregrid_cell", e => StSquareGridCell(e(0), e(1), e(2)))
-    f("st_asmvt", e => StAsMvtAgg(e(0), e(1),
+      if (e.length > 6) e(6) else Literal(true)))),
+    fixed[StSquareGrid]("st_squaregrid"),
+    fixed[StSquareGridCell]("st_squaregrid_cell"),
+    custom("st_asmvt", 2, 3, 4, 5)(e => StAsMvtAgg(e(0), e(1),
       if (e.length > 4) Some(e(4)) else None,
       if (e.length > 2) e(2).eval().toString else "layer",
       if (e.length > 3) e(3).eval().asInstanceOf[Int] else 4096)
-      .toAggregateExpression())
-    f("st_mvt_decode", e => StMvtDecode(e.head))
-    f("st_mvt_layername", e => StMvtLayerName(e.head))
-    f("st_mvt_extent", e => StMvtExtent(e.head))
-    f("st_geometricmedian", e => StGeometricMedian(e(0),
+      .toAggregateExpression()),
+    fixed[StMvtDecode]("st_mvt_decode"),
+    fixed[StMvtLayerName]("st_mvt_layername"),
+    fixed[StMvtExtent]("st_mvt_extent"),
+    custom("st_geometricmedian", 1, 2, 3)(e => StGeometricMedian(e(0),
       if (e.length > 1) e(1) else Literal(0.0),
-      if (e.length > 2) e(2) else Literal(10000)))
-    f("st_generatepoints", e => StGeneratePoints(e(0), e(1),
-      if (e.length > 2) e(2) else Literal(0L)))
-    f("st_hexdistance", e => StHexDistance(e(0), e(1), e(2), e(3)))
-    f("st_hexring", e => StHexRing(e(0), e(1), e(2)))
-    f("st_quadkey", e => StQuadkey(e(0), e(1), e(2)))
-    f("st_quadkey_decode", e => StQuadkeyDecode(e.head))
-    f("st_lineinterpolatepoints", e => StLineInterpolatePoints(e(0), e(1)))
-    f("st_addpoint", e => StAddPoint(e(0), e(1), e(2)))
-    f("st_setpoint", e => StSetPoint(e(0), e(1), e(2)))
-    f("st_removepoint", e => StRemovePoint(e(0), e(1)))
-    f("st_angle", e => StAngle(e(0), e(1), e(2)))
-    f("st_expand", e => StExpand(e(0), e(1)))
-    f("st_node", e => StNode(e.head))
-    f("st_largestemptycircle", e => StLargestEmptyCircle(e(0), e(1)))
-    f("st_simplify", e => StSimplify(e(0), e(1)))
-    f("st_simplifyvw", e => StSimplifyVw(e(0), e(1)))
-    f("st_simplify_idx", e => StSimplifyIdx(e(0), e(1)))
-    f("st_simplifyvw_idx", e => StSimplifyVwIdx(e(0), e(1)))
-    f("st_densify", e => StDensify(e(0), e(1)))
-    f("st_densify_haversine", e => StDensifyHaversine(e(0), e(1)))
-    f("st_densify_rhumb", e => StDensifyRhumb(e(0), e(1)))
-    f("st_densify_geodesic", e => StDensifyGeodesic(e(0), e(1)))
-    f("st_chaikin", e => StChaikin(e(0), e(1)))
-    f("st_removerepeated", e => StRemoveRepeated(e.head))
-    f("st_toradians", e => StToRadians(e.head))
-    f("st_todegrees", e => StToDegrees(e.head))
-    f("st_force_cw", e => StForceCw(e.head))
-    f("st_force_ccw", e => StForceCcw(e.head))
-    f("st_dumppoints", e => StDumpPoints(e.head))
-    f("st_dumpsegments", e => StDumpSegments(e.head))
-    f("st_lineintersection", e => StLineIntersection(e(0), e(1)))
-    f("st_closestpoint", e => StClosestPoint(e(0), e(1)))
-    f("st_affine", e => StAffine(e))
-    f("st_translate", e => StTranslate(e(0), e(1), e(2)))
-    f("st_rotate", e => StRotate(e(0), e(1)))
-    f("st_scale", e => StScale(e(0), e(1), e(2)))
-    f("st_skew", e => StSkew(e(0), e(1), e(2)))
-    f("st_contains", e => StContains(e(0), e(1)))
-    f("st_within", e => StWithin(e(0), e(1)))
-    f("st_intersects", e => StIntersects(e(0), e(1)))
-    f("st_disjoint", e => StDisjoint(e(0), e(1)))
-    f("st_contains_xy", e => StContainsXY(e(0), e(1), e(2)))
-    f("st_intersects_xy", e => StIntersectsXY(e(0), e(1), e(2)))
-    f("st_distance", e => StDistance(e(0), e(1)))
-    f("st_distance_sphere", e => StDistanceSphere(e(0), e(1)))
-    f("st_distance_rhumb", e => StDistanceRhumb(e(0), e(1)))
-    f("st_distance_geodesic", e => StDistanceGeodesic(e(0), e(1)))
-    f("st_azimuth", e => StAzimuth(e(0), e(1)))
-    f("st_bearing", e => StBearing(e(0), e(1)))
-    f("st_bearing_rhumb", e => StBearingRhumb(e(0), e(1)))
-    f("st_bearing_geodesic", e => StBearingGeodesic(e(0), e(1)))
-    f("st_project", e => StProject(e(0), e(1), e(2)))
-    f("st_project_rhumb", e => StProjectRhumb(e(0), e(1), e(2)))
-    f("st_project_geodesic", e => StProjectGeodesic(e(0), e(1), e(2)))
-    f("st_crosstrack", e => StCrossTrack(e(0), e(1), e(2)))
-    f("st_hausdorff", e => StHausdorff(e(0), e(1)))
-    f("st_frechet", e => StFrechet(e(0), e(1)))
-    f("st_linelocatepoint", e => StLineLocatePoint(e(0), e(1)))
-    f("st_lineinterpolatepoint", e => StLineInterpolatePoint(e(0), e(1)))
-    f("st_lineinterpolate_sphere", e => StLineInterpolateSphere(e(0), e(1), e(2)))
-    f("st_lineinterpolate_rhumb", e => StLineInterpolateRhumb(e(0), e(1), e(2)))
-    f("st_lineinterpolate_geodesic", e => StLineInterpolateGeodesic(e(0), e(1), e(2)))
-    f("st_collect_points", e => StCollectPoints(e.head))
-    f("st_geomfromwkb", e => StGeomFromWkb(e.head))
-    f("st_geomfromwkb_force2d", e => StGeomFromWkbForce2D(e.head))
-    f("st_asgeojson", e => StAsGeoJson(e.head))
-    f("st_geomfromgeojson", e => StGeomFromGeoJson(e.head))
-    f("st_aswkb", e => StAsWkb(e.head))
-    f("st_geomfromewkb", e => StGeomFromWkb(e.head))
-    f("st_asewkb", e => StAsEwkb(e(0), e(1)))
-    f("st_srid", e => StSrid(e.head))
-    f("st_isvalid", e => StIsValid(e.head))
-    f("st_isvalidreason", e => StIsValidReason(e.head))
-    f("st_simplifyvw_preserve", e => StSimplifyVwPreserve(e(0), e(1)))
-    f("st_intersection", e => StIntersection(e(0), e(1)))
-    f("st_union", e => StUnion(e(0), e(1)))
-    f("st_difference", e => StDifference(e(0), e(1)))
-    f("st_symdifference", e => StSymDifference(e(0), e(1)))
-    f("st_intersection_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpIntersection))
-    f("st_union_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpUnion))
-    f("st_difference_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpDifference))
-    f("st_symdifference_hetero", e => StOverlayHetero(e(0), e(1), graft.kernels.Overlay.OpXor))
-    f("st_clip", e => StClip(e(0), e(1), e(2)))
-    f("st_transform", e => StTransform(e(0), e(1), e(2)))
-    f("st_snap_to_grid", e => StSnapToGrid(e(0), e(1)))
-    f("st_intersection_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpIntersection, linework = false))
-    f("st_union_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpUnion, linework = false))
-    f("st_difference_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpDifference, linework = false))
-    f("st_symdifference_sr", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpXor, linework = false))
-    f("st_intersection_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpIntersection, linework = true))
-    f("st_union_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpUnion, linework = true))
-    f("st_difference_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpDifference, linework = true))
-    f("st_symdifference_sr_lines", e => StBooleanSr(e(0), e(1), e(2), graft.kernels.Overlay.OpXor, linework = true))
-    f("st_union_all", e => StUnionAll(e.head))
-    f("st_relate", e => StRelate(e(0), e(1)))
-    f("st_relatematch", e => StRelateMatch(e(0), e(1), e(2)))
-    f("st_touches", e => StTouches(e(0), e(1)))
-    f("st_crosses", e => StCrosses(e(0), e(1)))
-    f("st_overlaps", e => StOverlaps(e(0), e(1)))
-    f("st_covers", e => StCovers(e(0), e(1)))
-    f("st_coveredby", e => StCoveredBy(e(0), e(1)))
-    f("st_equals", e => StEqualsTopo(e(0), e(1)))
-    f("st_concavehull", e => StConcaveHull(e(0), e(1)))
-    f("st_knnconcavehull", e => StKnnConcaveHull(e(0), e(1)))
-    f("st_minrotatedrect", e => StMinRotatedRect(e.head))
-    f("st_triangulate", e => StTriangulate(e.head))
-    f("st_delaunay", e => StDelaunay(e.head))
-    f("st_delaunay_unconstrained", e => StDelaunayUnconstrained(e.head))
-    f("st_stitch", e => StStitch(e.head))
-    f("st_segmentize", e => StSegmentize(e(0), e(1)))
-    f("st_segmentize_sphere", e => StSegmentizeSphere(e(0), e(1)))
-    f("st_dimension", e => StDimension(e.head))
-    f("st_closestpoint_sphere", e => StClosestPointSphere(e(0), e(1)))
-    f("st_distance_vincenty", e => StDistanceVincenty(e(0), e(1)))
-    f("st_cellid", e => StCellId(e(0), e(1), e(2)))
-    f("st_cell_of_geom", e => StCellOfGeom(e(0), e(1)))
-    f("st_covering", e => StCovering(e(0), e(1)))
-    f("st_cell_bounds", e => StCellBounds(e.head))
-    f("st_cell_parent", e => StCellParent(e(0), e(1)))
-    f("st_cell_level", e => StCellLevel(e.head))
-    f("st_cell_x", e => StCellX(e.head))
-    f("st_cell_y", e => StCellY(e.head))
-    f("st_cell_children", e => StCellChildren(e.head))
-    f("st_geohash", e => StGeohash(e(0), e(1), e(2)))
-    f("st_geohash_rect", e => StGeohashRect(e.head))
-    f("st_geohash_neighbors", e => StGeohashNeighbors(e.head))
-    f("st_cell_compact", e => StCellCompact(e.head))
-    f("st_cell_uncompact", e => StCellUncompact(e(0), e(1)))
-    f("st_cell_neighborhood", e => StCellNeighborhood(e(0), e(1), e(2), e(3)))
+      if (e.length > 2) e(2) else Literal(10000))),
+    custom("st_generatepoints", 2, 3)(e => StGeneratePoints(e(0), e(1),
+      if (e.length > 2) e(2) else Literal(0L))),
+    fixed[StHexDistance]("st_hexdistance"),
+    fixed[StHexRing]("st_hexring"),
+    fixed[StQuadkey]("st_quadkey"),
+    fixed[StQuadkeyDecode]("st_quadkey_decode"),
+    fixed[StLineInterpolatePoints]("st_lineinterpolatepoints"),
+    fixed[StAddPoint]("st_addpoint"),
+    fixed[StSetPoint]("st_setpoint"),
+    fixed[StRemovePoint]("st_removepoint"),
+    fixed[StAngle]("st_angle"),
+    fixed[StExpand]("st_expand"),
+    fixed[StNode]("st_node"),
+    fixed[StLargestEmptyCircle]("st_largestemptycircle"),
+    fixed[StSimplify]("st_simplify"),
+    fixed[StSimplifyVw]("st_simplifyvw"),
+    fixed[StSimplifyIdx]("st_simplify_idx"),
+    fixed[StSimplifyVwIdx]("st_simplifyvw_idx"),
+    fixed[StDensify]("st_densify"),
+    fixed[StDensifyHaversine]("st_densify_haversine"),
+    fixed[StDensifyRhumb]("st_densify_rhumb"),
+    fixed[StDensifyGeodesic]("st_densify_geodesic"),
+    fixed[StChaikin]("st_chaikin"),
+    fixed[StRemoveRepeated]("st_removerepeated"),
+    fixed[StToRadians]("st_toradians"),
+    fixed[StToDegrees]("st_todegrees"),
+    fixed[StForceCw]("st_force_cw"),
+    fixed[StForceCcw]("st_force_ccw"),
+    fixed[StDumpPoints]("st_dumppoints"),
+    fixed[StDumpSegments]("st_dumpsegments"),
+    fixed[StLineIntersection]("st_lineintersection"),
+    fixed[StClosestPoint]("st_closestpoint"),
+    custom("st_affine", 7)(StAffine(_)),
+    fixed[StTranslate]("st_translate"),
+    fixed[StRotate]("st_rotate"),
+    fixed[StScale]("st_scale"),
+    fixed[StSkew]("st_skew"),
+    fixed[StContains]("st_contains"),
+    fixed[StWithin]("st_within"),
+    fixed[StIntersects]("st_intersects"),
+    fixed[StDisjoint]("st_disjoint"),
+    fixed[StContainsXY]("st_contains_xy"),
+    fixed[StIntersectsXY]("st_intersects_xy"),
+    fixed[StDistance]("st_distance"),
+    fixed[StDistanceSphere]("st_distance_sphere"),
+    fixed[StDistanceRhumb]("st_distance_rhumb"),
+    fixed[StDistanceGeodesic]("st_distance_geodesic"),
+    fixed[StAzimuth]("st_azimuth"),
+    fixed[StBearing]("st_bearing"),
+    fixed[StBearingRhumb]("st_bearing_rhumb"),
+    fixed[StBearingGeodesic]("st_bearing_geodesic"),
+    fixed[StProject]("st_project"),
+    fixed[StProjectRhumb]("st_project_rhumb"),
+    fixed[StProjectGeodesic]("st_project_geodesic"),
+    fixed[StCrossTrack]("st_crosstrack"),
+    fixed[StHausdorff]("st_hausdorff"),
+    fixed[StFrechet]("st_frechet"),
+    fixed[StLineLocatePoint]("st_linelocatepoint"),
+    fixed[StLineInterpolatePoint]("st_lineinterpolatepoint"),
+    fixed[StLineInterpolateSphere]("st_lineinterpolate_sphere"),
+    fixed[StLineInterpolateRhumb]("st_lineinterpolate_rhumb"),
+    fixed[StLineInterpolateGeodesic]("st_lineinterpolate_geodesic"),
+    fixed[StCollectPoints]("st_collect_points"),
+    fixed[StGeomFromWkb]("st_geomfromwkb"),
+    fixed[StGeomFromWkbForce2D]("st_geomfromwkb_force2d"),
+    fixed[StAsGeoJson]("st_asgeojson"),
+    fixed[StGeomFromGeoJson]("st_geomfromgeojson"),
+    fixed[StAsWkb]("st_aswkb"),
+    fixed[StGeomFromWkb]("st_geomfromewkb"),
+    fixed[StAsEwkb]("st_asewkb"),
+    fixed[StSrid]("st_srid"),
+    fixed[StIsValid]("st_isvalid"),
+    fixed[StIsValidReason]("st_isvalidreason"),
+    fixed[StSimplifyVwPreserve]("st_simplifyvw_preserve"),
+    fixed[StIntersection]("st_intersection"),
+    fixed[StUnion]("st_union"),
+    fixed[StDifference]("st_difference"),
+    fixed[StSymDifference]("st_symdifference"),
+    fixed[StClip]("st_clip"),
+    fixed[StTransform]("st_transform"),
+    fixed[StSnapToGrid]("st_snap_to_grid"),
+    fixed[StUnionAll]("st_union_all"),
+    fixed[StRelate]("st_relate"),
+    fixed[StRelateMatch]("st_relatematch"),
+    fixed[StTouches]("st_touches"),
+    fixed[StCrosses]("st_crosses"),
+    fixed[StOverlaps]("st_overlaps"),
+    fixed[StCovers]("st_covers"),
+    fixed[StCoveredBy]("st_coveredby"),
+    fixed[StEqualsTopo]("st_equals"),
+    fixed[StConcaveHull]("st_concavehull"),
+    fixed[StKnnConcaveHull]("st_knnconcavehull"),
+    fixed[StMinRotatedRect]("st_minrotatedrect"),
+    fixed[StTriangulate]("st_triangulate"),
+    fixed[StDelaunay]("st_delaunay"),
+    fixed[StDelaunayUnconstrained]("st_delaunay_unconstrained"),
+    fixed[StStitch]("st_stitch"),
+    fixed[StSegmentize]("st_segmentize"),
+    fixed[StSegmentizeSphere]("st_segmentize_sphere"),
+    fixed[StDimension]("st_dimension"),
+    fixed[StClosestPointSphere]("st_closestpoint_sphere"),
+    fixed[StDistanceVincenty]("st_distance_vincenty"),
+    fixed[StCellId]("st_cellid"),
+    fixed[StCellOfGeom]("st_cell_of_geom"),
+    fixed[StCovering]("st_covering"),
+    fixed[StCellBounds]("st_cell_bounds"),
+    fixed[StCellParent]("st_cell_parent"),
+    fixed[StCellLevel]("st_cell_level"),
+    fixed[StCellX]("st_cell_x"),
+    fixed[StCellY]("st_cell_y"),
+    fixed[StCellChildren]("st_cell_children"),
+    fixed[StGeohash]("st_geohash"),
+    fixed[StGeohashRect]("st_geohash_rect"),
+    fixed[StGeohashNeighbors]("st_geohash_neighbors"),
+    fixed[StCellCompact]("st_cell_compact"),
+    fixed[StCellUncompact]("st_cell_uncompact"),
+    fixed[StCellNeighborhood]("st_cell_neighborhood"),
+  ) ++ Seq(
+    "intersection" -> graft.kernels.Overlay.OpIntersection,
+    "union" -> graft.kernels.Overlay.OpUnion,
+    "difference" -> graft.kernels.Overlay.OpDifference,
+    "symdifference" -> graft.kernels.Overlay.OpXor).flatMap { case (op, code) => Seq(
+      custom(s"st_${op}_hetero", 2)(e => StOverlayHetero(e(0), e(1), code)),
+      custom(s"st_${op}_sr", 3)(e => StBooleanSr(e(0), e(1), e(2), code, linework = false)),
+      custom(s"st_${op}_sr_lines", 3)(e => StBooleanSr(e(0), e(1), e(2), code, linework = true)))
+  } ++ {
     // SQL macros over built-in catalyst expressions (no custom
     // Expression needed): PII redaction and host extraction for SQL
     // users, sharing the exact pattern constants with the Column API
     import org.apache.spark.sql.catalyst.expressions.{Literal => L, RegExpReplace, RegExpExtract, Lower}
-    f("st_redact_pii", e =>
-      RegExpReplace(
+    Seq(
+      custom("st_redact_pii", 1)(e =>
         RegExpReplace(
-          RegExpReplace(e.head,
-            L(graft.operators.TrainingData.EmailPattern), L("<EMAIL>")),
-          L(graft.operators.TrainingData.IpPattern), L("$1<IP>$4")),
-        L(graft.operators.TrainingData.PhonePattern), L("$1<PHONE>$4")))
-    f("st_host", e =>
-      Lower(RegExpExtract(e.head,
-        L(graft.operators.TrainingData.HostPattern), L(1))))
+          RegExpReplace(
+            RegExpReplace(e.head,
+              L(graft.operators.TrainingData.EmailPattern), L("<EMAIL>")),
+            L(graft.operators.TrainingData.IpPattern), L("$1<IP>$4")),
+          L(graft.operators.TrainingData.PhonePattern), L("$1<PHONE>$4"))),
+      custom("st_host", 1)(e =>
+        Lower(RegExpExtract(e.head,
+          L(graft.operators.TrainingData.HostPattern), L(1)))))
+  }
+
+  /** Register every st_* function for SQL use. Idempotent. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 
@@ -690,39 +715,12 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def inject(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.sql", name),
-        args => builder(functions.coerceArgs(args))))
     // the spatial-join rewrites (PIP / ST_DWithin / geometry pairs →
     // cell equi-joins) ride along for any session built with
     // spark.sql.extensions — not just register()-style sessions
     ext.injectOptimizerRule(_ => SpatialJoinRule())
-    // the session-level register() covers the full surface; inject the
-    // core set here for sessions built with withExtensions
-    inject("st_geomfromtext", e => StGeomFromText(e.head))
-    inject("st_collection_fromtext", e => StCollectionFromText(e.head))
-    inject("st_collection_astext", e => StCollectionAsText(e.head))
-    inject("st_unary_union", e => StUnaryUnion(e.head))
-    inject("st_numparts", e => StNumParts(e.head))
-    inject("st_boundary", e => StBoundary(e.head))
-    inject("st_polygonize", e => StPolygonize(e.head))
-    inject("st_minclearance", e => StMinClearance(e.head))
-    inject("st_minclearanceline", e => StMinClearanceLine(e.head))
-    inject("st_astext", e => StAsText(e.head))
-    inject("st_point", e => StPoint(e(0), e(1)))
-    inject("st_contains", e => StContains(e(0), e(1)))
-    inject("st_intersects", e => StIntersects(e(0), e(1)))
-    inject("st_area", e => StArea(e.head))
-    inject("st_centroid", e => StCentroid(e.head))
-    inject("st_cellid", e => StCellId(e(0), e(1), e(2)))
-    inject("st_covering", e => StCovering(e(0), e(1)))
-    // the full join-predicate surface the optimizer rule rewrites
-    inject("st_distance", e => StDistance(e(0), e(1)))
-    inject("st_contains_xy", e => StContainsXY(e(0), e(1), e(2)))
-    inject("st_intersects_xy", e => StIntersectsXY(e(0), e(1), e(2)))
-    inject("st_within", e => StWithin(e(0), e(1)))
-    inject("st_covers", e => StCovers(e(0), e(1)))
-    inject("st_coveredby", e => StCoveredBy(e(0), e(1)))
+    functions.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft.sql", name), build))
+    }
   }
 }

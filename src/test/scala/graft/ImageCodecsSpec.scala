@@ -205,6 +205,49 @@ class ImageCodecsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ImageCodecs.decode(badMagic))
   }
 
+  /** A PNG with the given IHDR and one IDAT of `pixels` (deflated raw
+    * bytes), every chunk with a valid CRC. */
+  private def forgedPng(w: Int, h: Int, colorType: Int, pixels: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def be32(v: Int): Unit = for (s <- Seq(24, 16, 8, 0)) out.write((v >>> s) & 0xff)
+    def chunk(typ: String, data: Array[Byte]): Unit = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
+      be32(data.length); out.write(typ.getBytes("US-ASCII")); out.write(data)
+      be32(crc.getValue.toInt)
+    }
+    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
+      .put(8.toByte).put(colorType.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
+    chunk("IHDR", ihdr.array())
+    val z = new java.util.zip.Deflater()
+    z.setInput(pixels); z.finish()
+    val buf = new Array[Byte](1024)
+    chunk("IDAT", java.util.Arrays.copyOf(buf, z.deflate(buf)))
+    z.end()
+    chunk("IEND", Array.emptyByteArray)
+    out.toByteArray
+  }
+
+  test("forged PNG headers fail with the typed error before allocating") {
+    // RGBA rows of 1 + 4w bytes: w*h*3 fits an Int but h*(1+4w) does not
+    val overflow = forgedPng(30000, 20000, 6, new Array[Byte](16))
+    val e1 = intercept[IllegalArgumentException](ImageCodecs.decode(overflow))
+    assert(e1.getMessage.contains("exceed the payload"), e1.getMessage)
+    // 12 MB of pixels claimed, 16 bytes deflated: beyond deflate's 1032:1
+    val inflated = forgedPng(2000, 2000, 2, new Array[Byte](16))
+    val e2 = intercept[IllegalArgumentException](ImageCodecs.decode(inflated))
+    assert(e2.getMessage.contains("exceed the compressed data"), e2.getMessage)
+  }
+
+  test("GIF truncated inside an extension or image descriptor fails with the typed error") {
+    val header = "GIF89a".getBytes("US-ASCII") ++ Array[Byte](4, 0, 4, 0, 0, 0, 0)
+    for (tail <- Seq(Array[Byte](0x21), Array[Byte](0x21, 0xf9.toByte),
+        Array[Byte](0x2c, 0, 0, 0), Array[Byte](0x2c, 0, 0, 0, 0, 4, 0, 4, 0))) {
+      intercept[IllegalArgumentException](ImageCodecs.decode(header ++ tail))
+    }
+  }
+
   test("truncated payloads and unknown magic fail loudly") {
     val good = ImageCodecs.encodePpm(img(4, 4))
     intercept[IllegalArgumentException] {
