@@ -22,10 +22,14 @@ object Wkt {
     try Some(read(s)) catch { case _: IllegalArgumentException => None }
 
   /** EXPLICITLY LOSSY 2-D projection of XYZ/XYM/XYZM WKT: the Z / M /
-    * ZM dimension token and any third/fourth ordinates (including the
-    * bare PostGIS `POINT(1 2 3)` spelling) parse and DROP. The default
-    * reader keeps the typed rejection contract — this is the opt-in
-    * escape hatch for PostGIS-sourced corpora. */
+    * ZM dimension token and the ordinates it declares parse and DROP.
+    * A `Z` or `M` tag requires exactly one ordinate after x y, `ZM`
+    * exactly two; `POINT Z (1 2 3 4)` and `POINT ZM (1 2 3)` fail.
+    * Untagged coordinates may carry zero, one or two extra ordinates:
+    * PostGIS EWKT writes XYZ as `POINT(1 2 3)` and XYZM as
+    * `POINT(1 2 3 4)`, with no tag. The default reader keeps the typed
+    * rejection contract — this is the opt-in escape hatch for
+    * PostGIS-sourced corpora. */
   def readForce2D(s: String): FlatGeom = {
     val p = new Parser(s, force2D = true)
     val g = p.geometry()
@@ -79,16 +83,17 @@ object Wkt {
       buf += number()
       skipWs()
       if (force2D) {
-        // lossy 2-D projection: up to two extra ordinates (Z, M) drop
+        // lossy 2-D projection: the extra ordinates the tag allows drop
         var extra = 0
         var more = true
-        while (more && extra < 2) {
+        while (more && extra < extraOrdinates) {
           skipWs()
           if (!eof && { val c = s.charAt(pos)
             c == '-' || c == '+' || c == '.' || (c >= '0' && c <= '9') }) {
             number(); extra += 1
           } else more = false
         }
+        if (tagged && extra < extraOrdinates) fail(s"expected $extraOrdinates extra ordinate(s)")
       }
       // reject a third (Z) ordinate (2-D contract; readForce2D opts out)
       if (!eof) { val c = s.charAt(pos)
@@ -116,6 +121,12 @@ object Wkt {
       out.toSeq
     }
 
+    // ordinates after x y that readForce2D drops: set by the dimension
+    // tag (exactly 1 for Z or M, exactly 2 for ZM); untagged input may
+    // carry 0, 1 or 2, the EWKT spellings of XY, XYZ and XYZM
+    var extraOrdinates = 2
+    var tagged = false
+
     /** Documented 2-D contract: a Z / M / ZM dimension token after the
       * geometry keyword (OGC WKT XYZ/XYM/XYZM forms) is rejected with a
       * typed error rather than misparsed; a bare third ordinate is
@@ -125,7 +136,9 @@ object Wkt {
       var p = pos
       while (p < s.length && s.charAt(p).isLetter) p += 1
       val tok = s.substring(pos, p).toUpperCase
-      if (tok == "Z" || tok == "M" || tok == "ZM") {
+      tagged = tok == "Z" || tok == "M" || tok == "ZM"
+      extraOrdinates = if (tok == "ZM" || !tagged) 2 else 1
+      if (tagged) {
         if (force2D) pos = p // lossy mode: consume the token, drop dims
         else fail("Z/M dimensions unsupported (2-D engine)")
       }

@@ -12,8 +12,10 @@ import scala.collection.mutable.ArrayBuffer
  * make-monotone plane sweep (split/merge vertices receive diagonals
  * to their sweep helpers, de Berg et al. §3.2), the diagonal-augmented
  * edge set is walked into faces, and each CCW face stores its two
- * y-sorted chains. A point query binary-searches each chain — O(log n)
- * per piece versus the O(n) ray cast — with the same exact semantics:
+ * y-sorted chains. A point query looks only at the pieces listed in its
+ * y-slab whose bounding box holds it, and binary-searches their chains
+ * — O(log n) per piece versus the O(n) ray cast — with the same exact
+ * semantics:
  * side tests use [[Robust.orient2d]], and a point on an inserted
  * diagonal (polygon interior) reports Inside, only original boundary
  * edges report OnBoundary.
@@ -28,6 +30,8 @@ object Monotone {
 
     val yMin: Double = ys(botIdx)
     val yMax: Double = ys(topIdx)
+    val xMin: Double = xs.min
+    val xMax: Double = xs.max
 
     /** Planar.Inside / OnBoundary / Outside for this piece.
       *
@@ -39,17 +43,17 @@ object Monotone {
       * vertex level, where the wall's x-extent is a set of exact
       * vertex coordinates (side = exact coordinate compare). */
     def classify(px: Double, py: Double): Int = {
-      if (py < yMin || py > yMax) return Planar.Outside
+      if (py < yMin || py > yMax || px < xMin || px > xMax) return Planar.Outside
       val n = xs.length
       var onOrig = false
       var onDiag = false
       var c = 0
       while (c < 2) {
         val start = if (c == 0) topIdx else botIdx
-        val len = if (c == 0) (botIdx - topIdx + n) % n else (topIdx - botIdx + n) % n
-        @inline def vIdx(pos: Int): Int = (start + pos) % n
+        val end = if (c == 0) botIdx else topIdx
+        val len = if (end >= start) end - start else end - start + n
+        @inline def vIdx(pos: Int): Int = { val i = start + pos; if (i >= n) i - n else i }
         @inline def yAt(pos: Int): Double = ys(vIdx(pos))
-        @inline def xAt(pos: Int): Double = xs(vIdx(pos))
         // first chain position whose segment [pos, pos+1] spans py
         var lo = 0
         var hi = len - 1
@@ -107,14 +111,65 @@ object Monotone {
     }
   }
 
-  /** Prepared polygon: the monotone pieces of every part. */
+  /** Prepared polygon: the monotone pieces of every part, indexed by
+    * y-slabs. The y-range of the pieces is cut into equal slabs and
+    * each slab lists the pieces whose [yMin, yMax] reaches into it, so
+    * a query classifies only the pieces of its own slab. A piece's slab
+    * range is computed with the same `slabOf` the query uses, and
+    * `slabOf` never decreases with y, so every piece whose y-range
+    * holds the query's y is listed in the query's slab. */
   final class Prepared(val pieces: Array[MonoPoly]) {
+    private val yLo = pieces.iterator.map(_.yMin).min
+    private val yHi = pieces.iterator.map(_.yMax).max
+    private def slab(y: Double, slabs: Int, invH: Double): Int =
+      math.min(((y - yLo) * invH).toInt, slabs - 1)
+
+    // one slab per piece, halved while tall pieces would make the lists
+    // longer than 8 entries per piece (a comb of full-height teeth
+    // gains nothing from slabs)
+    private val slabs: Int = {
+      def fits(s: Int): Boolean = {
+        val inv = s / (yHi - yLo)
+        !inv.isInfinite &&
+          pieces.iterator.map(p => slab(p.yMax, s, inv) - slab(p.yMin, s, inv) + 1L).sum <=
+            8L * pieces.length
+      }
+      var s = pieces.length
+      while (s > 1 && !fits(s)) s /= 2
+      s
+    }
+    private val invH = if (slabs > 1) slabs / (yHi - yLo) else 0.0
+    private def slabOf(y: Double): Int = slab(y, slabs, invH)
+
+    private val slabStart = new Array[Int](slabs + 1)
+    private val slabPieces: Array[Int] = {
+      pieces.foreach(p => (slabOf(p.yMin) to slabOf(p.yMax)).foreach(k => slabStart(k + 1) += 1))
+      var k = 0
+      while (k < slabs) { slabStart(k + 1) += slabStart(k); k += 1 }
+      val fill = slabStart.clone()
+      val out = new Array[Int](slabStart(slabs))
+      pieces.indices.foreach { i =>
+        (slabOf(pieces(i).yMin) to slabOf(pieces(i).yMax)).foreach { k =>
+          out(fill(k)) = i; fill(k) += 1
+        }
+      }
+      out
+    }
+
+    /** Approximate heap bytes held by the pieces and the slab index. */
+    val retainedBytes: Long =
+      pieces.iterator.map(p => 17L * p.xs.length + 96).sum +
+        4L * (slabStart.length + slabPieces.length) + 96
+
     /** Same contract as [[Planar.coordPos]] on the source geometry. */
     def coordPos(x: Double, y: Double): Int = {
-      var i = 0
+      if (!(y >= yLo && y <= yHi)) return Planar.Outside
+      val k = slabOf(y)
+      var i = slabStart(k)
+      val end = slabStart(k + 1)
       var any = false
-      while (i < pieces.length) {
-        pieces(i).classify(x, y) match {
+      while (i < end) {
+        pieces(slabPieces(i)).classify(x, y) match {
           case Planar.OnBoundary => return Planar.OnBoundary
           case Planar.Inside => any = true
           case _ =>
@@ -193,17 +248,19 @@ object Monotone {
     }
     val n = vx.length
     if (n < 3) return Nil
+    val xs = vx.toArray; val ys = vy.toArray
+    val nxt = nextV.toArray; val prv = prevV.toArray
 
     // sweep order: descending y, ties by ascending x
     @inline def below(a: Int, b: Int): Boolean =
-      vy(a) < vy(b) || (vy(a) == vy(b) && vx(a) > vx(b))
+      ys(a) < ys(b) || (ys(a) == ys(b) && xs(a) > xs(b))
     val vt = new Array[Int](n)
     var v = 0
     while (v < n) {
-      val p = prevV(v); val q = nextV(v)
+      val p = prv(v); val q = nxt(v)
       val pBelow = below(p, v)
       val qBelow = below(q, v)
-      val o = Robust.orient2d(vx(p), vy(p), vx(v), vy(v), vx(q), vy(q))
+      val o = Robust.orient2d(xs(p), ys(p), xs(v), ys(v), xs(q), ys(q))
       vt(v) =
         if (pBelow && qBelow) { if (o > 0) Start else Split }
         else if (!pBelow && !qBelow) { if (o > 0) End else Merge }
@@ -213,26 +270,39 @@ object Monotone {
 
     val diagonals = scala.collection.mutable.LinkedHashSet[(Int, Int)]()
     def addDiag(a: Int, b: Int): Unit =
-      if (a != b && nextV(a) != b && nextV(b) != a)
+      if (a != b && nxt(a) != b && nxt(b) != a)
         diagonals += (if (a < b) (a, b) else (b, a))
 
-    // status of sweep-crossing edges (edge id = origin vertex);
-    // linear-scan status — build is one-off per prepared polygon
-    val status = ArrayBuffer[Int]()
+    // status of sweep-crossing edges (edge id = origin vertex), in
+    // insertion order; linear scans — build is one-off per polygon
+    val status = new Array[Int](n)
+    var statusLen = 0
+    val inStatus = new Array[Boolean](n)
     val helper = new Array[Int](n)
+    def insert(e: Int): Unit = { status(statusLen) = e; statusLen += 1; inStatus(e) = true }
+    def remove(e: Int): Unit = {
+      var i = 0
+      while (status(i) != e) i += 1
+      System.arraycopy(status, i + 1, status, i, statusLen - i - 1)
+      statusLen -= 1
+      inStatus(e) = false
+    }
 
     def edgeXat(e: Int, yq: Double): Double = {
-      val a = e; val b = nextV(e)
-      val y1 = vy(a); val y2 = vy(b)
-      if (y1 == y2) Math.min(vx(a), vx(b))
-      else vx(a) + (vx(b) - vx(a)) * (yq - y1) / (y2 - y1)
+      val a = e; val b = nxt(e)
+      val y1 = ys(a); val y2 = ys(b)
+      if (y1 == y2) Math.min(xs(a), xs(b))
+      else xs(a) + (xs(b) - xs(a)) * (yq - y1) / (y2 - y1)
     }
     def leftEdgeOf(q: Int): Int = {
       var best = -1
       var bestX = Double.NegativeInfinity
-      status.foreach { e =>
-        val x = edgeXat(e, vy(q))
-        if (x <= vx(q) && x > bestX) { bestX = x; best = e }
+      var i = 0
+      while (i < statusLen) {
+        val e = status(i)
+        val x = edgeXat(e, ys(q))
+        if (x <= xs(q) && x > bestX) { bestX = x; best = e }
+        i += 1
       }
       best
     }
@@ -240,22 +310,22 @@ object Monotone {
     (0 until n).sortWith((a, b) => below(b, a)).foreach { vtx =>
       vt(vtx) match {
         case Start =>
-          status += vtx; helper(vtx) = vtx
+          insert(vtx); helper(vtx) = vtx
         case End =>
-          val ep = prevV(vtx)
-          if (status.contains(ep)) {
+          val ep = prv(vtx)
+          if (inStatus(ep)) {
             if (vt(helper(ep)) == Merge) addDiag(vtx, helper(ep))
-            status -= ep
+            remove(ep)
           }
         case Split =>
           val ej = leftEdgeOf(vtx)
           if (ej >= 0) { addDiag(vtx, helper(ej)); helper(ej) = vtx }
-          status += vtx; helper(vtx) = vtx
+          insert(vtx); helper(vtx) = vtx
         case Merge =>
-          val ep = prevV(vtx)
-          if (status.contains(ep)) {
+          val ep = prv(vtx)
+          if (inStatus(ep)) {
             if (vt(helper(ep)) == Merge) addDiag(vtx, helper(ep))
-            status -= ep
+            remove(ep)
           }
           val ej = leftEdgeOf(vtx)
           if (ej >= 0) {
@@ -263,13 +333,13 @@ object Monotone {
             helper(ej) = vtx
           }
         case Regular =>
-          if (below(nextV(vtx), vtx)) { // interior right of v: boundary descends
-            val ep = prevV(vtx)
-            if (status.contains(ep)) {
+          if (below(nxt(vtx), vtx)) { // interior right of v: boundary descends
+            val ep = prv(vtx)
+            if (inStatus(ep)) {
               if (vt(helper(ep)) == Merge) addDiag(vtx, helper(ep))
-              status -= ep
+              remove(ep)
             }
-            status += vtx; helper(vtx) = vtx
+            insert(vtx); helper(vtx) = vtx
           } else {
             val ej = leftEdgeOf(vtx)
             if (ej >= 0) {
@@ -280,7 +350,7 @@ object Monotone {
       }
     }
 
-    extractFaces(vx.toArray, vy.toArray, nextV.toArray, diagonals.toSeq)
+    extractFaces(xs, ys, nxt, diagonals.toSeq)
   }
 
   // --------------------------------------------------- face extraction
@@ -293,81 +363,108 @@ object Monotone {
   private def extractFaces(vx: Array[Double], vy: Array[Double],
       nextV: Array[Int], diagonals: Seq[(Int, Int)]): Seq[MonoPoly] = {
     val n = vx.length
-    final case class DirEdge(from: Int, to: Int, orig: Boolean) {
-      val angle: Double = Math.atan2(vy(to) - vy(from), vx(to) - vx(from))
-    }
-    val edges = ArrayBuffer[DirEdge]()
+    // directed edges: ring edges, then both directions of each diagonal
+    val m = n + 2 * diagonals.length
+    val from = new Array[Int](m)
+    val to = new Array[Int](m)
+    val orig = new Array[Boolean](m)
     var i = 0
-    while (i < n) { edges += DirEdge(i, nextV(i), orig = true); i += 1 }
+    while (i < n) { from(i) = i; to(i) = nextV(i); orig(i) = true; i += 1 }
     diagonals.foreach { case (a, b) =>
-      edges += DirEdge(a, b, orig = false)
-      edges += DirEdge(b, a, orig = false)
+      from(i) = a; to(i) = b; i += 1
+      from(i) = b; to(i) = a; i += 1
     }
-    // outgoing edges per vertex sorted by angle (ascending)
-    val outAt = Array.fill(n)(ArrayBuffer[Int]())
-    edges.indices.foreach(ei => outAt(edges(ei).from) += ei)
-    outAt.foreach(_.sortInPlaceBy(ei => edges(ei).angle))
+    val angle = Array.tabulate(m)(ei => Math.atan2(vy(to(ei)) - vy(from(ei)), vx(to(ei)) - vx(from(ei))))
+    // outgoing edges per vertex (CSR), each list stably sorted by angle
+    val outStart = new Array[Int](n + 1)
+    i = 0
+    while (i < m) { outStart(from(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < n) { outStart(i + 1) += outStart(i); i += 1 }
+    val out = new Array[Int](m)
+    val fill = outStart.clone()
+    i = 0
+    while (i < m) { out(fill(from(i))) = i; fill(from(i)) += 1; i += 1 }
+    i = 0
+    while (i < n) {
+      var j = outStart(i) + 1
+      while (j < outStart(i + 1)) { // insertion sort: lists are short
+        val ei = out(j)
+        var k = j - 1
+        while (k >= outStart(i) && java.lang.Double.compare(angle(out(k)), angle(ei)) > 0) {
+          out(k + 1) = out(k); k -= 1
+        }
+        out(k + 1) = ei
+        j += 1
+      }
+      i += 1
+    }
 
     def successor(ei: Int): Int = {
-      val e = edges(ei)
-      val list = outAt(e.to)
-      val revAngle = Math.atan2(vy(e.from) - vy(e.to), vx(e.from) - vx(e.to))
+      val v = to(ei)
+      val revAngle = Math.atan2(vy(from(ei)) - vy(v), vx(from(ei)) - vx(v))
       // largest angle strictly below revAngle, cyclic wrap; skip the
       // exact reverse edge unless it is the only option
       var best = -1
       var bestAngle = Double.NegativeInfinity
       var wrap = -1
       var wrapAngle = Double.NegativeInfinity
-      list.foreach { ci =>
-        val cand = edges(ci)
-        val isReverse = cand.to == e.from && cand.angle == revAngle
+      var j = outStart(v)
+      while (j < outStart(v + 1)) {
+        val ci = out(j)
+        val isReverse = to(ci) == from(ei) && angle(ci) == revAngle
         if (!isReverse) {
-          if (cand.angle < revAngle && cand.angle > bestAngle) { bestAngle = cand.angle; best = ci }
-          if (cand.angle > wrapAngle) { wrapAngle = cand.angle; wrap = ci }
+          if (angle(ci) < revAngle && angle(ci) > bestAngle) { bestAngle = angle(ci); best = ci }
+          if (angle(ci) > wrapAngle) { wrapAngle = angle(ci); wrap = ci }
         }
+        j += 1
       }
       if (best >= 0) best
       else if (wrap >= 0) wrap
-      else list.head // only the reverse edge exists (degenerate)
+      else out(outStart(v)) // only the reverse edge exists (degenerate)
     }
 
-    val visited = new Array[Boolean](edges.length)
+    val visited = new Array[Boolean](m)
     val faces = ArrayBuffer[MonoPoly]()
-    edges.indices.foreach { startEi =>
+    val ringV = new Array[Int](m)
+    val ringOrig = new Array[Boolean](m)
+    var startEi = 0
+    while (startEi < m) {
       if (!visited(startEi)) {
-        val ringV = ArrayBuffer[Int]()
-        val ringOrig = ArrayBuffer[Boolean]()
+        var len = 0
         var ei = startEi
-        var guard = edges.length + 4
+        var guard = m + 4
         while (!visited(ei) && guard > 0) {
           guard -= 1
           visited(ei) = true
-          ringV += edges(ei).from
-          ringOrig += edges(ei).orig
+          ringV(len) = from(ei)
+          ringOrig(len) = orig(ei)
+          len += 1
           ei = successor(ei)
         }
-        if (ringV.length >= 3 && ei == startEi) {
-          val fxs = ringV.map(vx).toArray
-          val fys = ringV.map(vy).toArray
+        if (len >= 3 && ei == startEi) {
+          val fxs = Array.tabulate(len)(k => vx(ringV(k)))
+          val fys = Array.tabulate(len)(k => vy(ringV(k)))
           var a2 = 0.0
           var k = 0
-          while (k < fxs.length) {
-            val k2 = (k + 1) % fxs.length
+          while (k < len) {
+            val k2 = (k + 1) % len
             a2 += fxs(k) * fys(k2) - fxs(k2) * fys(k)
             k += 1
           }
           if (a2 > 0) { // CCW bounded face = monotone piece
             var top = 0; var bot = 0
             k = 1
-            while (k < fys.length) {
+            while (k < len) {
               if (fys(k) > fys(top) || (fys(k) == fys(top) && fxs(k) < fxs(top))) top = k
               if (fys(k) < fys(bot) || (fys(k) == fys(bot) && fxs(k) > fxs(bot))) bot = k
               k += 1
             }
-            faces += new MonoPoly(fxs, fys, top, bot, ringOrig.toArray)
+            faces += new MonoPoly(fxs, fys, top, bot, java.util.Arrays.copyOf(ringOrig, len))
           }
         }
       }
+      startEi += 1
     }
     faces.toSeq
   }

@@ -16,79 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object GeomEval {
 
-  /** Per-thread identity memo for decoded geometries. Safe ONLY for
-    * immutable GenericInternalRow instances (constant-folded literals,
-    * broadcast values we built ourselves) — UnsafeRow objects are
-    * REUSED across rows by Spark iterators and must never be cached. */
-  private final class GeomMemo {
-    var r1: AnyRef = _; var g1: FlatGeom = _
-    var r2: AnyRef = _; var g2: FlatGeom = _
-  }
-  private val memo = ThreadLocal.withInitial[GeomMemo](() => new GeomMemo)
+  /** Every geometry argument decodes through the calling thread's
+    * [[GeomCache]]: broadcast polygons and literals decode once per
+    * thread and keep their prepared point-in-polygon index. */
+  @inline private def g(r: InternalRow): FlatGeom = GeomCache.get.geom(r)
 
-  /**
-   * Per-thread content-addressed decode cache for UnsafeRow geometry
-   * structs — the "prepared geometry" layer of a broadcast spatial
-   * join (reference prepared_geometry.rs:28): the build side of a
-   * BroadcastHashJoin re-surfaces the same few polygons for millions
-   * of probe rows, but as REUSED UnsafeRow buffers that identity
-   * caching can never hit. Keyed by (hash, length) and verified by a
-   * full byte comparison against the cached snapshot, so a hit is
-   * exact, never probabilistic. Direct-mapped, 64 slots, oversized
-   * geometries (> 256 KB) bypass the cache.
-   */
-  private final val CacheSlots = 64
-  private final val MaxCachedBytes = 256 << 10
-  private final class UnsafeCache {
-    val bytes = new Array[Array[Byte]](CacheSlots)
-    val geoms = new Array[FlatGeom](CacheSlots)
-  }
-  private val unsafeMemo = ThreadLocal.withInitial[UnsafeCache](() => new UnsafeCache)
+  /** Monotone indexes built by the calling thread (tests). */
+  private[graft] def prepareCount: Long = GeomCache.get.prepares
 
-  private def cachedDecode(ur: org.apache.spark.sql.catalyst.expressions.UnsafeRow): FlatGeom = {
-    val len = ur.getSizeInBytes
-    // tiny geometries (points, short lines) decode cheaper than the
-    // hash+snapshot bookkeeping; only real polygons are worth caching
-    if (len > MaxCachedBytes || len < 128) return GeomSchema.fromRow(ur)
-    val base = ur.getBaseObject
-    val off = ur.getBaseOffset
-    val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(base, off, len, 42)
-    val slot = h & (CacheSlots - 1)
-    val c = unsafeMemo.get()
-    val snap = c.bytes(slot)
-    if (snap != null && snap.length == len &&
-        org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(
-          base, off, snap, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len)) {
-      c.geoms(slot)
-    } else {
-      val decoded = GeomSchema.fromRow(ur)
-      val copy = new Array[Byte](len)
-      org.apache.spark.unsafe.Platform.copyMemory(
-        base, off, copy, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len)
-      c.bytes(slot) = copy
-      c.geoms(slot) = decoded
-      decoded
-    }
-  }
-
-  @inline private def g(r: InternalRow): FlatGeom = r match {
-    case gr: org.apache.spark.sql.catalyst.expressions.GenericInternalRow =>
-      val m = memo.get()
-      if (m.r1 eq gr) m.g1
-      else if (m.r2 eq gr) { // promote to front
-        val hit = m.g2
-        m.r2 = m.r1; m.g2 = m.g1
-        m.r1 = gr; m.g1 = hit
-        hit
-      } else {
-        val decoded = GeomSchema.fromRow(gr)
-        m.r2 = m.r1; m.g2 = m.g1
-        m.r1 = gr; m.g1 = decoded
-        decoded
-      }
-    case ur: org.apache.spark.sql.catalyst.expressions.UnsafeRow => cachedDecode(ur)
-    case _ => GeomSchema.fromRow(r)
-  }
+  /** Bytes the calling thread's geometry cache retains (tests). */
+  private[graft] def cacheRetainedBytes: Long = GeomCache.get.retainedBytes
 
   // ------------------------------------------------------------ codecs
 
@@ -406,42 +343,15 @@ object GeomEval {
   def intersects(a: InternalRow, b: InternalRow): Boolean = Topo.intersects(g(a), g(b))
   def disjoint(a: InternalRow, b: InternalRow): Boolean = !Topo.intersects(g(a), g(b))
 
-  /** Lazily-built monotone subdivision per decoded polygon, keyed by
-    * FlatGeom IDENTITY — hits because `g(row)` itself caches broadcast
-    * polygons, so the same FlatGeom instance returns for every probe
-    * row. O(log n) PIP (reference monotone/mod.rs) for big polygons;
-    * small ones stay on the O(n) ray cast (subdivision overhead
-    * dominates below ~128 vertices). */
-  private final val MonoThreshold = 128
-  private final class MonoMemo {
-    var k1: AnyRef = _; var p1: Monotone.Prepared = _
-    var k2: AnyRef = _; var p2: Monotone.Prepared = _
-  }
-  private val monoMemo = ThreadLocal.withInitial[MonoMemo](() => new MonoMemo)
-
-  private def coordPosFast(ga: FlatGeom, x: Double, y: Double): Int = {
-    if (ga.numPoints < MonoThreshold ||
-        (ga.kind != GeomKind.Polygon && ga.kind != GeomKind.MultiPolygon))
-      return Planar.coordPos(ga, x, y)
-    val m = monoMemo.get()
-    var prep: Monotone.Prepared = null
-    if (m.k1 eq ga) prep = m.p1
-    else if (m.k2 eq ga) { prep = m.p2; m.k2 = m.k1; m.p2 = m.p1; m.k1 = ga; m.p1 = prep }
-    else {
-      prep = Monotone.prepare(ga)
-      m.k2 = m.k1; m.p2 = m.p1
-      m.k1 = ga; m.p1 = prep
-    }
-    if (prep == null) Planar.coordPos(ga, x, y) else prep.coordPos(x, y)
-  }
-
-  /** Hot-path: polygon struct contains raw (x, y) — avoids building the
-    * point row in the join refine stage. */
+  /** Hot path of the join refine: polygon struct contains raw (x, y),
+    * without building a point row. Polygons of 128 vertices or more
+    * answer from their cached monotone index in O(log n) (reference
+    * monotone/mod.rs); smaller ones take the O(n) ray cast. */
   def containsXY(a: InternalRow, x: Double, y: Double): Boolean =
-    coordPosFast(g(a), x, y) == Planar.Inside
+    GeomCache.get.coordPos(a, x, y) == Planar.Inside
 
   def intersectsXY(a: InternalRow, x: Double, y: Double): Boolean =
-    coordPosFast(g(a), x, y) != Planar.Outside
+    GeomCache.get.coordPos(a, x, y) != Planar.Outside
 
   def isConvex(r: InternalRow): Boolean = {
     val geom = g(r)

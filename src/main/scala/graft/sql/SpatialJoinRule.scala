@@ -138,11 +138,16 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
     }
   }
 
-  /** Salt-domain size from the session conf (1 = no salting). */
-  private def saltBuckets: Int =
-    try math.max(1, org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.join.saltBuckets", "1").toInt)
-    catch { case _: Exception => 1 }
+  /** Salt-domain size from the session conf (1 = no salting). A value
+    * that is not a positive integer fails the query instead of turning
+    * salting off unnoticed. */
+  private def saltBuckets: Int = {
+    val key = "spark.graft.join.saltBuckets"
+    val v = org.apache.spark.sql.internal.SQLConf.get.getConfString(key, "1")
+    val n = try v.trim.toInt catch { case _: NumberFormatException => 0 }
+    if (n < 1) throw new IllegalArgumentException(s"$key must be a positive integer, got '$v'")
+    n
+  }
 
   // ------------------------------------------------------------ DWithin
 

@@ -1115,6 +1115,23 @@ class ValidationSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Wkb.readForce2DOpt(Array[Byte](1, 99, 0, 0, 0)).isEmpty)
   }
 
+  test("force-2D WKT: the dimension tag sets how many extra ordinates drop") {
+    def parses(wkt: String) = Wkt.readForce2DOpt(wkt).map(Wkt.write)
+    // Z and M declare one extra ordinate, ZM two
+    assert(parses("POINT Z (1 2 3 4)").isEmpty)
+    assert(parses("POINT M (1 2 3 4)").isEmpty)
+    assert(parses("POINT ZM (1 2 3)").isEmpty)
+    assert(parses("POINT Z (1 2)").isEmpty)
+    assert(parses("LINESTRING M (0 0 1, 1 1 2 3)").isEmpty)
+    assert(parses("POINT M (1 2 3)").contains("POINT(1 2)"))
+    assert(parses("POINT ZM (1 2 3 4)").contains("POINT(1 2)"))
+    assert(parses("MULTIPOINT ZM ((1 2 3 4),(5 6 7 8))") ==
+      Some(Wkt.write(Wkt.read("MULTIPOINT((1 2),(5 6))"))))
+    // untagged (EWKT): 0, 1 or 2 extra ordinates, never 3
+    assert(parses("POINT(1 2 3 4)").contains("POINT(1 2)"))
+    assert(parses("POINT(1 2 3 4 5)").isEmpty)
+  }
+
   test("sweep finds all pairwise intersections of a crossing bundle") {
     // n segments all crossing at distinct points
     val n = 12

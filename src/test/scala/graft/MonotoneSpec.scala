@@ -74,4 +74,50 @@ class MonotoneSpec extends AnyFunSuite {
     assert(mismatches == 0, s"$mismatches mismatches on louisiana")
     assert(prep.coordPos(-91.147385, 30.471165) == Planar.Inside)
   }
+
+  test("monotone PIP matches ray cast on 10,000 seeded probes of a 1,024-vertex star") {
+    // integer vertices, so lattice points of an edge lie exactly on it
+    val n = 1024
+    val cs = new Array[Double](2 * (n + 1))
+    (0 until n).foreach { i =>
+      val a = 0.3 + 2 * math.Pi * i / n
+      val r = if (i % 2 == 0) 1e6 else 5.5e5
+      cs(2 * i) = math.rint(r * math.cos(a))
+      cs(2 * i + 1) = math.rint(r * math.sin(a))
+    }
+    cs(2 * n) = cs(0); cs(2 * n + 1) = cs(1)
+    val g = graft.core.FlatGeom.polygon(cs)
+    val prep = Monotone.prepare(g)
+    assert(prep != null)
+    val rnd = new java.util.SplittableRandom(1024)
+    @annotation.tailrec def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
+    var onEdge = 0
+    var mismatches = 0
+    var firstBad = ""
+    (0 until 10000).foreach { k =>
+      val i = rnd.nextInt(n)
+      val (x, y) = k % 3 match {
+        case 0 => (g.x(i), g.y(i)) // a vertex
+        case 1 => // a point on edge i → i+1, exact when the edge has lattice points
+          val dx = (g.x(i + 1) - g.x(i)).toLong; val dy = (g.y(i + 1) - g.y(i)).toLong
+          val d = gcd(math.abs(dx), math.abs(dy))
+          if (d < 2) (g.x(i), g.y(i))
+          else {
+            val t = 1 + rnd.nextLong(d - 1)
+            onEdge += 1
+            (g.x(i) + t * (dx / d), g.y(i) + t * (dy / d))
+          }
+        case _ => (rnd.nextDouble(-1.1e6, 1.1e6), rnd.nextDouble(-1.1e6, 1.1e6))
+      }
+      val want = Planar.coordPos(g, x, y)
+      if (k % 3 < 2) assert(want == Planar.OnBoundary, s"probe $k ($x,$y) is not on the boundary")
+      val got = prep.coordPos(x, y)
+      if (got != want) {
+        if (mismatches == 0) firstBad = s"($x,$y) got=$got want=$want"
+        mismatches += 1
+      }
+    }
+    assert(onEdge > 500, s"only $onEdge probes inside edges")
+    assert(mismatches == 0, s"$mismatches/10000 mismatches, first: $firstBad")
+  }
 }

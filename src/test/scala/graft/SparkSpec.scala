@@ -1570,6 +1570,26 @@ class RuleSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(got0 == brute)
   }
 
+  test("a saltBuckets value that is not a positive integer fails the join, naming it") {
+    graft.sql.functions.registerOptimizations(spark)
+    import spark.implicits._
+    val pts = Seq((1L, 10.02, 45.02)).toDF("k", "px", "py")
+    val polys = Seq((1, "POLYGON((9.99 44.99,10.06 44.99,10.06 45.06,9.99 45.06,9.99 44.99))"))
+      .toDF("pid", "w").select(col("pid"), gf.st_geomfromtext(col("w")).as("geom"))
+    val pred = gf.st_contains_xy(col("geom"), col("px"), col("py"))
+    for (bad <- Seq("abc", "0", "-3")) {
+      spark.conf.set("spark.graft.join.saltBuckets", bad)
+      try {
+        val e = intercept[Exception](pts.join(polys, pred).queryExecution.optimizedPlan)
+        val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case x: IllegalArgumentException => x }
+        assert(iae.exists(x => x.getMessage.contains("spark.graft.join.saltBuckets") &&
+          x.getMessage.contains(s"'$bad'")), s"$bad: $e")
+      } finally spark.conf.unset("spark.graft.join.saltBuckets")
+    }
+    assert(pts.join(polys, pred).count() == 1L)
+  }
+
   test("covers/coveredby joins rewrite and a user __cell column does not disable the rule") {
     graft.sql.functions.registerOptimizations(spark)
     val pa = Queries.starPolys(spark, "/root/testdata/sf0.001")
