@@ -223,23 +223,28 @@ object CellId {
     val n = cellsPerAxis(level)
     val cx = cellX(level, lon)
     val cy = cellY(level, lat)
-    val out = new ArrayBuffer[Long]((2 * r + 1) * (2 * r + 1))
+    // columns cx-r, cx-r+1, ... are consecutive mod n, so the first
+    // min(2r+1, n) of them are distinct and the rest repeat: stopping
+    // there dedupes without a scan
+    val cols = Math.min(2L * r + 1, n).toInt
+    val out = new Array[Long]((2 * r + 1) * cols)
+    var m = 0
     var dy = -r
     while (dy <= r) {
       val y = cy + dy
       if (y >= 0 && y < n) {
-        var dx = -r
-        while (dx <= r) {
-          var x = (cx + dx) % n
+        var i = 0
+        while (i < cols) {
+          var x = (cx - r + i) % n
           if (x < 0) x += n
-          val id = pack(level, x, y)
-          if (!out.contains(id)) out += id // <= (2r+1)^2 entries: linear scan beats a set
-          dx += 1
+          out(m) = pack(level, x, y)
+          m += 1
+          i += 1
         }
       }
       dy += 1
     }
-    out.toArray
+    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
   /** Ring of cells at Chebyshev distance `r` around (cx, cy) at `level`

@@ -161,12 +161,13 @@ final class Quadtree(minLon: Double, minLat: Double, maxLon: Double, maxLat: Dou
           var i = 0
           while (i < node.n) {
             val d = Sphere.haversineDistance(qLon, qLat, node.lons(i), node.lats(i))
-            val hit = Quadtree.Hit(node.keys(i), node.lons(i), node.lats(i), d)
-            if (worstFirst.size() < k) worstFirst.add(hit)
+            val key = node.keys(i)
+            // a Hit is allocated only for a candidate that enters the heap
+            if (worstFirst.size() < k) worstFirst.add(Quadtree.Hit(key, node.lons(i), node.lats(i), d))
             else {
               val w = worstFirst.peek()
-              if (d < w.dist || (d == w.dist && hit.key < w.key)) {
-                worstFirst.poll(); worstFirst.add(hit)
+              if (d < w.dist || (d == w.dist && key < w.key)) {
+                worstFirst.poll(); worstFirst.add(Quadtree.Hit(key, node.lons(i), node.lats(i), d))
               }
             }
             i += 1
@@ -187,15 +188,33 @@ object Quadtree {
 
   /** Build over (lon, lat, key) triples; bounds derived from the data. */
   def build(pts: Iterable[(Double, Double, Long)], leafCap: Int = 16): Quadtree = {
+    val n = pts.size
+    val lons = new Array[Double](n); val lats = new Array[Double](n); val keys = new Array[Long](n)
+    var i = 0
+    pts.foreach { case (lon, lat, key) => lons(i) = lon; lats(i) = lat; keys(i) = key; i += 1 }
+    build(lons, lats, keys, n, leafCap)
+  }
+
+  /** Build over the first `n` entries of parallel coordinate and key
+    * arrays (no per-point boxing); bounds derived from the data. */
+  def build(lons: Array[Double], lats: Array[Double], keys: Array[Long], n: Int): Quadtree =
+    build(lons, lats, keys, n, 16)
+
+  private def build(lons: Array[Double], lats: Array[Double], keys: Array[Long], n: Int,
+      leafCap: Int): Quadtree = {
     var minLon = Double.PositiveInfinity; var minLat = Double.PositiveInfinity
     var maxLon = Double.NegativeInfinity; var maxLat = Double.NegativeInfinity
-    pts.foreach { case (lon, lat, _) =>
+    var i = 0
+    while (i < n) {
+      val lon = lons(i); val lat = lats(i)
       if (lon < minLon) minLon = lon; if (lon > maxLon) maxLon = lon
       if (lat < minLat) minLat = lat; if (lat > maxLat) maxLat = lat
+      i += 1
     }
     if (minLon > maxLon) { minLon = -180; maxLon = 180; minLat = -90; maxLat = 90 }
     val qt = new Quadtree(minLon, minLat, maxLon, maxLat, leafCap)
-    pts.foreach { case (lon, lat, key) => qt.insert(lon, lat, key) }
+    i = 0
+    while (i < n) { qt.insert(lons(i), lats(i), keys(i)); i += 1 }
     qt
   }
 }

@@ -1,15 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.sql.functions._
 
 /** Typed row shapes for [[SpatialJoins.knnJoinQuadtree]]'s cogroup. */
-private[operators] case class KeyedPt(key: Long, lon: Double, lat: Double)
 private[operators] case class KeyedPoint(key: Long, lon: Double, lat: Double, cell: Long)
 private[operators] case class KnnHit(pkey: Long, tkey: Long, tlon: Double, tlat: Double,
     dist: Double, rank: Int)
+
+/** Their encoders, derived once: a product encoder is derived by runtime
+  * reflection, about 10 ms of driver CPU each time. */
+private[operators] object KnnEncoders {
+  implicit val long: Encoder[Long] = Encoders.scalaLong
+  implicit val keyedPoint: Encoder[KeyedPoint] = Encoders.product[KeyedPoint]
+  implicit val knnHit: Encoder[KnnHit] = Encoders.product[KnnHit]
+}
 
 /**
  * Spatial joins as explicit DataFrame programs (SURVEY.md §2.6, §4):
@@ -178,7 +187,9 @@ object SpatialJoins {
    * nearest rows of `targets` (small side, broadcast) by haversine
    * distance. Exact: brute-force over the broadcast side + window
    * top-k — right for dimension-table-sized `targets`. For large
-   * targets use `knnJoinQuadtree`.
+   * targets use `knnJoinQuadtree`. Ranks per `pointKey`, not per row:
+   * probe rows sharing a key are merged into one top-k over all their
+   * candidates (`knnJoinQuadtree` answers each row on its own).
    */
   def knnJoinBroadcast(points: DataFrame, lonCol: String, latCol: String, pointKey: String,
       targets: DataFrame, tLonCol: String, tLatCol: String, k: Int): DataFrame = {
@@ -282,17 +293,30 @@ object SpatialJoins {
    * minimum great-circle distance to any point OUTSIDE the covered
    * lat/lon rows (latitude margin: d >= R*|dPhi|; longitude margin:
    * d >= 2R*asin(cos(phiMax)*sin(dLambda/2)), both sharp; poles/wrap
-   * make a side unbounded or zero conservatively). Probes that fail coarsen
-   * by two levels (ring area x16) until level 0 — one global cell — so
-   * the answer is ALWAYS the true kNN, at any `level`/`maxRing`.
+   * make a side unbounded or zero conservatively). A probe that fails
+   * emits one marker row (rank 0, its own lon/lat) instead of hits;
+   * the markers are the probes of the next level, two levels coarser
+   * (ring area x16), down to level 0 — one global cell — so the answer
+   * is ALWAYS the true kNN, at any `level`/`maxRing`.
    *
-   * Scale: the only exchanges are one hash partition of the probes
-   * (each row once) and one of the targets (each row <= (2r+1)^2 ring
-   * replicas, deduped locally during generation — integer cell
-   * arithmetic, so replica and probe cells agree exactly); per-task
-   * state is one cell-neighbourhood's targets (the same bound as a
-   * join partition's build side). Under skew, raise `level` — the
-   * guarantee keeps results exact while the ring population shrinks.
+   * Scale: each level is one cogroup over exactly two exchanges — one
+   * hash partition of that level's probes (each row once) and one of
+   * the targets (each row <= (2r+1)^2 ring replicas from the codegen'd
+   * `st_cell_neighborhood`) — with no join or aggregate. Its output is
+   * cached and its pending check is one action, `isEmpty` over the
+   * cached rank-0 rows: two shuffle-map jobs, the job that computes and
+   * caches the cogroup, and the check's scan of the cache (a level of
+   * 40k probes at local[4] runs 4 jobs). The first level reads
+   * `points`; later levels read only the cached markers; the result is
+   * one more read of the caches. Per-task state is one
+   * cell-neighbourhood's targets (the same bound as a join partition's
+   * build side). Under skew, raise `level` — the guarantee keeps
+   * results exact while the ring population shrinks.
+   *
+   * Results are per input row: two probe rows with the same key get k
+   * hits each. [[knnJoinBroadcast]] ranks per KEY (its window merges
+   * such rows into one top-k), so the two joins agree only when probe
+   * keys are unique.
    *
    * Determinism: ties broken by (haversine meters asc, target key asc)
    * — the same haversine kernel as `st_distance_sphere`, so ordering
@@ -307,8 +331,7 @@ object SpatialJoins {
       k: Int, level: Int, maxRing: Int): DataFrame = {
     require(pointKey != targetKey, "pointKey and targetKey must differ")
     require(maxRing >= 1, "maxRing must be >= 1")
-    val sp = points.sparkSession
-    import sp.implicits._
+    import KnnEncoders._
     import graft.index.CellId
 
     /** Lower bound (meters) on the distance from a probe to anything
@@ -343,85 +366,68 @@ object SpatialJoins {
       Math.min(Math.min(north, south), lonBound) * (1.0 - 1e-9) // rounding slack
     }
 
-    def ringTopK(pts: DataFrame, lvl: Int, isFinal: Boolean): DataFrame = {
-      val n = CellId.cellsPerAxis(lvl)
-      // ring replicas by INTEGER cell arithmetic: columns wrap mod n
-      // (antimeridian), rows outside [0, n) are dropped (nothing lies
-      // past a pole); coincident wrapped replicas dedupe locally — the
-      // only exchange is the cogroup's hash partition on cell
-      val tgt = targets.select(
-        col(targetKey).cast("long").as("key"),
-        col(tLonCol).cast("double").as("lon"),
-        col(tLatCol).cast("double").as("lat")).as[KeyedPt]
-        .flatMap { t =>
-          val cx = CellId.cellX(lvl, t.lon)
-          val cy = CellId.cellY(lvl, t.lat)
-          val out = collection.mutable.ArrayBuffer.empty[KeyedPoint]
-          val seen = collection.mutable.HashSet.empty[Long]
-          var dy = -maxRing
-          while (dy <= maxRing) {
-            val yy = cy + dy
-            if (yy >= 0 && yy < n) {
-              var dx = -maxRing
-              while (dx <= maxRing) {
-                val xx = ((cx + dx) % n + n) % n
-                val cell = CellId.pack(lvl, xx, yy)
-                if (seen.add(cell)) out += KeyedPoint(t.key, t.lon, t.lat, cell)
-                dx += 1
-              }
-            }
-            dy += 1
+    // probes and targets share one row shape; `cell` is the cogroup key.
+    // Non-null like the typed rows they decode to (a null fails here as
+    // it would there), so both sides' cell keys have the same type
+    def keyed(df: DataFrame, key: String, lon: String, lat: String): DataFrame = {
+      def nonNull(c: Column) = ColumnBridge.column(AssertNotNull(ColumnBridge.expression(c)))
+      df.select(nonNull(col(key).cast("long")).as("key"), nonNull(col(lon).cast("double")).as("lon"),
+        nonNull(col(lat).cast("double")).as("lat"))
+    }
+    val tgt = keyed(targets, targetKey, tLonCol, tLatCol)
+
+    /** One cogroup over two exchanges: probes keyed by their cell,
+      * targets replicated to every cell of their ring (`neighborhood`:
+      * integer cell arithmetic, antimeridian wrap, pole rows dropped,
+      * duplicate-free — so replica and probe cells agree exactly). A
+      * probe whose top-k is not provably exact emits one marker row
+      * (rank 0, carrying its own lon/lat) for the next level. */
+    def ringTopK(prb: DataFrame, lvl: Int, isFinal: Boolean): DataFrame = {
+      val prbByCell = prb.withColumn("cell", st_cellid(lit(lvl), col("lon"), col("lat")))
+        .groupBy(col("cell")).as[Long, KeyedPoint]
+      val tgtByCell = tgt.withColumn("cell",
+          explode(st_cell_neighborhood(lit(lvl), col("lon"), col("lat"), lit(maxRing))))
+        .groupBy(col("cell")).as[Long, KeyedPoint]
+      prbByCell.cogroup(tgtByCell) { (_, ps, ts) =>
+        var lons = new Array[Double](16); var lats = new Array[Double](16)
+        var keys = new Array[Long](16); var n = 0
+        ts.foreach { t =>
+          if (n == lons.length) {
+            lons = java.util.Arrays.copyOf(lons, 2 * n); lats = java.util.Arrays.copyOf(lats, 2 * n)
+            keys = java.util.Arrays.copyOf(keys, 2 * n)
           }
-          out
+          lons(n) = t.lon; lats(n) = t.lat; keys(n) = t.key; n += 1
         }
-      val prb = pts.select(
-        col(pointKey).cast("long").as("key"),
-        col(lonCol).cast("double").as("lon"),
-        col(latCol).cast("double").as("lat")).as[KeyedPt]
-        .map(p => KeyedPoint(p.key, p.lon, p.lat, CellId.cellId(lvl, p.lon, p.lat)))
-      prb.groupByKey(_.cell).cogroup(tgt.groupByKey(_.cell)) { (_, ps, ts) =>
-        val tBuf = collection.mutable.ArrayBuffer.empty[(Double, Double, Long)]
-        ts.foreach(t => tBuf += ((t.lon, t.lat, t.key)))
-        if (tBuf.isEmpty) Iterator.empty
-        else {
-          val qt = graft.index.Quadtree.build(tBuf)
-          ps.flatMap { p =>
-            val hits = qt.knn(p.lon, p.lat, k)
-            val exact = isFinal ||
-              (hits.length >= k && hits(hits.length - 1).dist < coverageGuarantee(p.lon, p.lat, lvl))
-            if (!exact) Iterator.empty
-            else {
-              val out = new Array[KnnHit](hits.length)
-              var i = 0
-              while (i < hits.length) {
-                val h = hits(i)
-                out(i) = KnnHit(p.key, h.key, h.lon, h.lat, h.dist, i + 1)
-                i += 1
-              }
-              out.iterator
-            }
+        val qt = if (n == 0) null else graft.index.Quadtree.build(lons, lats, keys, n)
+        ps.flatMap { p =>
+          val hits = if (qt == null) Array.empty[graft.index.Quadtree.Hit] else qt.knn(p.lon, p.lat, k)
+          val exact = isFinal ||
+            (hits.length >= k && hits(hits.length - 1).dist < coverageGuarantee(p.lon, p.lat, lvl))
+          if (!exact) Iterator.single(KnnHit(p.key, 0L, p.lon, p.lat, 0.0, 0))
+          else Iterator.tabulate(hits.length) { i =>
+            val h = hits(i)
+            KnnHit(p.key, h.key, h.lon, h.lat, h.dist, i + 1)
           }
         }
       }.toDF()
     }
 
-    // coarsening loop: probes without an accepted exact result emit
-    // nothing and re-run at level-2 (ring area x16); level 0 is one
-    // global cell — every target in one group — so termination with
+    // coarsening loop: each level's output is cached; its marker rows
+    // are the next level's probes (ring area x16 at level-2). Level 0 is
+    // one global cell — every target in one group — so termination with
     // the true kNN is guaranteed
     var lvl = level
-    var pending = points
+    var pending = keyed(points, pointKey, lonCol, latCol)
     var acc: List[DataFrame] = Nil
     var done = false
     while (!done) {
       val isFinal = lvl <= 0
       val topk = ringTopK(pending, lvl, isFinal).persist()
-      if (isFinal) { acc ::= topk; done = true }
+      acc ::= topk.filter(col("rank") > 0)
+      if (isFinal) done = true
       else {
-        acc ::= topk
-        val full = topk.select(col("pkey").as("__fk")).distinct()
-        pending = pending.join(full,
-          pending(pointKey).cast("long") === full("__fk"), "left_anti")
+        pending = topk.filter(col("rank") === 0)
+          .select(col("pkey").as("key"), col("tlon").as("lon"), col("tlat").as("lat"))
         if (pending.isEmpty) done = true else lvl = math.max(0, lvl - 2)
       }
     }

@@ -384,6 +384,10 @@ object ImageCodecs {
             require(pos < b.length, "gif: truncated image data")
             sz = b(pos) & 0xff
           }
+          // each LZW code takes >= minCode+1 bits and emits <= 4096 pixels,
+          // so the payload bounds the pixel count before anything is sized
+          require(iw.toLong * ih <= 4096L * 8 * data.size / (minCode + 1),
+            s"gif: dimensions $iw x $ih exceed what ${data.size} LZW bytes can encode")
           val indices = lzwDecode(data.toByteArray, minCode, iw * ih)
           // map indices through the color table, de-interlacing rows
           val rgb = new Array[Byte](iw * ih * 3)

@@ -4,6 +4,7 @@ import graft.core.{FlatGeom, GeomKind, Wkt}
 import graft.kernels._
 import graft.index.{CellId, Geohash, HexGrid}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1484,8 +1485,8 @@ object GeomEval {
     new GenericArrayData(CellId.uncompact(arr.toLongArray(), level))
   def cellX(id: Long): Long = CellId.xOf(id)
   def cellY(id: Long): Long = CellId.yOf(id)
-  def cellNeighborhood(level: Int, lon: Double, lat: Double, ring: Int): GenericArrayData =
-    new GenericArrayData(CellId.neighborhood(level, lon, lat, ring))
+  def cellNeighborhood(level: Int, lon: Double, lat: Double, ring: Int): UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(CellId.neighborhood(level, lon, lat, ring))
 
   // --------------------------------------------------------- accessors
 

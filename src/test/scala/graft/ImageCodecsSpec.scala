@@ -248,6 +248,19 @@ class ImageCodecsSpec extends AnyFunSuite {
     }
   }
 
+  test("GIF descriptor larger than its LZW payload can encode fails before allocating") {
+    // 65535 x 10922 (~715M pixels) passes the Int-overflow check; 20 bytes
+    // of 3-bit codes emit at most 4096 * 160 / 3 pixels
+    val out = new java.io.ByteArrayOutputStream()
+    out.write("GIF89a".getBytes("US-ASCII"))
+    out.write(Array[Byte](1, 0, 1, 0, 0x80.toByte, 0, 0)) // screen + 2-color global table
+    out.write(Array[Byte](0, 0, 0, -1, -1, -1))
+    out.write(Array[Byte](0x2c, 0, 0, 0, 0, -1, -1, 0xaa.toByte, 0x2a, 0)) // 65535 x 10922
+    out.write(Array[Byte](2, 20)); out.write(new Array[Byte](20)); out.write(Array[Byte](0, 0x3b))
+    val e = intercept[IllegalArgumentException](ImageCodecs.decode(out.toByteArray))
+    assert(e.getMessage.contains("exceed what 20 LZW bytes can encode"), e.getMessage)
+  }
+
   test("truncated payloads and unknown magic fail loudly") {
     val good = ImageCodecs.encodePpm(img(4, 4))
     intercept[IllegalArgumentException] {

@@ -1390,6 +1390,14 @@ class KnnHullSpec extends org.scalatest.funsuite.AnyFunSuite {
 
     // ring radius 2 at an interior point: 25 cells
     assert(CellId.neighborhood(lvl, 10.3, 20.7, 2).length == 25)
+
+    // a ring wider than the grid wraps onto itself: each column once, in
+    // ring order, rows past the poles dropped
+    assert(CellId.neighborhood(1, 10.0, 20.0, 1).toSeq ==
+      Seq(CellId.pack(1, 0, 0), CellId.pack(1, 1, 0), CellId.pack(1, 0, 1), CellId.pack(1, 1, 1)))
+    assert(CellId.neighborhood(2, -170.0, -80.0, 3).toSeq ==
+      (for (y <- 0L to 3L; x <- Seq(1L, 2L, 3L, 0L)) yield CellId.pack(2, x, y)))
+    assert(CellId.neighborhood(0, 10.0, 20.0, 3).toSeq == Seq(CellId.pack(0, 0, 0)))
   }
 
   test("simplify idx variants reproduce the simplified geometry (simplify.rs:449)") {

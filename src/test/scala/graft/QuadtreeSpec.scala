@@ -1,7 +1,12 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.index.Quadtree
 import graft.kernels.Sphere
 
@@ -36,6 +41,21 @@ class QuadtreeSpec extends AnyFunSuite {
       val want = bruteKnn(pts, qLon, qLat, k)
       assert(got == want, s"q=($qLon,$qLat) k=$k")
     }
+  }
+
+  test("quadtree built from primitive arrays answers like the tuple build") {
+    val pts = cloud(500, 42L)
+    val fromTuples = Quadtree.build(pts)
+    // oversized arrays: only the first n entries are indexed
+    val n = pts.length
+    val lons = pts.map(_._1) :+ 0.0; val lats = pts.map(_._2) :+ 0.0; val keys = pts.map(_._3) :+ -1L
+    val fromArrays = Quadtree.build(lons, lats, keys, n)
+    assert(fromArrays.size == n)
+    val queries = Seq((0.0, 0.0), (-179.95, 0.1), (179.9, -0.2), (12.3, 88.9),
+      (-45.0, -88.5), (100.0, 45.0), (-91.1, 30.4))
+    for ((qLon, qLat) <- queries; k <- Seq(1, 5, 17))
+      assert(fromArrays.knn(qLon, qLat, k).toSeq == fromTuples.knn(qLon, qLat, k).toSeq,
+        s"q=($qLon,$qLat) k=$k")
   }
 
   test("quadtree handles duplicate coordinates past the depth cap") {
@@ -97,5 +117,121 @@ class QuadtreeSpec extends AnyFunSuite {
     val top1 = res.filter(col("__rank") === 1)
       .select("pid", "tid").as[(Long, Long)].collect().toMap
     assert(top1(100L) == 1L && top1(101L) == 2L && top1(102L) == 2L, s"got $top1")
+  }
+
+  /** Executed plans of the actions `body` runs, waiting until the
+    * listener has seen `actions` of them. */
+  private def executedPlans(actions: Int)(body: => Unit): Seq[SparkPlan] = {
+    val spark = SparkTestSession.spark
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (plans.synchronized(plans.size) < actions && System.nanoTime() < deadline) Thread.sleep(5)
+      Thread.sleep(200) // an unexpected extra action would arrive now
+      plans.synchronized(plans.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of `plans` — AQE stages, subqueries and the plans behind
+    * cached relations — with each cached plan walked once. */
+  private def allNodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val cached = ArrayBuffer.empty[SparkPlan]
+    def walk(ps: Seq[SparkPlan]): Seq[SparkPlan] =
+      ps.flatMap(p => helper.collectWithSubqueries(p) { case n => n }).flatMap {
+        case m: InMemoryTableScanExec if !cached.exists(_ eq m.relation.cachedPlan) =>
+          cached += m.relation.cachedPlan
+          m +: walk(Seq(m.relation.cachedPlan))
+        case n => Seq(n)
+      }
+    walk(plans)
+  }
+
+  test("knnJoinQuadtree resolving at its first level runs one cogroup over two exchanges") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val targets = (0 until 200).map(i => (i.toLong, 9.0 + (i % 20) * 0.1, 9.5 + (i / 20) * 0.1))
+      .toDF("tid", "tlon", "tlat")
+    val points = (0 until 50).map(i => (1000L + i, 9.55 + (i % 10) * 0.17, 9.6 + (i / 10) * 0.16))
+      .toDF("pid", "plon", "plat")
+    var rows = 0L
+    val plans = executedPlans(actions = 2) {
+      rows = operators.SpatialJoins.knnJoinQuadtree(points, "plon", "plat", "pid",
+        targets, "tlon", "tlat", "tid", k = 3, level = 4, maxRing = 1).collect().length
+      spark.catalog.clearCache()
+    }
+    assert(rows == 150L)
+    assert(plans.size == 2, s"actions: ${plans.size} (pending check + result)")
+    val names = allNodes(plans).map(_.getClass.getSimpleName)
+    assert(names.count(_ == "ShuffleExchangeExec") == 2, names.mkString(", "))
+    assert(names.count(_ == "CoGroupExec") == 1, names.mkString(", "))
+    val extra = names.filter(n => n == "HashAggregateExec" || n.endsWith("JoinExec") ||
+      n.startsWith("AppendColumns"))
+    assert(extra.isEmpty, s"unexpected operators: ${extra.mkString(", ")}")
+  }
+
+  test("knnJoinQuadtree answers every input row, also when keys repeat") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val cluster = for (i <- 0 until 10) yield (i.toLong + 1, 10.0 + (i % 5) * 0.001, 10.0 + (i / 5) * 0.001)
+    val targets = (cluster :+ ((99L, 100.001, -30.0))).toDF("tid", "tlon", "tlat")
+    // one probe resolves at level 10, the other (same key) only after coarsening
+    val probes = Seq((7L, 10.002, 10.0005), (7L, 100.0, -30.0))
+    val got = operators.SpatialJoins.knnJoinQuadtree(probes.toDF("pid", "plon", "plat"),
+        "plon", "plat", "pid", targets, "tlon", "tlat", "tid", k = 5, level = 10, maxRing = 1)
+      .select(col("pid"), col("__rank"), col("tid")).as[(Long, Int, Long)].collect().toSeq
+    val tgts = targets.as[(Long, Double, Double)].collect()
+    val want = probes.flatMap { case (pid, lon, lat) =>
+      tgts.map { case (tid, tl, tb) => (tid, Sphere.haversineDistance(lon, lat, tl, tb)) }
+        .sortBy { case (tid, d) => (d, tid) }.take(5).zipWithIndex
+        .map { case ((tid, _), i) => (pid, i + 1, tid) }
+    }
+    assert(got.sorted == want.sorted)
+    assert(got.filter(_._2 == 1).map(_._3).toSet == Set(99L, want.head._3))
+    // the window join ranks per key: both rows' candidates merge into one top-5
+    val perKey = operators.SpatialJoins.knnJoinBroadcast(probes.toDF("pid", "plon", "plat"),
+      "plon", "plat", "pid", targets, "tlon", "tlat", k = 5)
+    assert(perKey.count() == 5L)
+    spark.catalog.clearCache()
+  }
+
+  test("knnJoinQuadtree is exact across several coarsening rounds, the seam and the poles") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    // 300 targets in 6 tight clusters; 2,000 probes over the globe plus
+    // probes on the antimeridian and near both poles
+    val centers = Seq((-120.0, 40.0), (10.0, 50.0), (150.0, -35.0), (179.5, 5.0), (-60.0, -80.0), (30.0, 85.0))
+    val tgts = cloud(300, 7L).map { case (lon, lat, i) =>
+      val (cx, cy) = centers((i % centers.size).toInt)
+      (i, Sphere.normalizeLongitude(cx + lon / 180.0), Math.max(-89.9, Math.min(89.9, cy + lat / 90.0)))
+    }
+    val edge = Seq((179.9, 5.0), (-179.9, 5.2), (179.9, -40.0), (-179.9, 60.0),
+      (0.0, 89.5), (120.0, 89.5), (-60.0, -89.5), (100.0, -89.5))
+    val probes = cloud(2000, 11L).map { case (lon, lat, i) => (i, lon, lat) } ++
+      edge.zipWithIndex.map { case ((lon, lat), i) => (2000L + i, lon, lat) }
+    val targets = tgts.toSeq.toDF("tid", "tlon", "tlat")
+    val points = probes.toSeq.toDF("pid", "plon", "plat")
+    val fast = operators.SpatialJoins.knnJoinQuadtree(points, "plon", "plat", "pid",
+        targets, "tlon", "tlat", "tid", k = 5, level = 10, maxRing = 1)
+      .select(col("pid"), col("__rank").cast("int"), col("tid"), col("__dist"))
+      .as[(Long, Int, Long, Double)].collect().sorted.toSeq
+    val brute = operators.SpatialJoins.knnJoinBroadcast(points, "plon", "plat", "pid",
+        targets, "tlon", "tlat", k = 5)
+      .select(col("pid"), col("__rank").cast("int"), col("tid"), col("__dist"))
+      .as[(Long, Int, Long, Double)].collect().sorted.toSeq
+    spark.catalog.clearCache()
+    assert(fast.size == 5 * probes.length)
+    assert(fast == brute, s"first difference: ${fast.zip(brute).find(p => p._1 != p._2)}")
+    // a ring-1 level-8 neighbourhood proves at most two lat rows of
+    // 180/256 degrees: a 5th neighbour farther than that needs level <= 6
+    val level8Bound = Sphere.MeanEarthRadius * Math.toRadians(2 * 180.0 / 256)
+    assert(fast.count(h => h._2 == 5 && h._4 > level8Bound) > 0)
   }
 }

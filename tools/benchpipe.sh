@@ -6,14 +6,7 @@ C=""
 case "${1:-}" in
   SYNTH:*|/*) C="$1"; shift ;;
 esac
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm-opens.sh"
 # GC workers scale with the executor thread count: a fixed 8 starves
 # collections under a 32-thread allocation rate (longer pauses, 32
 # mutators stopped), eroding exactly the 4N leg of the scaling curve.

@@ -3,14 +3,7 @@
 # jars (no sbt in the loop). Usage: tools/run.sh <MainClass> [args...]
 set -e
 CLS="$1"; shift
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm-opens.sh"
 exec java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
   -cp "/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes:/opt/spark/jars/*" \
   "$CLS" "$@"
