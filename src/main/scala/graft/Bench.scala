@@ -62,20 +62,24 @@ object Bench {
     val results = (if (doQueries) SparkEntry.queries.toSeq.sortBy(_._1)
       else Seq.empty[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
       .map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try {
-          rowCounts(name) = fn(spark0, sfDir).count()
-        } catch { case e: Throwable =>
+      def guarded(body: => Unit): Unit =
+        try body catch { case e: Throwable =>
           errors(name) = (e.getClass.getSimpleName + ": " +
             Option(e.getMessage).getOrElse("").take(200))
             .replaceAll("[\"\\\\\\n\\r\\t]", " ")
         }
+      // a noop-sink write computes every projected column; a count()
+      // plan lets Catalyst drop the projected st_* calls
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        guarded(fn(spark0, sfDir).write.format("noop").mode("overwrite").save())
         (System.nanoTime() - t0) / 1e9
       }
       val cold = once()
       coldTotal += cold
-      name -> Math.min(cold, Math.min(once(), once()))
+      val best = Math.min(cold, Math.min(once(), once()))
+      if (!errors.contains(name)) guarded(rowCounts(name) = fn(spark0, sfDir).count())
+      name -> best
     }
     spark0.stop()
     SparkSession.clearActiveSession()

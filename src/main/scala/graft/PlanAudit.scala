@@ -224,12 +224,13 @@ object PlanAudit {
     spolys.select(col("pid").as("qa"), col("geom").as("gqa")).createOrReplaceTempView("sa")
     spolys.select(col("pid").as("qb"), col("geom").as("gqb")).createOrReplaceTempView("sb")
     audit("optimizer rule: st_intersects pair join -> covering equi-join",
-      "A geometry-pair theta join rewrites to dual covering explosion with\n" +
-        "the reporting-cell exactly-once filter (array_min of the covering\n" +
-        "intersection) — the partitionedSpatialJoin plan from plain SQL.",
+      "A geometry-pair theta join rewrites to dual bbox-covering explosion\n" +
+        "with the reference-point exactly-once filter (the cell of max xmin,\n" +
+        "max ymin) ahead of the predicate, and no covering array in the\n" +
+        "exchange — the partitionedSpatialJoin plan from plain SQL.",
       spark.sql("SELECT qa, qb FROM sa JOIN sb ON st_intersects(gqa, gqb) AND qa < qb"),
-      mustContain = Seq("covering", "array_min", "array_intersect"),
-      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin"))
+      mustContain = Seq("covering", "cellId"),
+      mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "array_intersect"))
 
     audit("q_dbscan: eps-pairs cell equi-join (DBSCAN front end)",
       "The epsilon-neighbourhood pair generation behind DBSCAN /\n" +

@@ -2082,7 +2082,7 @@ object Queries {
     }),
     "q_cluster_intersecting" -> ((s, d) => {
       // ST_ClusterIntersecting over the star ENVELOPES: candidate
-      // pairs from a covering-cell equi-join (min-common-cell
+      // pairs from a bbox-cell equi-join (reference-point
       // exactly-once rule), refined through the full relate kernel,
       // merged by connected components. Envelope coordinates are
       // exact, so the oracle's interval-overlap test reproduces the
@@ -3808,7 +3808,7 @@ object Queries {
          |  round(CASE WHEN dzdx = 0 AND dzdy = 0 THEN NULL ELSE
          |    CASE WHEN degrees(atan2(-dzdx, -dzdy)) < 0
          |         THEN degrees(atan2(-dzdx, -dzdy)) + 360e0
-         |         ELSE degrees(atan2(-dzdx, -dzdy)) END END, 6) AS aspect_deg,
+         |         ELSE degrees(atan2(-dzdx, -dzdy)) + 0e0 END END, 6) AS aspect_deg,
          |  round(greatest(255e0 * ($c1 * cos(atan(1e0 * sqrt(dzdx*dzdx + dzdy*dzdy)))
          |    + $s1 * sin(atan(1e0 * sqrt(dzdx*dzdx + dzdy*dzdy)))
          |      * cos($az - atan2(-dzdy, -dzdx))), 0e0), 6) AS hillshade

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.core.FlatGeom
+import graft.core.{FlatGeom, GeomKind}
 import graft.kernels.{Planar, Topo}
 import scala.collection.mutable.ArrayBuffer
 
@@ -110,35 +110,99 @@ object CellId {
     out.toArray
   }
 
+  // coveringForGeom's per-bbox-cell states
+  private final val Refined: Byte = 1
+  private final val FromVertex: Byte = 2
+
   /** Cells whose rectangle intersects the geometry at `level`: bbox
     * covering refined by an exact cell-rect × geometry intersects test
-    * (the partitioned-join covering; deterministic, no RNG). */
+    * (the partitioned-join covering; deterministic, no RNG). Order: the
+    * kept bbox cells row by row, then the cells of vertices that the
+    * refine dropped, in vertex order.
+    *
+    * An axis-aligned rectangle (what `st_envelope` returns) intersects
+    * every cell of its own bbox covering, so it skips the refine and
+    * returns exactly [[coveringForBbox]] — also where its coordinates
+    * lie outside the grid and clamp into the edge cells. */
   def coveringForGeom(level: Int, g: FlatGeom): Array[Long] = {
     if (g.isEmpty) return Array.emptyLongArray
     if (g.numPoints == 1) return Array(cellId(level, g.x(0), g.y(0)))
     val bb = Planar.boundingRect(g)
     val candidates = coveringForBbox(level, bb(0), bb(1), bb(2), bb(3))
-    val refined =
-      if (candidates.length <= 4) candidates // tiny coverings: keep all
-      else candidates.filter { id =>
-        val cb = bounds(id)
-        val cellRect = FlatGeom.rect(cb(0), cb(1), cb(2), cb(3))
-        Topo.intersects(cellRect, g)
-      }
+    if (isAxisRect(g, bb)) return candidates
+    // per bbox cell, row-major like `candidates`: Refined if the refine
+    // keeps it, FromVertex if only a vertex's cell brings it back
+    val state = new Array[Byte](candidates.length)
+    var nRefined = 0
+    var i = 0
+    while (i < candidates.length) {
+      // tiny coverings: keep all
+      if (candidates.length <= 4 || {
+        val cb = bounds(candidates(i))
+        Topo.intersects(FlatGeom.rect(cb(0), cb(1), cb(2), cb(3)), g)
+      }) { state(i) = Refined; nRefined += 1 }
+      i += 1
+    }
     // guarantee cellId↔covering consistency even for out-of-range
     // coordinates (cellId clamps them into the edge cells, whose rects
     // the raw geometry does not intersect) — a point's own cell must
-    // always be part of its geometry's covering or cell joins drop rows
-    val vertexCells = {
-      val s = scala.collection.mutable.LinkedHashSet[Long]()
-      var i = 0
-      while (i < g.numPoints) { s += cellId(level, g.x(i), g.y(i)); i += 1 }
-      s
+    // always be part of its geometry's covering or cell joins drop rows.
+    // cellX/cellY are monotone, so a vertex's cell lies in the bbox
+    // window and `state` dedupes it; only a NaN ordinate (which the bbox
+    // skips) falls outside, and those few cells are deduped by a scan.
+    val x0 = cellX(level, bb(0))
+    val y0 = cellY(level, bb(3))
+    val w = cellX(level, bb(2)) - x0 + 1
+    val h = cellY(level, bb(1)) - y0 + 1
+    val extra = new Array[Long](g.numPoints)
+    var nExtra = 0
+    i = 0
+    while (i < g.numPoints) {
+      val cx = cellX(level, g.x(i))
+      val cy = cellY(level, g.y(i))
+      val dx = cx - x0
+      val dy = cy - y0
+      if (dx >= 0 && dx < w && dy >= 0 && dy < h) {
+        val k = (dy * w + dx).toInt
+        if (state(k) == 0) { state(k) = FromVertex; extra(nExtra) = candidates(k); nExtra += 1 }
+      } else {
+        val id = pack(level, cx, cy)
+        var j = 0
+        while (j < nExtra && extra(j) != id) j += 1
+        if (j == nExtra) { extra(nExtra) = id; nExtra += 1 }
+      }
+      i += 1
     }
-    val out = scala.collection.mutable.LinkedHashSet[Long]()
-    refined.foreach(out += _)
-    vertexCells.foreach(out += _)
-    out.toArray
+    val out = new Array[Long](nRefined + nExtra)
+    var m = 0
+    i = 0
+    while (m < nRefined) {
+      if (state(i) == Refined) { out(m) = candidates(i); m += 1 }
+      i += 1
+    }
+    System.arraycopy(extra, 0, out, nRefined, nExtra)
+    out
+  }
+
+  /** A closed 5-point ring whose vertices are the corners of its bbox
+    * `bb`, each corner visited and every edge axis-aligned: the
+    * rectangle `bb` itself, or the segment or point it degenerates to. */
+  private def isAxisRect(g: FlatGeom, bb: Array[Double]): Boolean = {
+    if (g.kind != GeomKind.Polygon || g.numPoints != 5 || g.rings.length != 1 ||
+        g.x(4) != g.x(0) || g.y(4) != g.y(0)) return false
+    def corner(x: Double, y: Double): Int =
+      1 << ((if (x == bb(2)) 1 else 0) | (if (y == bb(3)) 2 else 0))
+    var seen = 0
+    var i = 0
+    while (i < 4) {
+      val x = g.x(i)
+      val y = g.y(i)
+      if ((x != bb(0) && x != bb(2)) || (y != bb(1) && y != bb(3)) ||
+          (g.x(i + 1) != x && g.y(i + 1) != y)) return false
+      seen |= corner(x, y)
+      i += 1
+    }
+    seen == (corner(bb(0), bb(1)) | corner(bb(2), bb(1)) | corner(bb(0), bb(3)) | corner(bb(2), bb(3)))
   }
 
   /** The 4 children of a cell at the next-finer level. */

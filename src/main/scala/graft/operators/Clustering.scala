@@ -124,26 +124,18 @@ object Clustering {
   }
 
   /** Connected components of the "geometries intersect" graph (the
-    * ST_ClusterIntersecting shape). Candidate pairs come from a
-    * covering-cell equi-join at `level` with the min-common-cell
-    * exactly-once rule (a pair sharing several cells reports once);
-    * candidates refine through the full relate kernel. Output
+    * ST_ClusterIntersecting shape). Candidate pairs come from
+    * [[SpatialJoins.partitionedSpatialJoin]] at `level` (bbox-cell
+    * equi-join, reference-point exactly-once rule), each unordered pair
+    * refined once through the full relate kernel. Output
     * (key, cluster = min member key). */
   def clusterIntersecting(geoms: DataFrame, keyCol: String, geomCol: String,
       level: Int): DataFrame = {
     val a = geoms.select(col(keyCol).cast("long").as("ka"), col(geomCol).as("__ga"))
-      .withColumn("__ca", gf.st_covering(lit(level), col("__ga")))
     val b = geoms.select(col(keyCol).cast("long").as("kb"), col(geomCol).as("__gb"))
-      .withColumn("__cb", gf.st_covering(lit(level), col("__gb")))
-    val ae = a.withColumn("__cell", explode(col("__ca")))
-    val be = b.withColumn("__cell", explode(col("__cb")))
-    // exactly-once: report a candidate pair only in the smallest cell
-    // the two coverings share (array_min over the in-row intersection
-    // — no distinct shuffle follows the equi-join)
-    val pairs = ae.join(be, Seq("__cell"))
-      .filter(col("ka") < col("kb"))
-      .filter(col("__cell") === array_min(array_intersect(col("__ca"), col("__cb"))))
-      .filter(gf.st_intersects(col("__ga"), col("__gb")))
+    // ka < kb ahead of the refine: each unordered pair is refined once
+    val pairs = SpatialJoins.partitionedSpatialJoin(a, "__ga", b, "__gb", level,
+      (ga, gb) => col("ka") < col("kb") && gf.st_intersects(ga, gb))
       .select(col("ka"), col("kb"))
     val selfLoops = geoms.select(col(keyCol).cast("long").as("u"))
       .withColumn("v", col("u"))

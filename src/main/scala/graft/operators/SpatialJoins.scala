@@ -160,26 +160,40 @@ object SpatialJoins {
   }
 
   /**
-   * Partitioned spatial join for two large geometry tables: explode
-   * both sides to coverings at `level`, equi-join on cell (shuffle is
-   * partitioned by cell — the north rule's "geometry bucketed into
-   * cells as the partitioning key"), refine exactly, then de-duplicate
-   * pairs that met in several cells WITHOUT a distinct-shuffle: a pair
-   * is kept only in the lexicographically-first shared cell
-   * (the standard "reference point" / reporting-cell trick).
+   * Partitioned spatial join for two large geometry tables: each side
+   * replicates to the cells of its bounding box at `level`
+   * (`st_covering(level, st_envelope(g))`) and the sides equi-join on
+   * cell (the shuffle is partitioned by cell — the north rule's
+   * "geometry bucketed into cells as the partitioning key"). A pair
+   * whose bboxes share k cells meets k times; the reference-point rule
+   * (Dittrich & Seeger, ICDE 2000) keeps it only in the cell of
+   * (max(xmin_a, xmin_b), max(ymin_a, ymin_b)), so no distinct shuffle
+   * follows and each side carries two doubles, not a covering array.
+   *
+   * Exactly once: every supported predicate (intersects, contains,
+   * within, covers, coveredby) implies that the two bboxes overlap, and
+   * then the reference point lies in both of them. `CellId.cellX` and
+   * `cellY` are monotone floors with the clamping `coveringForBbox`
+   * uses, so the reference point's cell is in both bbox coverings: the
+   * pair meets in that cell, and in no other cell does the filter hold.
+   * This needs the FULL bbox coverings — over refined coverings the
+   * reference cell can be missing from one side and the pair is lost.
+   *
+   * The reference-cell filter runs before the predicate, so each
+   * candidate pair is refined once, not once per shared cell.
    */
   def partitionedSpatialJoin(a: DataFrame, aGeom: String, b: DataFrame, bGeom: String,
       level: Int, predicate: (Column, Column) => Column = st_intersects): DataFrame = {
-    val ae = a.withColumn("__cells_a", st_covering(lit(level), col(aGeom)))
-      .withColumn("__cell", explode(col("__cells_a")))
-    val be = b.withColumn("__cells_b", st_covering(lit(level), col(bGeom)))
-      .withColumn("__cell", explode(col("__cells_b")))
-    ae.join(be, Seq("__cell"), "inner")
+    def side(df: DataFrame, geom: String, tag: String): DataFrame = df
+      .withColumn(s"__xmin_$tag", st_xmin(col(geom)))
+      .withColumn(s"__ymin_$tag", st_ymin(col(geom)))
+      .withColumn("__cell", explode(st_covering(lit(level), st_envelope(col(geom)))))
+    val refCell = st_cellid(lit(level),
+      greatest(col("__xmin_a"), col("__xmin_b")), greatest(col("__ymin_a"), col("__ymin_b")))
+    side(a, aGeom, "a").join(side(b, bGeom, "b"), Seq("__cell"), "inner")
+      .filter(col("__cell") === refCell)
       .filter(predicate(col(aGeom), col(bGeom)))
-      // reporting-cell dedupe: keep the pair only where the join cell is
-      // the smallest cell present in BOTH coverings
-      .filter(col("__cell") === array_min(array_intersect(col("__cells_a"), col("__cells_b"))))
-      .drop("__cell", "__cells_a", "__cells_b")
+      .drop("__cell", "__xmin_a", "__ymin_a", "__xmin_b", "__ymin_b")
   }
 
   /**

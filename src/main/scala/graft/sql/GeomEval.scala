@@ -1452,8 +1452,8 @@ object GeomEval {
     }
   }
 
-  def covering(level: Int, r: InternalRow): GenericArrayData =
-    new GenericArrayData(CellId.coveringForGeom(level, g(r)))
+  def covering(level: Int, r: InternalRow): UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(CellId.coveringForGeom(level, g(r)))
 
   def cellBounds(id: Long): InternalRow = {
     val b = CellId.bounds(id)

@@ -37,15 +37,20 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
  *
  * 3. Geometry-pair predicates: `st_intersects(a, b)` (also contains /
  *    within / covers / coveredby — all imply bbox overlap, so the
- *    same candidate cells work). BOTH sides explode their coverings
- *    and each side carries its covering array through the join; the
- *    reporting-cell condition
- *        cell = array_min(array_intersect(cov_l, cov_r))
- *    keeps exactly one of the shared cells per pair (two
- *    intersecting geometries always share ≥1 covering cell: a point
- *    of the intersection lies in one grid cell, which intersects
- *    both geometries and both bboxes), so no post-join distinct is
- *    needed — the dedupe is a codegen'd filter.
+ *    same candidate cells work). Each side computes its bbox's
+ *    (xmin, ymin) and explodes `covering(level, envelope(g))`, the
+ *    FULL covering of its bbox; the sides equi-join on cell, and the
+ *    reference-point rule (Dittrich & Seeger, ICDE 2000)
+ *        cell = cellId(level, greatest(xmin_l, xmin_r),
+ *                             greatest(ymin_l, ymin_r))
+ *    keeps exactly one of the shared cells per pair: if the bboxes
+ *    overlap, the point (max xmin, max ymin) lies in both, and cellX /
+ *    cellY are monotone floors clamped like `coveringForBbox`, so its
+ *    cell is in both bbox coverings. No post-join distinct, and no
+ *    covering array crosses the exchange — two doubles per side. The
+ *    reference test is the first condition after the cell key, so the
+ *    predicate refines each candidate pair once, not once per shared
+ *    cell.
  *
  * Registered via `spark.experimental.extraOptimizations`
  * (functions.registerOptimizations) or GraftExtensions.
@@ -245,21 +250,22 @@ case class SpatialJoinRule(level: Int = 6) extends Rule[LogicalPlan] with Predic
     hit.map { case (gA, gB) =>
       val (gLeft, gRight) = if (gA.references.subsetOf(left.outputSet)) (gA, gB) else (gB, gA)
 
+      // the side, its bbox's (xmin, ymin), one row per bbox cell
       def coverSide(side: LogicalPlan, g: Expression, tag: String)
-        : (LogicalPlan, AttributeReference, AttributeReference) = {
-        val covAttr = AttributeReference(s"__graft_cov_$tag",
-          ArrayType(LongType, containsNull = false), nullable = true)()
-        val proj = Project(side.output :+
-          Alias(StCovering(Literal(level), g), s"__graft_cov_$tag")(exprId = covAttr.exprId), side)
-        val cellAttr = AttributeReference(s"__graft_cell_$tag", LongType, nullable = false)()
-        val gen = Generate(Explode(covAttr), Nil, outer = false, None, Seq(cellAttr), proj)
-        (gen, covAttr, cellAttr)
+        : (LogicalPlan, Attribute, Attribute, Attribute) = {
+        val xmin = Alias(StXMin(g), s"__graft_xmin_$tag")()
+        val ymin = Alias(StYMin(g), s"__graft_ymin_$tag")()
+        val cell = AttributeReference(s"__graft_cell_$tag", LongType, nullable = false)()
+        val gen = Generate(Explode(StCovering(Literal(level), StEnvelope(g))), Nil,
+          outer = false, None, Seq(cell), Project(side.output ++ Seq(xmin, ymin), side))
+        (gen, cell, xmin.toAttribute, ymin.toAttribute)
       }
 
-      val (lGen, lCov, lCell) = coverSide(left, gLeft, "l")
-      val (rGen, rCov, rCell) = coverSide(right, gRight, "r")
-      // exactly-once: keep only the minimum shared covering cell
-      val reporting = EqualTo(lCell, ArrayMin(ArrayIntersect(lCov, rCov)))
+      val (lGen, lCell, lx, ly) = coverSide(left, gLeft, "l")
+      val (rGen, rCell, rx, ry) = coverSide(right, gRight, "r")
+      // exactly-once, ahead of the predicate: the reference cell
+      val reporting = EqualTo(lCell,
+        StCellId(Literal(level), Greatest(Seq(lx, rx)), Greatest(Seq(ly, ry))))
       val newCond = (Seq(EqualTo(lCell, rCell), reporting) ++ conjuncts).reduce(And)
       Project(left.output ++ right.output,
         Join(lGen, rGen, Inner, Some(newCond), hint))

@@ -1631,6 +1631,74 @@ class RuleSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"missing=${(brute -- gotSet).take(5)} extra=${(gotSet -- brute).take(5)}")
   }
 
+  /** One side of the mixed pair-join inputs (level 6 cells are 5.625° ×
+    * 2.8125°): 16-vertex stars, 256-vertex stars spanning many cells,
+    * points, squares and points on the cell edges lon 5.625 / lat 2.8125,
+    * and geometries beyond ±180 / ±90 (some wholly off the grid). */
+  private def mixedSide(seed: Int): Seq[graft.core.FlatGeom] = {
+    import graft.core.FlatGeom
+    val r = new scala.util.Random(seed)
+    def star(cx: Double, cy: Double, rad: Double, n: Int): FlatGeom = {
+      val ring = (0 until n).flatMap { i =>
+        val a = 2 * math.Pi * i / n
+        val rr = rad * (0.4 + 0.6 * r.nextDouble())
+        Seq(cx + rr * math.cos(a), cy + rr * math.sin(a))
+      }.toArray
+      FlatGeom.polygon(ring ++ ring.take(2))
+    }
+    def lon = r.nextDouble() * 60 - 30
+    def lat = r.nextDouble() * 40 - 20
+    val e = 5.625
+    val f = 2.8125
+    Seq.fill(40)(star(lon, lat, 0.5 + 3 * r.nextDouble(), 16)) ++
+      Seq.fill(4)(star(lon, lat, 8 + 10 * r.nextDouble(), 256)) ++
+      Seq.fill(15)(FlatGeom.point(lon, lat)) ++
+      (if (seed % 2 == 0)
+        Seq(FlatGeom.rect(e - 1, 0, e, 2), FlatGeom.rect(0, f - 1, 1, f),
+          FlatGeom.rect(e - 1, f - 1, e, f), FlatGeom.point(e - 0.5, 1),
+          star(185, 10, 3, 16), FlatGeom.rect(181, 91, 184, 93), FlatGeom.point(190, 95),
+          star(-183, -95, 4, 16))
+      else
+        Seq(FlatGeom.rect(e, 0.5, e + 1, 2.5), FlatGeom.rect(0.5, f, 2, f + 1),
+          FlatGeom.rect(e, f, e + 1, f + 1), FlatGeom.point(e, 1), FlatGeom.point(e, f),
+          star(186, 11, 3, 16), FlatGeom.rect(182, 92, 185, 94), FlatGeom.point(190, 95),
+          FlatGeom.rect(-185, -100, -181, -92)))
+  }
+
+  test("geometry-pair joins, operator and rule, return every pair exactly once on mixed inputs") {
+    graft.sql.functions.registerOptimizations(spark)
+    import spark.implicits._
+    def frame(seed: Int, id: String, g: String) =
+      mixedSide(seed).zipWithIndex.map { case (geom, i) => (i.toLong, graft.core.Wkt.write(geom)) }
+        .toDF(id, "wkt").select(col(id), gf.st_geomfromtext(col("wkt")).as(g))
+    val pa = frame(2, "pa", "ga")
+    val pb = frame(3, "pb", "gb")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select("pa", "pb").collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    val predicates: Seq[(String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+      org.apache.spark.sql.Column)] = Seq(
+      "st_intersects" -> gf.st_intersects, "st_contains" -> gf.st_contains,
+      "st_within" -> gf.st_within, "st_covers" -> gf.st_covers,
+      "st_coveredby" -> gf.st_coveredby)
+    predicates.foreach { case (name, pred) =>
+      val bruteDf = pa.crossJoin(pb).filter(pred(col("ga"), col("gb")))
+      assert(!bruteDf.queryExecution.optimizedPlan.toString.contains("covering"))
+      val brute = pairs(bruteDf)
+      assert(brute.nonEmpty && brute.distinct.size == brute.size, name)
+      def check(what: String, got: Seq[(Long, Long)]): Unit = {
+        assert(got.size == got.distinct.size, s"$name $what: duplicate pairs")
+        assert(got.toSet == brute.toSet, s"$name $what: " +
+          s"missing=${(brute.toSet -- got).take(5)} extra=${(got.toSet -- brute).take(5)}")
+      }
+      for (level <- Seq(6, 9))
+        check(s"operator level $level",
+          pairs(operators.SpatialJoins.partitionedSpatialJoin(pa, "ga", pb, "gb", level, pred)))
+      val ruled = pa.join(pb, pred(col("ga"), col("gb")))
+      assert(ruled.queryExecution.optimizedPlan.toString.contains("covering"), name)
+      check("rule", pairs(ruled))
+    }
+  }
+
   test("an ordinary equi-conjunct disables the spatial rewrite (hash join wins)") {
     graft.sql.functions.registerOptimizations(spark)
     val pts = Queries.customerPoints(spark, "/root/testdata/sf0.001")

@@ -7,6 +7,8 @@ Usage: compare.py <verify_out_dir> <sf_dir> [query ...]
 """
 import sys, json, glob, os
 import duckdb
+import numpy as np
+import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -53,12 +55,23 @@ def main():
             for c in s_cols:
                 sa, sb = spark_df[c], ora_df[c]
                 if sa.dtype != sb.dtype:
-                    import pandas as pd
                     if pd.api.types.is_numeric_dtype(sa) and                        pd.api.types.is_numeric_dtype(sb):
                         spark_df[c] = sa.astype("float64")
                         ora_df[c] = sb.astype("float64")
-            a = spark_df[s_cols].sort_values(s_cols).reset_index(drop=True)
-            b = ora_df[s_cols].sort_values(s_cols).reset_index(drop=True)
+            # pandas equality treats -0.0 == 0.0: one sign-bit column per
+            # float column (False for NaN) makes a signed zero a difference
+            # and orders rows that differ only in a zero's sign
+            keys = list(s_cols)
+            a, b = spark_df[s_cols].copy(), ora_df[s_cols].copy()
+            for c in s_cols:
+                if pd.api.types.is_float_dtype(a[c]) and \
+                        pd.api.types.is_float_dtype(b[c]):
+                    for df in (a, b):
+                        v = df[c].to_numpy(dtype="float64", na_value=np.nan)
+                        df["signbit(" + c + ")"] = np.signbit(v) & ~np.isnan(v)
+                    keys.append("signbit(" + c + ")")
+            a = a.sort_values(keys).reset_index(drop=True)
+            b = b.sort_values(keys).reset_index(drop=True)
             r["rows_match"] = len(a) == len(b)
             r["hash_match"] = bool(len(a) == len(b) and a.equals(b))
             if not r["hash_match"] and len(a) == len(b):
