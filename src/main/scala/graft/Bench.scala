@@ -30,6 +30,22 @@ object Bench {
     s
   }
 
+  /** This JVM's own `--add-opens` flags (from build.sbt's javaOptions
+    * or tools/jvm-opens.sh), for the child JVMs it starts. */
+  private[graft] def addOpensOfThisJvm: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val args = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toIndexedSeq
+    val opens = args.indices.flatMap { i =>
+      if (args(i).startsWith("--add-opens=")) Seq(args(i))
+      else if (args(i) == "--add-opens" && i + 1 < args.length) Seq(args(i), args(i + 1))
+      else Nil
+    }
+    if (opens.isEmpty) throw new IllegalStateException(
+      "bench: this JVM was started without --add-opens flags, so its child JVMs " +
+        "could not start Spark; run it through sbt or tools/run.sh")
+    opens
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -95,18 +111,10 @@ object Bench {
       try org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File("BENCH/trials")) catch { case _: Throwable => }
       var trialSeq = 0
+      val addOpens = addOpensOfThisJvm
       def runMain(mainClass: String, threads: Int, extra: String*): Double = {
         val javaBin = System.getProperty("java.home") + "/bin/java"
         val cp = System.getProperty("java.class.path")
-        val addOpens = Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar"
-        ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
         // fixed pre-touched heap + GC threads scaled with the executor
         // thread count (the tools/benchpipe.sh rule): heap
         // grow/uncommit page-fault storms cost 20+ kernel-CPUs at 32

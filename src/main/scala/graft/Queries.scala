@@ -83,8 +83,8 @@ object Queries {
     * (b) no customer probe point (1/20-lattice) can ever land on a
     * vertex or edge: 320·(probe coord) is even while 320·(any comb
     * boundary coord at a probe x) is odd, so strict ray-cast parity is
-    * boundary-case-free. ≥128 vertices engages the monotone-subdivision
-    * O(log n) PIP path in st_contains_xy (GeomEval.MonoThreshold). */
+    * boundary-case-free. ≥128 vertices engages the y-slab edge index
+    * PIP path in st_contains_xy (GeomCache.MonoThreshold). */
   def combVertices(i: Int): Seq[(Double, Double)] = {
     val cx = ((i * 67) % 300) - 150 + 0.5
     val cy = ((i * 41) % 120) - 60 + 0.5
@@ -1636,8 +1636,8 @@ object Queries {
     }),
     "q_monotone_pip" -> ((s, d) => {
       // every customer probed against its own nation's 131-vertex comb
-      // polygon — big enough to engage the monotone-subdivision
-      // O(log n) PIP inside st_contains_xy (see combVertices for the
+      // polygon — big enough to engage the y-slab edge index PIP
+      // inside st_contains_xy (see combVertices for the
       // boundary-case-free construction)
       customerPoints(s, d)
         .join(combPolys(s, d), col("c_nationkey") === col("pid"))

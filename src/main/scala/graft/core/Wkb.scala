@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.{BufferUnderflowException, ByteBuffer, ByteOrder}
 
 /**
  * Well-Known Binary codec (OGC SFA part 1, §8.2.8) for the six
@@ -112,10 +112,9 @@ object Wkb {
     }
   }
 
-  def read(bytes: Array[Byte]): FlatGeom = {
-    val buf = ByteBuffer.wrap(bytes)
-    readGeom(buf, force2D = false)
-  }
+  /** The geometry of `bytes`; IllegalArgumentException when they are
+    * malformed, truncated or of an unsupported type. */
+  def read(bytes: Array[Byte]): FlatGeom = parse(bytes, force2D = false)
 
   def readOpt(bytes: Array[Byte]): Option[FlatGeom] =
     try Some(read(bytes)) catch { case _: Exception => None }
@@ -125,13 +124,14 @@ object Wkb {
     * extra ordinate(s) read and DROPPED per point. The default reader
     * keeps the typed rejection contract — this is the opt-in escape
     * hatch for PostGIS-sourced corpora. */
-  def readForce2D(bytes: Array[Byte]): FlatGeom = {
-    val buf = ByteBuffer.wrap(bytes)
-    readGeom(buf, force2D = true)
-  }
+  def readForce2D(bytes: Array[Byte]): FlatGeom = parse(bytes, force2D = true)
 
   def readForce2DOpt(bytes: Array[Byte]): Option[FlatGeom] =
     try Some(readForce2D(bytes)) catch { case _: Exception => None }
+
+  private def parse(bytes: Array[Byte], force2D: Boolean): FlatGeom =
+    try readGeom(ByteBuffer.wrap(bytes), force2D)
+    catch { case e: BufferUnderflowException => throw new IllegalArgumentException("wkb: truncated", e) }
 
   private def readGeom(buf: ByteBuffer, force2D: Boolean): FlatGeom = {
     val order = buf.get()
@@ -168,32 +168,45 @@ object Wkb {
         if (x.isNaN && y.isNaN) FlatGeom.empty else FlatGeom.point(x, y)
       case TLineString => FlatGeom.lineString(readCoords(buf, extra))
       case TPolygon =>
-        val nRings = buf.getInt()
+        val nRings = readCount(buf, 4)
         val rings = (0 until nRings).map(_ => readCoords(buf, extra))
         if (rings.isEmpty) FlatGeom.polygon(Array.emptyDoubleArray)
         else FlatGeom.polygon(rings.head, rings.tail)
       case TMultiPoint =>
-        val n = buf.getInt()
+        val n = readCount(buf, 21)
         val cs = new Array[Double](2 * n)
         var i = 0
         while (i < n) {
           val p = readGeom(buf, force2D)
+          if (p.kind != GeomKind.Point || p.isEmpty)
+            throw new IllegalArgumentException("wkb: multipoint member is not a point")
           cs(2 * i) = p.x(0); cs(2 * i + 1) = p.y(0)
           i += 1
         }
         FlatGeom.multiPoint(cs)
       case TMultiLineString =>
-        val n = buf.getInt()
+        val n = readCount(buf, 9)
         FlatGeom.multiLineString((0 until n).map(_ => readGeom(buf, force2D).coords))
       case TMultiPolygon =>
-        val n = buf.getInt()
+        val n = readCount(buf, 9)
         FlatGeom.multiPolygon((0 until n).map(_ => readGeom(buf, force2D)))
       case other => throw new IllegalArgumentException(s"wkb: unsupported type $other")
     }
   }
 
-  private def readCoords(buf: ByteBuffer, extra: Int): Array[Double] = {
+  /** A count read from the buffer, checked against the bytes left
+    * before anything is allocated for it: each counted item takes at
+    * least `minBytes` (a point 16 + 8 per extra ordinate, a multipoint
+    * member 21, a ring's count 4, a member's header and count 9). */
+  private def readCount(buf: ByteBuffer, minBytes: Int): Int = {
     val n = buf.getInt()
+    if (n < 0 || n > buf.remaining() / minBytes)
+      throw new IllegalArgumentException(s"wkb: count $n exceeds the ${buf.remaining()} bytes left")
+    n
+  }
+
+  private def readCoords(buf: ByteBuffer, extra: Int): Array[Double] = {
+    val n = readCount(buf, 16 + 8 * extra)
     val cs = new Array[Double](2 * n)
     var i = 0
     while (i < n) {

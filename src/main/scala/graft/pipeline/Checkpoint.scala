@@ -69,11 +69,16 @@ final class Checkpoint(spark: SparkSession, root: String) {
       s"""{"stage":"$stageName","snapshot_id":"$snapshotId","row_count":$rowCount,
          |"partitions":$partJson,"wall_ms":$wallMs,"rows_per_sec":$rowsPerSec,
          |"schema":"${persisted.schema.catalogString.replace("\"", "'")}"}""".stripMargin
+    // written beside the manifest and renamed into place, so a crash
+    // mid-write leaves no manifest (the stage rebuilds), never a torn one
     val mp = manifestPath(stageName)
+    val tmp = new Path(mp.getParent, "manifest.json.tmp")
     val mfs = fs(mp)
     mfs.mkdirs(mp.getParent)
-    val out = mfs.create(mp, true)
+    val out = mfs.create(tmp, true)
     try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!mfs.rename(tmp, mp))
+      throw new java.io.IOException(s"checkpoint: could not rename $tmp to $mp")
     persisted
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** One cached geometry: the decoded polygon, the bytes it was decoded
   * from (null for a literal row, which is matched by identity) and its
-  * monotone index, built on the first point query. */
+  * y-slab edge index, built on the first point query. */
 private[sql] final class CachedGeom(val geom: FlatGeom, val snap: Array[Byte]) {
   private[sql] var index: Monotone.Prepared = _
   private[sql] var indexTried = false
@@ -36,9 +36,11 @@ private[sql] final class CachedGeom(val geom: FlatGeom, val snap: Array[Byte]) {
  *  - a `GenericInternalRow` (constant-folded literal, row built by
  *    another `st_*` call) is immutable and goes through a two-entry
  *    identity memo holding the same entry type;
- *  - an entry's `Monotone.Prepared` index is built on its first
- *    `coordPos`, only for polygons of at least [[GeomCache.MonoThreshold]]
- *    vertices; a failed prepare is remembered and not retried.
+ *  - an entry's y-slab edge index (`Monotone.Prepared`: 4 bytes per
+ *    edge and slab it reaches, at most 8 slabs per edge on average) is
+ *    built on its first `coordPos`, only for polygons of at least
+ *    [[GeomCache.MonoThreshold]] vertices; a failed prepare is
+ *    remembered and not retried.
  *
  * Entries are bounded by retained bytes (snapshot + decoded arrays +
  * index), [[GeomCache.BudgetBytes]] per thread, so a 300–400-polygon
@@ -66,7 +68,7 @@ private[sql] final class GeomCache {
   private var prepared = 0L
   private var retained = 0L
 
-  /** Monotone indexes built by this thread. */
+  /** Slab edge indexes built by this thread. */
   def prepares: Long = prepared
   def retainedBytes: Long = retained
 
@@ -193,7 +195,7 @@ private[sql] object GeomCache {
   final val MinBytes = 128
   final val MaxBytes = 256 << 10
   /** Polygons below this many vertices stay on the O(n) ray cast: the
-    * monotone index costs more than it saves on them. */
+    * slab edge index costs more than it saves on them. */
   final val MonoThreshold = 128
   private final val Slots = 2048
   private final val Ways = 8

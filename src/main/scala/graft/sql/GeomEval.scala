@@ -22,7 +22,7 @@ object GeomEval {
     * thread and keep their prepared point-in-polygon index. */
   @inline private def g(r: InternalRow): FlatGeom = GeomCache.get.geom(r)
 
-  /** Monotone indexes built by the calling thread (tests). */
+  /** Slab edge indexes built by the calling thread (tests). */
   private[graft] def prepareCount: Long = GeomCache.get.prepares
 
   /** Bytes the calling thread's geometry cache retains (tests). */
@@ -346,8 +346,9 @@ object GeomEval {
 
   /** Hot path of the join refine: polygon struct contains raw (x, y),
     * without building a point row. Polygons of 128 vertices or more
-    * answer from their cached monotone index in O(log n) (reference
-    * monotone/mod.rs); smaller ones take the O(n) ray cast. */
+    * answer from their cached y-slab edge index, which runs the ray
+    * cast over the edges of the point's slab only; smaller ones take
+    * the O(n) ray cast. */
   def containsXY(a: InternalRow, x: Double, y: Double): Boolean =
     GeomCache.get.coordPos(a, x, y) == Planar.Inside
 

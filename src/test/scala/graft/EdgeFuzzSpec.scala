@@ -216,4 +216,63 @@ class EdgeFuzzSpec extends AnyFunSuite {
       "st_cellid(28, st_x(pa), st_y(pa))",
       "st_astext(st_cell_bounds(st_cellid(12, st_x(pa), st_y(pa))))"), 5)
   }
+
+  test("forged WKB counts are refused before they are allocated") {
+    import graft.core.Wkb
+    // a 25-byte little-endian LineString: one point of payload after
+    // the count; 0x3FFFFFFF once asked for an array over the VM limit
+    // (an Error), 0x08000000 for 2 GB before the read ran out
+    for (count <- Seq(0x3FFFFFFF, 0x08000000, 2, -1)) {
+      val b = java.nio.ByteBuffer.allocate(25).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put(1.toByte).putInt(2).putInt(count).putDouble(1.0).putDouble(2.0)
+      assert(Wkb.readOpt(b.array()).isEmpty, s"count $count")
+      intercept[IllegalArgumentException](Wkb.read(b.array()))
+    }
+    val multi = java.nio.ByteBuffer.allocate(9).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    multi.put(1.toByte).putInt(4).putInt(0x3FFFFFFF)
+    intercept[IllegalArgumentException](Wkb.read(multi.array()))
+  }
+
+  test("mutated WKB of every kind parses, or is refused with IllegalArgumentException") {
+    import graft.core.{Wkb, Wkt}
+    val seeds = Seq("POINT(1 2)", "LINESTRING(0 0,1 1,2 0)",
+      "POLYGON((0 0,4 0,4 4,0 4,0 0),(1 1,2 1,2 2,1 1))", "MULTIPOINT((0 0),(1 1))",
+      "MULTILINESTRING((0 0,1 1),(2 2,3 3))",
+      "MULTIPOLYGON(((0 0,1 0,1 1,0 0)),((5 5,6 5,6 6,5 5),(5.2 5.1,5.8 5.1,5.8 5.7,5.2 5.1)))")
+      .map(Wkt.read)
+    val bases = seeds.map(Wkb.write) ++ seeds.map(Wkb.writeEwkb(_, 4326))
+    val counts = Array(0x3FFFFFFF, 0x08000000, 0x7FFFFFFF, -1, 0, 1, 3)
+    val rnd = new java.util.SplittableRandom(4096)
+    val mutated = for (base <- bases; _ <- 0 until 1500) yield {
+      val b = base.clone()
+      rnd.nextInt(3) match {
+        case 0 => // flip one to three bits
+          (0 to rnd.nextInt(3)).foreach { _ =>
+            val i = rnd.nextInt(b.length); b(i) = (b(i) ^ (1 << rnd.nextInt(8))).toByte
+          }
+          b
+        case 1 => java.util.Arrays.copyOf(b, rnd.nextInt(b.length))
+        case _ => // overwrite four bytes, as a count would be, in either order
+          val i = rnd.nextInt(b.length - 3)
+          val c = if (rnd.nextBoolean()) counts(rnd.nextInt(counts.length)) else rnd.nextInt()
+          java.nio.ByteBuffer.wrap(b, i, 4).order(
+            if (rnd.nextBoolean()) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN).putInt(c)
+          b
+      }
+    }
+    val bad = mutated.flatMap { b =>
+      Seq[Array[Byte] => Any](Wkb.read, Wkb.readForce2D).flatMap { read =>
+        try { read(b); None }
+        catch {
+          case _: IllegalArgumentException => None
+          case t: Throwable => Some(s"${t.getClass.getName} on ${b.map("%02x".format(_)).mkString}")
+        }
+      }
+    }
+    if (bad.nonEmpty) fail(s"${bad.length} of ${2 * mutated.length} reads threw otherwise, first: ${bad.head}")
+    // through SQL every row is a geometry or null, and the task survives
+    val rows = spark.createDataFrame(mutated.map(Tuple1.apply)).toDF("b")
+      .selectExpr("st_geomfromwkb(b) IS NULL AS n").collect()
+    assert(rows.length == mutated.length && rows.exists(_.getBoolean(0)) && rows.exists(!_.getBoolean(0)))
+  }
 }

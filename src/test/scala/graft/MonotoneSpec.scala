@@ -5,8 +5,8 @@ import graft.core.Wkt
 import graft.kernels.{Monotone, Planar}
 
 /**
- * Monotone subdivision PIP must agree with the exact ray cast
- * everywhere — including ON boundaries and on inserted diagonals.
+ * The slab edge index's PIP must agree with the exact ray cast
+ * everywhere, boundaries included.
  */
 class MonotoneSpec extends AnyFunSuite {
 
@@ -60,7 +60,7 @@ class MonotoneSpec extends AnyFunSuite {
     val g = graft.core.FlatGeom.polygon(line.coords)
     val prep = Monotone.prepare(g)
     assert(prep != null, "louisiana prepare failed")
-    assert(prep.pieces.length > 1)
+    assert(prep.slabs > 1)
     // deterministic probe grid over the bbox
     val bb = Planar.boundingRect(g)
     var mismatches = 0
@@ -119,5 +119,76 @@ class MonotoneSpec extends AnyFunSuite {
     }
     assert(onEdge > 500, s"only $onEdge probes inside edges")
     assert(mismatches == 0, s"$mismatches/10000 mismatches, first: $firstBad")
+  }
+
+  test("slab index matches ray cast on seeded lattice (multi)polygons with holes") {
+    // integer vertices: midpoints are exact, edges are often horizontal,
+    // vertical or repeated, and lattice probes land on many edges
+    val rnd = new java.util.SplittableRandom(808)
+    def ring(cx: Int, cy: Int, r: Int, n: Int): Array[Double] = {
+      val cs = new Array[Double](2 * (n + 1))
+      (0 until n).foreach { i =>
+        val a = 2 * math.Pi * i / n
+        val rr = r * (0.3 + 0.7 * rnd.nextDouble())
+        cs(2 * i) = cx + math.rint(rr * math.cos(a))
+        cs(2 * i + 1) = cy + math.rint(rr * math.sin(a))
+      }
+      cs(2 * n) = cs(0); cs(2 * n + 1) = cs(1)
+      if (rnd.nextBoolean()) { // reverse: CW and CCW rings both occur
+        val rev = new Array[Double](cs.length)
+        (0 to n).foreach { i => rev(2 * i) = cs(2 * (n - i)); rev(2 * i + 1) = cs(2 * (n - i) + 1) }
+        rev
+      } else cs
+    }
+    var probes = 0L
+    var mismatches = 0
+    var firstBad = ""
+    (0 until 600).foreach { k =>
+      val parts = (0 until 1 + rnd.nextInt(3)).map { _ =>
+        val cx = rnd.nextInt(-60, 61); val cy = rnd.nextInt(-60, 61)
+        val r = 10 + rnd.nextInt(60)
+        val holes = (0 until rnd.nextInt(3)).map { _ =>
+          ring(cx + rnd.nextInt(-r / 3, r / 3 + 1), cy + rnd.nextInt(-r / 3, r / 3 + 1),
+            2 + rnd.nextInt(r / 3), 3 + rnd.nextInt(40))
+        }
+        graft.core.FlatGeom.polygon(ring(cx, cy, r, 3 + rnd.nextInt(250)), holes)
+      }
+      val g = if (parts.length == 1) parts.head else graft.core.FlatGeom.multiPolygon(parts)
+      val prep = Monotone.prepare(g)
+      assert(prep != null, s"polygon $k: prepare failed")
+      def probe(x: Double, y: Double): Unit = {
+        probes += 1
+        val want = Planar.coordPos(g, x, y)
+        val got = prep.coordPos(x, y)
+        if (got != want) {
+          if (mismatches == 0) firstBad = s"polygon $k ($x,$y) got=$got want=$want"
+          mismatches += 1
+        }
+      }
+      (0 until g.numPoints).foreach { i =>
+        probe(g.x(i), g.y(i))
+        if (i + 1 < g.numPoints) probe((g.x(i) + g.x(i + 1)) / 2, (g.y(i) + g.y(i + 1)) / 2)
+      }
+      val bb = Planar.boundingRect(g)
+      val step = 1 + ((bb(2) - bb(0)) max (bb(3) - bb(1))).toInt / 40
+      (bb(0).toInt - 1 to bb(2).toInt + 1 by step).foreach { x =>
+        (bb(1).toInt - 1 to bb(3).toInt + 1 by step).foreach(y => probe(x, y))
+      }
+      (0 until 2000).foreach { _ =>
+        probe(rnd.nextDouble(bb(0) - 1, bb(2) + 1), rnd.nextDouble(bb(1) - 1, bb(3) + 1))
+      }
+    }
+    info(s"$probes probes")
+    assert(mismatches == 0, s"$mismatches/$probes mismatches, first: $firstBad")
+  }
+
+  test("prepare refuses a ring of 3 points and a NaN ordinate") {
+    import graft.core.{FlatGeom, GeomKind}
+    val open = new FlatGeom(GeomKind.Polygon, Array(0.0, 0, 4, 0, 0, 4), Array(3), Array.emptyIntArray)
+    assert(Monotone.prepare(open) == null)
+    val square = Array(0.0, 0, 4, 0, 4, 4, 0, 4, 0, 0)
+    assert(Monotone.prepare(FlatGeom.polygon(square)) != null)
+    square(5) = Double.NaN
+    assert(Monotone.prepare(FlatGeom.polygon(square)) == null)
   }
 }

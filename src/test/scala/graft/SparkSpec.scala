@@ -432,6 +432,30 @@ class SparkSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("a stage commits its manifest by rename; a stale temp file or no manifest rebuilds it") {
+    val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val ck = new pipeline.Checkpoint(spark, dir)
+    var builds = 0
+    def build = { builds += 1; spark.range(10).toDF("id") }
+    val manifest = new java.io.File(s"$dir/s", "manifest.json")
+    val tmp = new java.io.File(s"$dir/s", "manifest.json.tmp")
+    assert(ck.stage("s")(build).count() == 10 && builds == 1)
+    assert(manifest.exists && !tmp.exists)
+    ck.stage("s")(build)
+    assert(builds == 1) // committed: served from the checkpoint
+    // a crash mid-write: a torn temp file and no manifest
+    assert(manifest.delete())
+    java.nio.file.Files.write(tmp.toPath, "{\"stage\":".getBytes("UTF-8"))
+    assert(!ck.exists("s"))
+    assert(ck.stage("s")(build).count() == 10 && builds == 2)
+    assert(manifest.exists && !tmp.exists && ck.stageRows("s") == 10)
+    // a manifest lost after its stage committed also rebuilds
+    assert(manifest.delete())
+    ck.stage("s")(build)
+    assert(builds == 3 && ck.exists("s"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("pip join plan broadcasts the polygon side and keeps codegen") {
     val pts = Queries.customerPoints(spark, sf)
     val polys = Queries.starPolys(spark, sf)
