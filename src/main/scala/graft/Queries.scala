@@ -3320,7 +3320,7 @@ object Queries {
          |d AS (SELECT a.g AS a, b.g AS b,
          |    SUM(a.x * b.x) AS dot, SUM(a.x * a.x) AS na2, SUM(b.x * b.x) AS nb2
          |  FROM e a JOIN e b ON a.i = b.i AND a.g < b.g GROUP BY 1, 2)
-         |SELECT a, b, round(dot / (sqrt(na2) * sqrt(nb2)), 4) AS cosine FROM d""".stripMargin,
+         |SELECT a, b, round(dot / (sqrt(na2) * sqrt(nb2)), 4) + 0e0 AS cosine FROM d""".stripMargin,
     "q_events_hourly" ->
       s"""SELECT event_type,
          |  CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch,

@@ -130,10 +130,13 @@ object Wkb {
     try Some(readForce2D(bytes)) catch { case _: Exception => None }
 
   private def parse(bytes: Array[Byte], force2D: Boolean): FlatGeom =
-    try readGeom(ByteBuffer.wrap(bytes), force2D)
+    try readGeom(ByteBuffer.wrap(bytes), force2D, member = 0)
     catch { case e: BufferUnderflowException => throw new IllegalArgumentException("wkb: truncated", e) }
 
-  private def readGeom(buf: ByteBuffer, force2D: Boolean): FlatGeom = {
+  /** One geometry; `member` is the type a multi's member must have
+    * (Point, LineString or Polygon), or 0 at the top level. Checking it
+    * before reading the member caps the nesting depth at two. */
+  private def readGeom(buf: ByteBuffer, force2D: Boolean, member: Int): FlatGeom = {
     val order = buf.get()
     buf.order(if (order == 0) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
     val rawType = buf.getInt()
@@ -159,6 +162,8 @@ object Wkb {
       throw new IllegalArgumentException("wkb: Z/M dimensions unsupported (2-D engine)")
     val extra = ewkbExtra + isoExtra
     val t = if (isoExtra > 0) tFull % 1000 else tFull
+    if (member != 0 && t != member)
+      throw new IllegalArgumentException(s"wkb: member of type $t where type $member is required")
     if ((rawType & 0x20000000) != 0) buf.getInt() // skip EWKB SRID
     def skipExtra(): Unit = { var i = 0; while (i < extra) { buf.getDouble(); i += 1 } }
     t match {
@@ -177,19 +182,18 @@ object Wkb {
         val cs = new Array[Double](2 * n)
         var i = 0
         while (i < n) {
-          val p = readGeom(buf, force2D)
-          if (p.kind != GeomKind.Point || p.isEmpty)
-            throw new IllegalArgumentException("wkb: multipoint member is not a point")
+          val p = readGeom(buf, force2D, TPoint)
+          if (p.isEmpty) throw new IllegalArgumentException("wkb: multipoint member is empty")
           cs(2 * i) = p.x(0); cs(2 * i + 1) = p.y(0)
           i += 1
         }
         FlatGeom.multiPoint(cs)
       case TMultiLineString =>
         val n = readCount(buf, 9)
-        FlatGeom.multiLineString((0 until n).map(_ => readGeom(buf, force2D).coords))
+        FlatGeom.multiLineString((0 until n).map(_ => readGeom(buf, force2D, TLineString).coords))
       case TMultiPolygon =>
         val n = readCount(buf, 9)
-        FlatGeom.multiPolygon((0 until n).map(_ => readGeom(buf, force2D)))
+        FlatGeom.multiPolygon((0 until n).map(_ => readGeom(buf, force2D, TPolygon)))
       case other => throw new IllegalArgumentException(s"wkb: unsupported type $other")
     }
   }

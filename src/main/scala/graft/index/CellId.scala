@@ -311,6 +311,54 @@ object CellId {
     if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
+  /** Levels between a cell and its tile: a tile is the 4×4 block of
+    * cells sharing a parent two levels up (coarser near level 0). */
+  final val TileShift = 2
+
+  /** Level of the tiles that group the cells of `level`. */
+  @inline def tileLevel(level: Int): Int = level - Math.min(TileShift, level)
+
+  /** The distinct tiles, at [[tileLevel]], that hold the cells of
+    * `neighborhood(level, lon, lat, r)` — the same set as those cells'
+    * parents, from the same integer index arithmetic (antimeridian wrap,
+    * pole rows dropped), row by row from north, columns in wrap order
+    * from the west. A target sent to these tiles meets every probe whose
+    * cell lies within its ring. */
+  def haloTiles(level: Int, lon: Double, lat: Double, r: Int): Array[Long] = {
+    require(r >= 0, s"ring radius $r must be >= 0")
+    val n = cellsPerAxis(level)
+    val tl = tileLevel(level)
+    val s = level - tl
+    val cx = cellX(level, lon)
+    val cy = cellY(level, lat)
+    // the ring's columns, consecutive mod n, map to consecutive tile
+    // columns mod n >> s; a run of at most n columns can come back
+    // round only into its first tile, so the last one is dropped then
+    val cols = Math.min(2L * r + 1, n).toInt
+    val tx = new Array[Long](cols)
+    var nx = 0
+    var i = 0
+    while (i < cols) {
+      var x = (cx - r + i) % n
+      if (x < 0) x += n
+      val t = x >> s
+      if (nx == 0 || tx(nx - 1) != t) { tx(nx) = t; nx += 1 }
+      i += 1
+    }
+    if (nx > 1 && tx(nx - 1) == tx(0)) nx -= 1
+    val ty0 = Math.max(cy - r, 0L) >> s
+    val ty1 = Math.min(cy + r, n - 1) >> s
+    val out = new Array[Long](((ty1 - ty0 + 1) * nx).toInt)
+    var m = 0
+    var ty = ty0
+    while (ty <= ty1) {
+      var j = 0
+      while (j < nx) { out(m) = pack(tl, tx(j), ty); m += 1; j += 1 }
+      ty += 1
+    }
+    out
+  }
+
   /** Ring of cells at Chebyshev distance `r` around (cx, cy) at `level`
     * — the kNN expansion frontier. */
   def ring(level: Int, cx: Long, cy: Long, r: Int): Array[Long] = {

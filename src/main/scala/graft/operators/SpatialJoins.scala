@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.storage.StorageLevel
 import graft.sql.functions._
 
 /** Typed row shapes for [[SpatialJoins.knnJoinQuadtree]]'s cogroup. */
-private[operators] case class KeyedPoint(key: Long, lon: Double, lat: Double, cell: Long)
+private[operators] case class KeyedPoint(key: Long, lon: Double, lat: Double, tile: Long)
 private[operators] case class KnnHit(pkey: Long, tkey: Long, tlon: Double, tlat: Double,
     dist: Double, rank: Int)
 
@@ -291,15 +292,15 @@ object SpatialJoins {
    * GUARANTEED-EXACT kNN join with LOCAL QUADTREE REFINE (the north
    * rule's "kNN via S2 cell covering + local quadtree refine").
    *
-   * Candidates come from a cell-ring covering (each target replicated
-   * to the cells within `maxRing` of its own); the candidate cross
+   * Candidates come from a cell-ring covering (each target reaches
+   * the cells within `maxRing` of its own); the candidate cross
    * product is NEVER materialized. A typed `cogroup` co-partitions
-   * probes (one cell each) with ring-replicated targets on the cell
-   * key, builds a per-cell [[graft.index.Quadtree]] over the group's
-   * targets, and answers each probe's exact top-k locally in O(log n)
-   * best-first descent — versus a window top-k's
-   * |probes_in_cell| x |targets_in_ring| candidate rows shuffled and
-   * sorted per probe key.
+   * probes with targets on a tile key — a tile is the 4×4 block of
+   * cells two levels up ([[graft.index.CellId.TileShift]]) — builds a
+   * per-tile [[graft.index.Quadtree]] over the group's targets, and
+   * answers each probe's exact top-k locally in O(log n) best-first
+   * descent — versus a window top-k's |probes_in_cell| x
+   * |targets_in_ring| candidate rows shuffled and sorted per probe key.
    *
    * Exactness: the caller need not size `maxRing` so k neighbours fall
    * inside the ring — a probe's result is accepted only when its k-th
@@ -314,18 +315,28 @@ object SpatialJoins {
    * is ALWAYS the true kNN, at any `level`/`maxRing`.
    *
    * Scale: each level is one cogroup over exactly two exchanges — one
-   * hash partition of that level's probes (each row once) and one of
-   * the targets (each row <= (2r+1)^2 ring replicas from the codegen'd
-   * `st_cell_neighborhood`) — with no join or aggregate. Its output is
-   * cached and its pending check is one action, `isEmpty` over the
-   * cached rank-0 rows: two shuffle-map jobs, the job that computes and
-   * caches the cogroup, and the check's scan of the cache (a level of
-   * 40k probes at local[4] runs 4 jobs). The first level reads
-   * `points`; later levels read only the cached markers; the result is
-   * one more read of the caches. Per-task state is one
-   * cell-neighbourhood's targets (the same bound as a join partition's
-   * build side). Under skew, raise `level` — the guarantee keeps
-   * results exact while the ring population shrinks.
+   * hash partition of that level's probes, each row once under its
+   * cell's tile, and one of the targets, each row once per distinct
+   * tile of its ring (the codegen'd `st_cell_halo_tiles`: a one-ring
+   * halo of tiles, at most 4 for r <= 2) — with no
+   * join or aggregate. A tile's group holds every target whose ring
+   * touches one of its 16 cells, a superset of each of its probes'
+   * ring targets, so the coverage guarantee below still proves each
+   * answer; per group that is the targets of (4+2r)^2 cells, against
+   * (2r+1)^2 for a group per cell, while a target is replicated about
+   * ((2r+4)/4)^2 times instead of (2r+1)^2. Each level is materialized
+   * by one eager DISK_ONLY `localCheckpoint`, planned through AQE (which
+   * coalesces the cogroup's partitions): two shuffle-map jobs and the
+   * job that runs the cogroup and writes its blocks, which also counts
+   * the level's rank-0 markers in a per-call accumulator, so deciding
+   * whether to coarsen needs no job. The result is one more job over
+   * the checkpoints: a call resolved at its first level runs 4 jobs.
+   * As in the Components and Raster loops, the checkpoint truncates the
+   * lineage; its blocks live on local disk, pin no heap, and are freed
+   * when the returned DataFrame is garbage-collected — `clearCache`
+   * does not release them. The first level reads `points`; later levels
+   * read only the markers. Under skew, raise `level` — the guarantee
+   * keeps results exact while the ring population shrinks.
    *
    * Results are per input row: two probe rows with the same key get k
    * hits each. [[knnJoinBroadcast]] ranks per KEY (its window merges
@@ -380,9 +391,9 @@ object SpatialJoins {
       Math.min(Math.min(north, south), lonBound) * (1.0 - 1e-9) // rounding slack
     }
 
-    // probes and targets share one row shape; `cell` is the cogroup key.
+    // probes and targets share one row shape; `tile` is the cogroup key.
     // Non-null like the typed rows they decode to (a null fails here as
-    // it would there), so both sides' cell keys have the same type
+    // it would there), so both sides' tile keys have the same type
     def keyed(df: DataFrame, key: String, lon: String, lat: String): DataFrame = {
       def nonNull(c: Column) = ColumnBridge.column(AssertNotNull(ColumnBridge.expression(c)))
       df.select(nonNull(col(key).cast("long")).as("key"), nonNull(col(lon).cast("double")).as("lon"),
@@ -390,19 +401,25 @@ object SpatialJoins {
     }
     val tgt = keyed(targets, targetKey, tLonCol, tLatCol)
 
-    /** One cogroup over two exchanges: probes keyed by their cell,
-      * targets replicated to every cell of their ring (`neighborhood`:
-      * integer cell arithmetic, antimeridian wrap, pole rows dropped,
-      * duplicate-free — so replica and probe cells agree exactly). A
-      * probe whose top-k is not provably exact emits one marker row
-      * (rank 0, carrying its own lon/lat) for the next level. */
+    // rank-0 markers emitted so far, counted by the job that writes
+    // each level's checkpoint
+    val markers = points.sparkSession.sparkContext.longAccumulator
+
+    /** One cogroup over two exchanges: probes keyed by their cell's tile
+      * (`st_cellid` at the tile level is the cell's parent), targets
+      * replicated to every tile holding a cell of their ring
+      * (`haloTiles`: the parents of `neighborhood`'s cells, by the same
+      * integer cell arithmetic — so a probe's tile is among the tiles of
+      * every target whose ring holds the probe's cell). A probe whose
+      * top-k is not provably exact emits one marker row (rank 0,
+      * carrying its own lon/lat) for the next level. */
     def ringTopK(prb: DataFrame, lvl: Int, isFinal: Boolean): DataFrame = {
-      val prbByCell = prb.withColumn("cell", st_cellid(lit(lvl), col("lon"), col("lat")))
-        .groupBy(col("cell")).as[Long, KeyedPoint]
-      val tgtByCell = tgt.withColumn("cell",
-          explode(st_cell_neighborhood(lit(lvl), col("lon"), col("lat"), lit(maxRing))))
-        .groupBy(col("cell")).as[Long, KeyedPoint]
-      prbByCell.cogroup(tgtByCell) { (_, ps, ts) =>
+      val prbByTile = prb.withColumn("tile", st_cellid(lit(CellId.tileLevel(lvl)), col("lon"), col("lat")))
+        .groupBy(col("tile")).as[Long, KeyedPoint]
+      val tgtByTile = tgt.withColumn("tile",
+          explode(st_cell_halo_tiles(lit(lvl), col("lon"), col("lat"), lit(maxRing))))
+        .groupBy(col("tile")).as[Long, KeyedPoint]
+      prbByTile.cogroup(tgtByTile) { (_, ps, ts) =>
         var lons = new Array[Double](16); var lats = new Array[Double](16)
         var keys = new Array[Long](16); var n = 0
         ts.foreach { t =>
@@ -417,7 +434,7 @@ object SpatialJoins {
           val hits = if (qt == null) Array.empty[graft.index.Quadtree.Hit] else qt.knn(p.lon, p.lat, k)
           val exact = isFinal ||
             (hits.length >= k && hits(hits.length - 1).dist < coverageGuarantee(p.lon, p.lat, lvl))
-          if (!exact) Iterator.single(KnnHit(p.key, 0L, p.lon, p.lat, 0.0, 0))
+          if (!exact) { markers.add(1L); Iterator.single(KnnHit(p.key, 0L, p.lon, p.lat, 0.0, 0)) }
           else Iterator.tabulate(hits.length) { i =>
             val h = hits(i)
             KnnHit(p.key, h.key, h.lon, h.lat, h.dist, i + 1)
@@ -426,23 +443,25 @@ object SpatialJoins {
       }.toDF()
     }
 
-    // coarsening loop: each level's output is cached; its marker rows
-    // are the next level's probes (ring area x16 at level-2). Level 0 is
-    // one global cell — every target in one group — so termination with
-    // the true kNN is guaranteed
+    // coarsening loop: each level's output is checkpointed; its marker
+    // rows are the next level's probes (ring area x16 at level-2). Level
+    // 0 is one global cell — every target in one group — so termination
+    // with the true kNN is guaranteed
     var lvl = level
     var pending = keyed(points, pointKey, lonCol, latCol)
     var acc: List[DataFrame] = Nil
     var done = false
     while (!done) {
       val isFinal = lvl <= 0
-      val topk = ringTopK(pending, lvl, isFinal).persist()
+      val before = markers.sum
+      val topk = ringTopK(pending, lvl, isFinal)
+        .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
       acc ::= topk.filter(col("rank") > 0)
-      if (isFinal) done = true
+      if (isFinal || markers.sum == before) done = true
       else {
         pending = topk.filter(col("rank") === 0)
           .select(col("pkey").as("key"), col("tlon").as("lon"), col("tlat").as("lat"))
-        if (pending.isEmpty) done = true else lvl = math.max(0, lvl - 2)
+        lvl = math.max(0, lvl - 2)
       }
     }
     acc.reduce(_ unionByName _).select(

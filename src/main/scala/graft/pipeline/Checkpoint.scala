@@ -8,8 +8,11 @@ import org.apache.hadoop.fs.Path
 /**
  * Iceberg-STYLE checkpoint layer (no Iceberg jar exists in the image —
  * SURVEY.md §7.3 risk 4): every pipeline stage lands as a Parquet
- * directory plus a versioned JSON manifest carrying the snapshot id,
- * row count, per-partition lineage (partitionId → rows) and wall time.
+ * directory plus a versioned JSON manifest carrying the snapshot id
+ * (a name-based UUID of the stage name and the data files' names and
+ * sizes, so two writes of different rows get different ids even at
+ * equal row count and schema), row count, per-partition lineage
+ * (partitionId → rows) and wall time.
  * A run resumes mid-pipeline by reading any stage whose manifest is
  * already present and valid (same semantics as the north rule's
  * "checkpoint every stage ... resumable mid-pipeline").
@@ -56,12 +59,12 @@ final class Checkpoint(spark: SparkSession, root: String) {
     val persisted = read(stageName)
     // per-partition lineage straight from the parquet footers — no
     // extra scan of the stage data (row counts live in file metadata)
-    val parts = partitionRowCounts(stageName)
-    val rowCount = parts.map(_._2).sum
-    val partJson = parts.map { case (id, rows) => s"""{"id":$id,"rows":$rows}""" }
+    val parts = dataFiles(stageName)
+    val rowCount = parts.map(_.rows).sum
+    val partJson = parts.map(f => s"""{"id":${f.id},"rows":${f.rows}}""")
       .mkString("[", ",", "]")
     val snapshotId = java.util.UUID.nameUUIDFromBytes(
-      s"$stageName:$rowCount:${persisted.schema.catalogString}".getBytes("UTF-8")).toString
+      parts.map(f => s"${f.name}:${f.bytes}").mkString(s"$stageName:", ",", "").getBytes("UTF-8")).toString
     // clamp to 1 ms so a sub-millisecond stage reports its true order
     // of magnitude instead of silently dividing by zero wall time
     val rowsPerSec = rowCount * 1000L / Math.max(wallMs, 1L)
@@ -82,12 +85,13 @@ final class Checkpoint(spark: SparkSession, root: String) {
     persisted
   }
 
-  /** Per-file (= per-written-partition) row counts from parquet
+  /** The stage's data files, sorted by name, with their sizes and
+    * per-file (= per-written-partition) row counts from parquet
     * footers, read with a bounded thread pool: the footer scan is
     * driver-side work between stages, and reading hundreds of footers
     * serially is a fixed cost that erodes scaling efficiency exactly
     * when task counts (= files) grow with the executor count. */
-  private def partitionRowCounts(stage: String): Seq[(Int, Long)] = {
+  private def dataFiles(stage: String): Seq[Checkpoint.DataFile] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val dirPath = new Path(dataDir(stage))
@@ -98,12 +102,13 @@ final class Checkpoint(spark: SparkSession, root: String) {
       Math.max(1, Math.min(16, files.length)))
     try {
       val futures = files.zipWithIndex.map { case (f, i) =>
-        pool.submit(new java.util.concurrent.Callable[(Int, Long)] {
-          override def call(): (Int, Long) = {
+        pool.submit(new java.util.concurrent.Callable[Checkpoint.DataFile] {
+          override def call(): Checkpoint.DataFile = {
             val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
               conf, f.getPath,
               org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-            i -> footer.getBlocks.asScala.map(_.getRowCount).sum
+            Checkpoint.DataFile(i, f.getPath.getName, f.getLen,
+              footer.getBlocks.asScala.map(_.getRowCount).sum)
           }
         })
       }
@@ -116,4 +121,10 @@ final class Checkpoint(spark: SparkSession, root: String) {
     val m = readManifest(stage)
     """"row_count":(\d+)""".r.findFirstMatchIn(m).map(_.group(1).toLong).getOrElse(-1L)
   }
+}
+
+object Checkpoint {
+  /** One parquet file of a stage: its index in name order, name, size
+    * in bytes and row count. */
+  private final case class DataFile(id: Int, name: String, bytes: Long, rows: Long)
 }

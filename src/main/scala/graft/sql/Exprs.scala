@@ -1069,6 +1069,26 @@ case class StCellNeighborhood(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression, d: Expression): Expression = copy(a, b, c, d)
 }
+/** Distinct tiles (parents [[graft.index.CellId.TileShift]] levels up)
+  * holding the cells within Chebyshev index distance `ring` of the cell
+  * containing (lon, lat) — the halo that groups a kNN level by tile. */
+case class StCellHaloTiles(first: Expression, second: Expression,
+    third: Expression, fourth: Expression)
+    extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] =
+    Seq(IntegerType, DoubleType, DoubleType, IntegerType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
+    GeomEval.cellHaloTiles(a.asInstanceOf[Int], b.asInstanceOf[Double],
+      c.asInstanceOf[Double], d.asInstanceOf[Int])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b, c, d) =>
+      s"graft.sql.GeomEval.cellHaloTiles($a, $b, $c, $d)")
+  override def prettyName: String = "cellHaloTiles"
+  override protected def withNewChildrenInternal(a: Expression, b: Expression,
+      c: Expression, d: Expression): Expression = copy(a, b, c, d)
+}
 case class StCellX(child: Expression) extends GeomUnaryExpr("cellX", LongType) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }

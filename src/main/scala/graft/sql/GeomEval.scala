@@ -1488,6 +1488,8 @@ object GeomEval {
   def cellY(id: Long): Long = CellId.yOf(id)
   def cellNeighborhood(level: Int, lon: Double, lat: Double, ring: Int): UnsafeArrayData =
     UnsafeArrayData.fromPrimitiveArray(CellId.neighborhood(level, lon, lat, ring))
+  def cellHaloTiles(level: Int, lon: Double, lat: Double, ring: Int): UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(CellId.haloTiles(level, lon, lat, ring))
 
   // --------------------------------------------------------- accessors
 

@@ -380,6 +380,8 @@ object functions {
     col(StCellUncompact(x(cells), x(level)))
   def st_cell_neighborhood(level: Column, lon: Column, lat: Column, ring: Column): Column =
     col(StCellNeighborhood(x(level), x(lon), x(lat), x(ring)))
+  def st_cell_halo_tiles(level: Column, lon: Column, lat: Column, ring: Column): Column =
+    col(StCellHaloTiles(x(level), x(lon), x(lat), x(ring)))
 
   // ------------------------------------------------------ aggregates
   // composed from codegen'd built-ins — no custom ImperativeAggregate
@@ -674,6 +676,7 @@ object functions {
     fixed[StCellCompact]("st_cell_compact"),
     fixed[StCellUncompact]("st_cell_uncompact"),
     fixed[StCellNeighborhood]("st_cell_neighborhood"),
+    fixed[StCellHaloTiles]("st_cell_halo_tiles"),
   ) ++ Seq(
     "intersection" -> graft.kernels.Overlay.OpIntersection,
     "union" -> graft.kernels.Overlay.OpUnion,

@@ -233,6 +233,41 @@ class EdgeFuzzSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Wkb.read(multi.array()))
   }
 
+  test("nested and wrong-kind multi members are refused, not recursed into") {
+    import graft.core.{Wkb, Wkt}
+    def le(n: Int) = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    // 100,000 nested MultiPolygon headers of one member each (900 KB)
+    // once recursed once per level until the stack overflowed
+    val depth = 100000
+    val deep = le(9 * depth)
+    (0 until depth).foreach(_ => deep.put(1.toByte).putInt(6).putInt(1))
+    assert(Wkb.readOpt(deep.array()).isEmpty)
+    intercept[IllegalArgumentException](Wkb.read(deep.array()))
+    intercept[IllegalArgumentException](Wkb.readForce2D(deep.array()))
+    // a member of the wrong kind: a MultiLineString holding a polygon
+    // once flattened the polygon's rings into one line's coordinates
+    val poly = Wkb.write(Wkt.read("POLYGON((0 0,4 0,4 4,0 4,0 0))"))
+    val line = Wkb.write(Wkt.read("LINESTRING(0 0,1 1)"))
+    val point = Wkb.write(Wkt.read("POINT(1 2)"))
+    val multiPoly = Wkb.write(Wkt.read("MULTIPOLYGON(((0 0,1 0,1 1,0 0)))"))
+    def multi(t: Int, member: Array[Byte]) = le(9 + member.length).put(1.toByte).putInt(t).putInt(1)
+      .put(member).array()
+    for ((t, m) <- Seq(5 -> poly, 5 -> point, 4 -> line, 6 -> line, 6 -> multiPoly, 4 -> multiPoly)) {
+      val b = multi(t, m)
+      assert(Wkb.readOpt(b).isEmpty, s"type $t with a ${m(1)} member")
+      intercept[IllegalArgumentException](Wkb.read(b))
+    }
+    // members of the right kind still read
+    val ml = Wkb.read(multi(5, line))
+    assert(ml.kind == graft.core.GeomKind.MultiLineString && ml.coords.toSeq == Seq(0.0, 0.0, 1.0, 1.0))
+    val mp = Wkb.read(multi(6, poly))
+    assert(mp.kind == graft.core.GeomKind.MultiPolygon && mp.numPoints == 5)
+    // through SQL both are null, and the task survives
+    val rows = spark.createDataFrame(Seq(Tuple1(deep.array()), Tuple1(multi(5, poly)))).toDF("b")
+      .selectExpr("st_geomfromwkb(b) IS NULL AS n").collect()
+    assert(rows.map(_.getBoolean(0)).toSeq == Seq(true, true))
+  }
+
   test("mutated WKB of every kind parses, or is refused with IllegalArgumentException") {
     import graft.core.{Wkb, Wkt}
     val seeds = Seq("POINT(1 2)", "LINESTRING(0 0,1 1,2 0)",

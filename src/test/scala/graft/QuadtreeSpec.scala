@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.index.Quadtree
 import graft.kernels.Sphere
 
@@ -168,7 +169,7 @@ class QuadtreeSpec extends AnyFunSuite {
       spark.catalog.clearCache()
     }
     assert(rows == 150L)
-    assert(plans.size == 2, s"actions: ${plans.size} (pending check + result)")
+    assert(plans.size == 2, s"actions: ${plans.size} (the level's checkpoint + result)")
     val names = allNodes(plans).map(_.getClass.getSimpleName)
     assert(names.count(_ == "ShuffleExchangeExec") == 2, names.mkString(", "))
     assert(names.count(_ == "CoGroupExec") == 1, names.mkString(", "))
@@ -233,5 +234,82 @@ class QuadtreeSpec extends AnyFunSuite {
     // 180/256 degrees: a 5th neighbour farther than that needs level <= 6
     val level8Bound = Sphere.MeanEarthRadius * Math.toRadians(2 * 180.0 / 256)
     assert(fast.count(h => h._2 == 5 && h._4 > level8Bound) > 0)
+  }
+
+  test("knnJoinQuadtree equals the broadcast join at coarse levels and wide rings") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val targets = cloud(120, 5L).toSeq.map { case (lon, lat, i) => (i, lon, lat) }
+      .toDF("tid", "tlon", "tlat")
+    val edge = Seq((180.0, 0.0), (-180.0, 10.0), (0.0, 90.0), (45.0, -90.0), (179.99, 89.9))
+    val points = (cloud(400, 17L).map { case (lon, lat, i) => (i, lon, lat) } ++
+      edge.zipWithIndex.map { case ((lon, lat), i) => (400L + i, lon, lat) }).toSeq
+      .toDF("pid", "plon", "plat")
+    val brute = operators.SpatialJoins.knnJoinBroadcast(points, "plon", "plat", "pid",
+        targets, "tlon", "tlat", k = 4)
+      .select(col("pid"), col("__rank").cast("int"), col("tid"), col("__dist"))
+      .as[(Long, Int, Long, Double)].collect().sorted.toSeq
+    assert(brute.size == 4 * 405)
+    for (level <- 0 to 3; ring <- Seq(2, 3)) {
+      val fast = operators.SpatialJoins.knnJoinQuadtree(points, "plon", "plat", "pid",
+          targets, "tlon", "tlat", "tid", k = 4, level = level, maxRing = ring)
+        .select(col("pid"), col("__rank").cast("int"), col("tid"), col("__dist"))
+        .as[(Long, Int, Long, Double)].collect().sorted.toSeq
+      assert(fast == brute, s"level $level ring $ring: first difference " +
+        s"${fast.zip(brute).find(p => p._1 != p._2)}, sizes ${fast.size}/${brute.size}")
+    }
+  }
+
+  /** Spark jobs that `body` starts from this thread's job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = SparkTestSession.spark.sparkContext
+    val group = s"knn-jobs-${System.nanoTime()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "knn jobs")
+    try {
+      body
+      // a marker job on the same queue: once it is seen, so are the call's
+      val marker = new java.util.concurrent.atomic.AtomicBoolean()
+      val seen = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group + "-end")
+            marker.set(true)
+      }
+      sc.addSparkListener(seen)
+      sc.setJobGroup(group + "-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (!marker.get() && System.nanoTime() < deadline) Thread.sleep(5)
+      sc.removeSparkListener(seen)
+      started.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("knnJoinQuadtree runs 4 jobs when its first level resolves, and 2 on empty inputs") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val targets = (0 until 200).map(i => (i.toLong, 9.0 + (i % 20) * 0.1, 9.5 + (i / 20) * 0.1))
+      .toDF("tid", "tlon", "tlat")
+    val points = (0 until 50).map(i => (1000L + i, 9.55 + (i % 10) * 0.17, 9.6 + (i / 10) * 0.16))
+      .toDF("pid", "plon", "plat")
+    def knn(p: org.apache.spark.sql.DataFrame, t: org.apache.spark.sql.DataFrame) =
+      operators.SpatialJoins.knnJoinQuadtree(p, "plon", "plat", "pid",
+        t, "tlon", "tlat", "tid", k = 3, level = 4, maxRing = 1)
+        .write.format("noop").mode("overwrite").save()
+    // two shuffle-map jobs and the checkpoint's job, then the result's;
+    // an exchange of no partitions runs no job. No job asks whether a
+    // level left markers: the checkpoint's job counts them
+    val one = jobsOf(knn(points, targets))
+    val empty = jobsOf(knn(points.limit(0), targets.limit(0)))
+    assert((one, empty) == ((4, 2)), s"jobs per call: $one resolved at its first level, $empty empty")
   }
 }

@@ -456,6 +456,32 @@ class SparkSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("a stage's snapshot id follows its data files, not only its row count and schema") {
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_id").toString
+    def snapshot(root: String, rows: => org.apache.spark.sql.DataFrame): String = {
+      val ck = new pipeline.Checkpoint(spark, root)
+      ck.stage("s")(rows)
+      val mf = ck.readManifest("s")
+      for (field <- Seq("\"row_count\":", "\"partitions\":[{\"id\":",
+          "\"wall_ms\":", "\"rows_per_sec\":", "\"snapshot_id\":"))
+        assert(mf.contains(field), s"manifest missing $field: $mf")
+      """"snapshot_id":"([^"]+)"""".r.findFirstMatchIn(mf).get.group(1)
+    }
+    // equal row count and schema, different rows
+    val a = snapshot(s"$dir/a", spark.range(0, 10, 1, 2).toDF("id"))
+    val b = snapshot(s"$dir/b", spark.range(100, 110, 1, 2).toDF("id"))
+    assert(a != b)
+    // the id is the stage name with the sorted data files' names and sizes
+    val files = new java.io.File(s"$dir/a/s/data").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(files.length == 2)
+    assert(a == java.util.UUID.nameUUIDFromBytes(files.map(f => s"${f.getName}:${f.length}")
+      .mkString("s:", ",", "").getBytes("UTF-8")).toString)
+    // a resumed stage keeps its manifest and id
+    assert(snapshot(s"$dir/a", spark.range(5).toDF("id")) == a)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("pip join plan broadcasts the polygon side and keeps codegen") {
     val pts = Queries.customerPoints(spark, sf)
     val polys = Queries.starPolys(spark, sf)

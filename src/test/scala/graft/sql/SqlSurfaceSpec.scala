@@ -166,7 +166,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     "cell" -> "st_cell_bounds st_cell_level st_cell_x st_cell_y st_cell_children",
     "cell three" -> "st_cell_parent",
     "d d eight" -> "st_geohash",
-    "lvl d d one" -> "st_cell_neighborhood",
+    "lvl d d one" -> "st_cell_neighborhood st_cell_halo_tiles",
   )
   /** Aggregates have no row-level eval. */
   private val aggregates = Set("st_asmvt")
