@@ -1,6 +1,7 @@
 package graft.index
 
 import scala.collection.mutable.ArrayBuffer
+import graft.core.StableSort
 
 /**
  * Packed Sort-Tile-Recursive R-tree over item bounding boxes — the
@@ -100,27 +101,28 @@ object STRtree {
     * (parallel to the tree's item indices) — the shared builder for
     * the distance and relate large-pair paths. */
   def ofSegments(g: graft.core.FlatGeom): (STRtree, Array[Double], Array[Double], Array[Double], Array[Double]) = {
-    val x1 = ArrayBuffer[Double]()
-    val y1 = ArrayBuffer[Double]()
-    val x2 = ArrayBuffer[Double]()
-    val y2 = ArrayBuffer[Double]()
+    var n = 0
+    graft.core.FlatGeom.foreachRing(g)((s, e) => n += Math.max(0, e - s - 1))
+    val x1 = new Array[Double](n); val y1 = new Array[Double](n)
+    val x2 = new Array[Double](n); val y2 = new Array[Double](n)
+    var k = 0
     graft.core.FlatGeom.foreachRing(g) { (s, e) =>
       var j = s
       while (j < e - 1) {
-        x1 += g.x(j); y1 += g.y(j); x2 += g.x(j + 1); y2 += g.y(j + 1)
+        x1(k) = g.x(j); y1(k) = g.y(j); x2(k) = g.x(j + 1); y2(k) = g.y(j + 1)
+        k += 1
         j += 1
       }
     }
-    val n = x1.length
     val minX = new Array[Double](n); val minY = new Array[Double](n)
     val maxX = new Array[Double](n); val maxY = new Array[Double](n)
-    var k = 0
+    k = 0
     while (k < n) {
       minX(k) = Math.min(x1(k), x2(k)); maxX(k) = Math.max(x1(k), x2(k))
       minY(k) = Math.min(y1(k), y2(k)); maxY(k) = Math.max(y1(k), y2(k))
       k += 1
     }
-    (build(minX, minY, maxX, maxY), x1.toArray, y1.toArray, x2.toArray, y2.toArray)
+    (build(minX, minY, maxX, maxY), x1, y1, x2, y2)
   }
 
   /** Build from item bboxes (minX, minY, maxX, maxY arrays, same length). */
@@ -132,61 +134,65 @@ object STRtree {
         Array(0), Array(0), Array(-1), 0)
     }
     // layout: leaves first [0, n), then internal levels appended
-    val nmx = ArrayBuffer[Double]()
-    val nmy = ArrayBuffer[Double]()
-    val nMx = ArrayBuffer[Double]()
-    val nMy = ArrayBuffer[Double]()
-    val cs = ArrayBuffer[Int]()
-    val ce = ArrayBuffer[Int]()
-    val li = ArrayBuffer[Int]()
+    var total = n
+    var width = n
+    while (width > 1) { width = (width + NodeCapacity - 1) / NodeCapacity; total += width }
+    val nmx = new Array[Double](total); val nmy = new Array[Double](total)
+    val nMx = new Array[Double](total); val nMy = new Array[Double](total)
+    val cs = new Array[Int](total); val ce = new Array[Int](total)
+    val li = new Array[Int](total)
 
     // STR: sort by center-x, slice into sqrt(n/cap) vertical slabs,
-    // sort each slab by center-y, pack runs of `cap`.
-    val order = Array.range(0, n).sortBy(i => (minX(i) + maxX(i)))
-    var level = ArrayBuffer[Int]() // node ids of current level
+    // sort each slab by center-y, pack runs of `cap` (stable sorts, so
+    // equal centers keep item order)
+    val cx = new Array[Double](n); val cy = new Array[Double](n)
+    var i = 0
+    while (i < n) { cx(i) = minX(i) + maxX(i); cy(i) = minY(i) + maxY(i); i += 1 }
+    val order = StableSort.byKey(cx)
     // create leaf nodes in STR order
     val sliceCount = Math.max(1, Math.ceil(Math.sqrt(n.toDouble / NodeCapacity)).toInt)
     val sliceSize = Math.max(1, Math.ceil(n.toDouble / sliceCount).toInt)
+    var count = 0
     var s = 0
     while (s < n) {
       val e = Math.min(n, s + sliceSize)
-      val slab = order.slice(s, e).sortBy(i => (minY(i) + maxY(i)))
+      val slab = java.util.Arrays.copyOfRange(order, s, e)
+      StableSort.sort(slab, slab.length, cy, null)
       slab.foreach { i =>
-        nmx += minX(i); nmy += minY(i); nMx += maxX(i); nMy += maxY(i)
-        cs += -1; ce += -1; li += i
-        level += (nmx.length - 1)
+        nmx(count) = minX(i); nmy(count) = minY(i); nMx(count) = maxX(i); nMy(count) = maxY(i)
+        cs(count) = -1; ce(count) = -1; li(count) = i
+        count += 1
       }
       s = e
     }
-    // build upward
-    while (level.length > 1) {
-      val next = ArrayBuffer[Int]()
-      var i = 0
-      while (i < level.length) {
-        val e = Math.min(level.length, i + NodeCapacity)
+    // build upward: the current level is the node ids [from, until)
+    var from = 0
+    var until = count
+    while (until - from > 1) {
+      var i = from
+      while (i < until) {
+        val e = Math.min(until, i + NodeCapacity)
         var mnx = Double.PositiveInfinity; var mny = Double.PositiveInfinity
         var mxx = Double.NegativeInfinity; var mxy = Double.NegativeInfinity
-        var j = i
-        while (j < e) {
-          val c = level(j)
+        var c = i
+        while (c < e) {
           if (nmx(c) < mnx) mnx = nmx(c)
           if (nmy(c) < mny) mny = nmy(c)
           if (nMx(c) > mxx) mxx = nMx(c)
           if (nMy(c) > mxy) mxy = nMy(c)
-          j += 1
+          c += 1
         }
-        nmx += mnx; nmy += mny; nMx += mxx; nMy += mxy
-        cs += level(i); ce += level(e - 1) + 1
-        li += -1
-        next += (nmx.length - 1)
+        nmx(count) = mnx; nmy(count) = mny; nMx(count) = mxx; nMy(count) = mxy
+        cs(count) = i; ce(count) = e
+        li(count) = -1
+        count += 1
         i = e
       }
-      level = next
+      from = until
+      until = count
     }
-    // children of an internal node must be contiguous ids: they are,
-    // because each level's nodes are appended consecutively and packed
-    // in order.
-    new STRtree(nmx.toArray, nmy.toArray, nMx.toArray, nMy.toArray,
-      cs.toArray, ce.toArray, li.toArray, level(0))
+    // children of an internal node are contiguous ids: each level's
+    // nodes are appended consecutively and packed in order.
+    new STRtree(nmx, nmy, nMx, nMy, cs, ce, li, from)
   }
 }

@@ -1,6 +1,6 @@
 package graft.kernels
 
-import graft.core.{FlatGeom, GeomKind}
+import graft.core.{FlatGeom, GeomKind, StableSort}
 import scala.collection.mutable.{ArrayBuffer, HashMap => MHashMap}
 
 /**
@@ -11,8 +11,9 @@ import scala.collection.mutable.{ArrayBuffer, HashMap => MHashMap}
  * construction (Margalit & Knott 1989; Martinez-Rueda 2009 family):
  *
  *  1. orient rings interior-left (exterior CCW, holes CW);
- *  2. split every edge at every robust A×B intersection (each pair
- *     computed once, so cut points are bit-identical on both edges);
+ *  2. split every edge at every robust A×B intersection (pairs found
+ *     by an x-sweep over padded edge bboxes, each computed once, so
+ *     cut points are bit-identical on both edges);
  *  3. classify each sub-edge midpoint In/On/Out of the other polygon;
  *     On-edges are matched with their partner to "shared same/opposite
  *     direction";
@@ -58,63 +59,66 @@ object Overlay {
     case _ => overlay(a, b, op)
   }
 
-  private def rings(g: FlatGeom): Seq[(Array[Double], Boolean)] = {
-    // (ring coords, isExterior)
-    val out = ArrayBuffer[(Array[Double], Boolean)]()
+  /** Growable parallel arrays of directed segments and their source
+    * (0 = A, 1 = B). */
+  private final class Segs(cap0: Int) {
+    var n = 0
+    var x1 = new Array[Double](Math.max(cap0, 4))
+    var y1 = new Array[Double](x1.length)
+    var x2 = new Array[Double](x1.length)
+    var y2 = new Array[Double](x1.length)
+    var src = new Array[Int](x1.length)
+    def add(ax: Double, ay: Double, bx: Double, by: Double, s: Int): Unit = {
+      if (n == x1.length) {
+        val c = 2 * n
+        x1 = java.util.Arrays.copyOf(x1, c); y1 = java.util.Arrays.copyOf(y1, c)
+        x2 = java.util.Arrays.copyOf(x2, c); y2 = java.util.Arrays.copyOf(y2, c)
+        src = java.util.Arrays.copyOf(src, c)
+      }
+      x1(n) = ax; y1(n) = ay; x2(n) = bx; y2(n) = by; src(n) = s
+      n += 1
+    }
+  }
+
+  /** Appends `g`'s directed edges with interior on the LEFT (exteriors
+    * CCW, holes CW), ring by ring; rings under 4 points are skipped and
+    * so are zero-length edges. */
+  private def orientEdges(g: FlatGeom, source: Int, out: Segs): Unit = {
+    def ring(r: Int, isExt: Boolean): Unit = {
+      val s = g.ringStart(r)
+      val e = g.ringEnd(r)
+      if (e - s >= 4) {
+        val w = Planar.ringWinding(g.coords, s, e)
+        if (if (isExt) w == Planar.CW else w == Planar.CCW) {
+          var k = e - 1
+          while (k > s) {
+            if (g.x(k) != g.x(k - 1) || g.y(k) != g.y(k - 1))
+              out.add(g.x(k), g.y(k), g.x(k - 1), g.y(k - 1), source)
+            k -= 1
+          }
+        } else {
+          var k = s
+          while (k < e - 1) {
+            if (g.x(k) != g.x(k + 1) || g.y(k) != g.y(k + 1))
+              out.add(g.x(k), g.y(k), g.x(k + 1), g.y(k + 1), source)
+            k += 1
+          }
+        }
+      }
+    }
     g.kind match {
       case GeomKind.Polygon =>
         var r = 0
-        while (r < g.rings.length) {
-          out += ((sliceRing(g, r), r == 0))
-          r += 1
-        }
+        while (r < g.rings.length) { ring(r, r == 0); r += 1 }
       case GeomKind.MultiPolygon =>
         var p = 0
         while (p < g.parts.length) {
           var r = g.partStart(p)
-          while (r < g.partEnd(p)) {
-            out += ((sliceRing(g, r), r == g.partStart(p)))
-            r += 1
-          }
+          while (r < g.partEnd(p)) { ring(r, r == g.partStart(p)); r += 1 }
           p += 1
         }
       case _ =>
     }
-    out.toSeq
-  }
-
-  private def sliceRing(g: FlatGeom, r: Int): Array[Double] =
-    java.util.Arrays.copyOfRange(g.coords, g.ringStart(r) * 2, g.ringEnd(r) * 2)
-
-  private def reverseRing(cs: Array[Double]): Array[Double] = {
-    val n = cs.length / 2
-    val out = new Array[Double](cs.length)
-    var i = 0
-    while (i < n) { out(2 * i) = cs(2 * (n - 1 - i)); out(2 * i + 1) = cs(2 * (n - 1 - i) + 1); i += 1 }
-    out
-  }
-
-  /** Directed edges with interior on the LEFT: exteriors CCW, holes CW. */
-  private def orientedEdges(g: FlatGeom, source: Int): ArrayBuffer[Edge] = {
-    val out = ArrayBuffer[Edge]()
-    rings(g).foreach { case (ring0, isExt) =>
-      if (ring0.length >= 8) {
-        val w = Planar.ringWinding(ring0, 0, ring0.length / 2)
-        val ring =
-          if (isExt && w == Planar.CW) reverseRing(ring0)
-          else if (!isExt && w == Planar.CCW) reverseRing(ring0)
-          else ring0
-        var i = 0
-        val n = ring.length / 2
-        while (i < n - 1) {
-          if (ring(2 * i) != ring(2 * i + 2) || ring(2 * i + 1) != ring(2 * i + 3)) {
-            out += Edge(ring(2 * i), ring(2 * i + 1), ring(2 * i + 2), ring(2 * i + 3), source)
-          }
-          i += 1
-        }
-      }
-    }
-    out
   }
 
   private def overlay(a0: FlatGeom, b0: FlatGeom, op: Int): FlatGeom = {
@@ -194,13 +198,13 @@ object Overlay {
     * path. Balanced selections return untouched. */
   private def repairBalance(subs: ArrayBuffer[Edge],
       selected: ArrayBuffer[Edge]): ArrayBuffer[Edge] = {
+    if (balanced(selected)) return selected
     val deg = MHashMap[(Double, Double), Int]() // out - in
     selected.foreach { e =>
       deg((e.x1, e.y1)) = deg.getOrElse((e.x1, e.y1), 0) + 1
       deg((e.x2, e.y2)) = deg.getOrElse((e.x2, e.y2), 0) - 1
     }
-    var needOut = deg.iterator.filter(_._2 < 0).map(_._1).toList
-    if (needOut.isEmpty) return selected
+    val needOut = deg.iterator.filter(_._2 < 0).map(_._1).toList
     if (deg.valuesIterator.map(Math.abs).sum > 32) return selected // too broken: give up
     val selKey = scala.collection.mutable.HashSet[(Double, Double, Double, Double)]()
     selected.foreach(e => selKey += ((e.x1, e.y1, e.x2, e.y2)))
@@ -253,73 +257,32 @@ object Overlay {
     selected
   }
 
+  /** True when out-degree equals in-degree at every node. */
+  private def balanced(edges: ArrayBuffer[Edge]): Boolean = {
+    val nodes = new Nodes(2 * edges.length)
+    val deg = new Array[Int](2 * edges.length)
+    var i = 0
+    while (i < edges.length) {
+      val e = edges(i)
+      deg(nodes.id(e.x1, e.y1)) += 1
+      deg(nodes.id(e.x2, e.y2)) -= 1
+      i += 1
+    }
+    i = 0
+    while (i < nodes.n) { if (deg(i) != 0) return false; i += 1 }
+    true
+  }
+
   /** Steps 1-3: split at intersections, canonicalize nodes, classify
     * each sub-edge midpoint against the other polygon. */
   private[graft] def splitAndClassify(a0: FlatGeom, b0: FlatGeom,
       epsRel: Double = EpsCoarse): (ArrayBuffer[Edge], Array[Int]) = {
-    val edgesA = orientedEdges(a0, 0)
-    val edgesB = orientedEdges(b0, 1)
-    val all = edgesA ++ edgesB
-
-    // cut points per edge, carrying the EXACT intersection coordinates
-    // (both edges must materialize bit-identical split points or ring
-    // assembly cannot chain across the A/B boundary); every A×B pair is
-    // evaluated once
-    val cuts = Array.fill(all.length)(ArrayBuffer[(Double, Double, Double)]())
-    var i = 0
-    while (i < edgesA.length) {
-      val e1 = all(i)
-      var j = edgesA.length
-      while (j < all.length) {
-        val e2 = all(j)
-        val r = SegIntersect.intersection(e1.x1, e1.y1, e1.x2, e1.y2, e2.x1, e2.y1, e2.x2, e2.y2)
-        if (r.kind == SegIntersect.SinglePointProper || r.kind == SegIntersect.SinglePointImproper) {
-          cuts(i) += ((param(e1, r.x0, r.y0), r.x0, r.y0))
-          cuts(j) += ((param(e2, r.x0, r.y0), r.x0, r.y0))
-        } else if (r.kind == SegIntersect.CollinearOverlap) {
-          cuts(i) += ((param(e1, r.x0, r.y0), r.x0, r.y0))
-          cuts(i) += ((param(e1, r.x1, r.y1), r.x1, r.y1))
-          cuts(j) += ((param(e2, r.x0, r.y0), r.x0, r.y0))
-          cuts(j) += ((param(e2, r.x1, r.y1), r.x1, r.y1))
-        }
-        // vertex-on-edge proximity noding: real-world inputs carry
-        // NEAR-collinear shared runs (exactly collinear only to ~1e-9),
-        // where robust intersection reports nothing but one segment's
-        // endpoint lies epsilon-close to the other's interior. Cut
-        // there, or the uncut edge classifies "on" as a whole and the
-        // genuinely-boundary remainder is lost (GEOS ticket-275 hole).
-        proximityCut(cuts(i), e1, e2.x1, e2.y1, epsRel)
-        proximityCut(cuts(i), e1, e2.x2, e2.y2, epsRel)
-        proximityCut(cuts(j), e2, e1.x1, e1.y1, epsRel)
-        proximityCut(cuts(j), e2, e1.x2, e1.y2, epsRel)
-        j += 1
-      }
-      i += 1
-    }
-
-    // split into sub-edges between consecutive exact cut points
-    val subs0 = ArrayBuffer[Edge]()
-    i = 0
-    while (i < all.length) {
-      val e = all(i)
-      val pts = (cuts(i) ++ ArrayBuffer((0.0, e.x1, e.y1), (1.0, e.x2, e.y2)))
-        .filter(c => c._1 >= 0.0 && c._1 <= 1.0)
-        .sortBy(_._1)
-        // dedupe identical coordinates (several pairs can cut at the
-        // same point; parameters may differ in ulps)
-        .foldLeft(ArrayBuffer[(Double, Double, Double)]()) { (acc, c) =>
-          if (acc.nonEmpty && acc.last._2 == c._2 && acc.last._3 == c._3) acc
-          else { acc += c; acc }
-        }
-      var k = 0
-      while (k < pts.length - 1) {
-        val (_, sx, sy) = pts(k)
-        val (_, ex, ey) = pts(k + 1)
-        if (sx != ex || sy != ey) subs0 += Edge(sx, sy, ex, ey, e.source)
-        k += 1
-      }
-      i += 1
-    }
+    val all = new Segs(a0.numPoints + b0.numPoints)
+    orientEdges(a0, 0, all)
+    val nA = all.n
+    orientEdges(b0, 1, all)
+    val cuts = new Cuts(all.n)
+    nodePairs(all, nA, epsRel, cuts)
 
     // canonicalize node coordinates: the same geometric junction can be
     // materialized by DIFFERENT intersection pairs at ulp-different
@@ -331,38 +294,427 @@ object Overlay {
     // the cluster representative; collapsed edges vanish. Then re-split
     // every sub-edge at canonical nodes on its interior so both inputs
     // decompose shared runs identically (splitAtNodes doc).
-    val subs = splitAtNodes(canonicalizeNodes(subs0, epsRel), epsRel)
+    val subs = splitAtNodes(canonicalizeNodes(splitAtCuts(all, cuts), epsRel), epsRel)
 
     // classify each sub-edge against the OTHER polygon
     // 0=in, 1=on, 2=out
     val cls = new Array[Int](subs.length)
-    i = 0
+    val maxA = maxAbsOrdinate(a0)
+    val maxB = maxAbsOrdinate(b0)
+    var i = 0
     while (i < subs.length) {
       val e = subs(i)
-      val other = if (e.source == 0) b0 else a0
-      val mx = (e.x1 + e.x2) / 2.0
-      val my = (e.y1 + e.y2) / 2.0
-      cls(i) = classify(other, mx, my, e, epsRel)
+      cls(i) = if (e.source == 0) classify(b0, maxB, (e.x1 + e.x2) / 2.0, (e.y1 + e.y2) / 2.0, epsRel)
+        else classify(a0, maxA, (e.x1 + e.x2) / 2.0, (e.y1 + e.y2) / 2.0, epsRel)
       i += 1
     }
     (subs, cls)
   }
 
+  /** Per-edge cut lists (t, x, y) as linked lists over shared
+    * primitive arrays, in insertion order. */
+  private final class Cuts(edges: Int) {
+    val head: Array[Int] = Array.fill(edges)(-1)
+    private val tail = new Array[Int](edges)
+    var n = 0
+    var t = new Array[Double](16)
+    var x = new Array[Double](16)
+    var y = new Array[Double](16)
+    var next = new Array[Int](16)
+    def add(e: Int, tv: Double, xv: Double, yv: Double): Unit = {
+      if (n == t.length) {
+        t = java.util.Arrays.copyOf(t, 2 * n); x = java.util.Arrays.copyOf(x, 2 * n)
+        y = java.util.Arrays.copyOf(y, 2 * n); next = java.util.Arrays.copyOf(next, 2 * n)
+      }
+      t(n) = tv; x(n) = xv; y(n) = yv; next(n) = -1
+      if (head(e) < 0) head(e) = n else next(tail(e)) = n
+      tail(e) = n
+      n += 1
+    }
+  }
+
+  /** A reusable run of (t, x, y) points and its stable order by t. */
+  private final class Run {
+    var n = 0
+    var t = new Array[Double](16)
+    var x = new Array[Double](16)
+    var y = new Array[Double](16)
+    var ord = new Array[Int](16)
+    def clear(): Unit = n = 0
+    def add(tv: Double, xv: Double, yv: Double): Unit = {
+      if (n == t.length) {
+        t = java.util.Arrays.copyOf(t, 2 * n); x = java.util.Arrays.copyOf(x, 2 * n)
+        y = java.util.Arrays.copyOf(y, 2 * n); ord = java.util.Arrays.copyOf(ord, 2 * n)
+      }
+      t(n) = tv; x(n) = xv; y(n) = yv
+      n += 1
+    }
+    /** Fills `ord(0 until n)` with the points' stable order by t. */
+    def sortByT(): Unit = {
+      var i = 0
+      while (i < n) { ord(i) = i; i += 1 }
+      StableSort.sort(ord, n, t, null)
+    }
+  }
+
+  /** Step 2's cut points: every A×B edge pair whose bboxes come within
+    * the proximity reach of each other, visited A-edge ascending, then
+    * B-edge ascending, so each edge's cut list receives its entries in
+    * the order of an all-pairs scan. Each pair is evaluated once, so
+    * intersection points are bit-identical on both edges (both must
+    * carry the EXACT coordinates, or ring assembly cannot chain across
+    * the A/B boundary). All other pairs add nothing: the intersection
+    * needs overlapping bboxes, and a proximity cut needs a vertex
+    * within eps = epsRel·(1+|x|+|y|) of the other edge, which the pad
+    * (the largest such eps plus a rounding allowance) covers. */
+  private def nodePairs(all: Segs, nA: Int, epsRel: Double, cuts: Cuts): Unit = {
+    val nB = all.n - nA
+    if (nA == 0 || nB == 0) return
+    var maxAbs = 0.0
+    var k = 0
+    while (k < all.n) {
+      maxAbs = Math.max(maxAbs, Math.max(Math.abs(all.x1(k)) + Math.abs(all.y1(k)),
+        Math.abs(all.x2(k)) + Math.abs(all.y2(k))))
+      k += 1
+    }
+    val pad = epsRel * (1.0 + maxAbs) + 64 * Math.ulp(1.0 + maxAbs)
+    if (!(pad < Double.PositiveInfinity)) {
+      // a NaN or infinite ordinate: no finite pad bounds the reach
+      var i = 0
+      while (i < nA) { var j = nA; while (j < all.n) { nodePair(all, i, j, epsRel, cuts); j += 1 }; i += 1 }
+      return
+    }
+    val pairs = candidatePairs(all, nA, pad)
+    java.util.Arrays.sort(pairs.a, 0, pairs.n)
+    k = 0
+    while (k < pairs.n) {
+      val p = pairs.a(k)
+      nodePair(all, (p / nB).toInt, nA + (p % nB).toInt, epsRel, cuts)
+      k += 1
+    }
+  }
+
+  private final class LongBuf {
+    var a = new Array[Long](64)
+    var n = 0
+    def add(v: Long): Unit = {
+      if (n == a.length) a = java.util.Arrays.copyOf(a, 2 * n)
+      a(n) = v
+      n += 1
+    }
+  }
+
+  /** Pairs (i, j), i an A-edge and j a B-edge, whose bboxes overlap
+    * once A's is padded by `pad`, as keys i·nB + (j − nA): a sweep over
+    * both edge sets sorted by min x, each pair reported once, by
+    * whichever box starts first. */
+  private def candidatePairs(all: Segs, nA: Int, pad: Double): LongBuf = {
+    val n = all.n
+    val nB = n - nA
+    val lo = new Array[Double](n); val hi = new Array[Double](n)
+    val ylo = new Array[Double](n); val yhi = new Array[Double](n)
+    var k = 0
+    while (k < n) {
+      val p = if (k < nA) pad else 0.0
+      lo(k) = Math.min(all.x1(k), all.x2(k)) - p; hi(k) = Math.max(all.x1(k), all.x2(k)) + p
+      ylo(k) = Math.min(all.y1(k), all.y2(k)) - p; yhi(k) = Math.max(all.y1(k), all.y2(k)) + p
+      k += 1
+    }
+    val as = StableSort.byKey(java.util.Arrays.copyOfRange(lo, 0, nA))
+    val bs = StableSort.byKey(java.util.Arrays.copyOfRange(lo, nA, n))
+    val out = new LongBuf
+    @inline def report(i: Int, j: Int): Unit =
+      if (ylo(i) <= yhi(j) && ylo(j) <= yhi(i)) out.add(i.toLong * nB + (j - nA))
+    var ia = 0
+    var ib = 0
+    while (ia < nA && ib < nB) {
+      val i = as(ia)
+      val j = nA + bs(ib)
+      if (lo(i) <= lo(j)) {
+        var q = ib
+        while (q < nB && lo(nA + bs(q)) <= hi(i)) { report(i, nA + bs(q)); q += 1 }
+        ia += 1
+      } else {
+        var q = ia
+        while (q < nA && lo(as(q)) <= hi(j)) { report(as(q), j); q += 1 }
+        ib += 1
+      }
+    }
+    out
+  }
+
+  /** One A×B pair: robust intersection points on both edges, then the
+    * vertex-on-edge proximity cuts. */
+  private def nodePair(all: Segs, i: Int, j: Int, epsRel: Double, cuts: Cuts): Unit = {
+    val r = SegIntersect.intersection(all.x1(i), all.y1(i), all.x2(i), all.y2(i),
+      all.x1(j), all.y1(j), all.x2(j), all.y2(j))
+    if (r.kind == SegIntersect.SinglePointProper || r.kind == SegIntersect.SinglePointImproper) {
+      cuts.add(i, param(all, i, r.x0, r.y0), r.x0, r.y0)
+      cuts.add(j, param(all, j, r.x0, r.y0), r.x0, r.y0)
+    } else if (r.kind == SegIntersect.CollinearOverlap) {
+      cuts.add(i, param(all, i, r.x0, r.y0), r.x0, r.y0)
+      cuts.add(i, param(all, i, r.x1, r.y1), r.x1, r.y1)
+      cuts.add(j, param(all, j, r.x0, r.y0), r.x0, r.y0)
+      cuts.add(j, param(all, j, r.x1, r.y1), r.x1, r.y1)
+    }
+    // vertex-on-edge proximity noding: real-world inputs carry
+    // NEAR-collinear shared runs (exactly collinear only to ~1e-9),
+    // where robust intersection reports nothing but one segment's
+    // endpoint lies epsilon-close to the other's interior. Cut
+    // there, or the uncut edge classifies "on" as a whole and the
+    // genuinely-boundary remainder is lost (GEOS ticket-275 hole).
+    proximityCut(all, i, all.x1(j), all.y1(j), epsRel, cuts)
+    proximityCut(all, i, all.x2(j), all.y2(j), epsRel, cuts)
+    proximityCut(all, j, all.x1(i), all.y1(i), epsRel, cuts)
+    proximityCut(all, j, all.x2(i), all.y2(i), epsRel, cuts)
+  }
+
+  /** If point (px,py) lies within a relative epsilon of edge `k`'s
+    * INTERIOR (not near either endpoint), record a cut at that point.
+    * The cut carries the point's own coordinates; node
+    * canonicalization merges the epsilon-twins afterwards. */
+  @inline private def proximityCut(all: Segs, k: Int, px: Double, py: Double,
+      epsRel: Double, cuts: Cuts): Unit = {
+    val eps = epsRel * (1.0 + Math.abs(px) + Math.abs(py))
+    val x1 = all.x1(k); val y1 = all.y1(k); val x2 = all.x2(k); val y2 = all.y2(k)
+    if ((Math.abs(px - x1) <= eps && Math.abs(py - y1) <= eps) ||
+        (Math.abs(px - x2) <= eps && Math.abs(py - y2) <= eps)) return
+    if (Planar.pointSegWithin(px, py, x1, y1, x2, y2, eps)) {
+      val t = param(all, k, px, py)
+      if (t > 0.0 && t < 1.0) cuts.add(k, t, px, py)
+    }
+  }
+
+  @inline private def param(all: Segs, k: Int, px: Double, py: Double): Double = {
+    val dx = all.x2(k) - all.x1(k); val dy = all.y2(k) - all.y1(k)
+    if (Math.abs(dx) >= Math.abs(dy)) { if (dx == 0.0) 0.0 else (px - all.x1(k)) / dx }
+    else (py - all.y1(k)) / dy
+  }
+
+  /** Split every edge into sub-edges between consecutive cut points:
+    * its cuts, then its own endpoints at t = 0 and 1, those with t in
+    * [0, 1] in stable t order, dropping a point whose coordinates
+    * equal the previous one's (several pairs can cut at the same point;
+    * parameters may differ in ulps). */
+  private def splitAtCuts(all: Segs, cuts: Cuts): Segs = {
+    val out = new Segs(all.n + cuts.n)
+    val run = new Run
+    var i = 0
+    while (i < all.n) {
+      run.clear()
+      var c = cuts.head(i)
+      while (c >= 0) {
+        if (cuts.t(c) >= 0.0 && cuts.t(c) <= 1.0) run.add(cuts.t(c), cuts.x(c), cuts.y(c))
+        c = cuts.next(c)
+      }
+      run.add(0.0, all.x1(i), all.y1(i))
+      run.add(1.0, all.x2(i), all.y2(i))
+      run.sortByT()
+      var px = run.x(run.ord(0)); var py = run.y(run.ord(0))
+      var k = 1
+      while (k < run.n) {
+        val ex = run.x(run.ord(k)); val ey = run.y(run.ord(k))
+        if (px != ex || py != ey) {
+          out.add(px, py, ex, ey, all.src(i))
+          px = ex; py = ey
+        }
+        k += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** Distinct points by `==` on both coordinates (so `0.0` and `-0.0`
+    * are one point, which keeps its first-seen coordinates; a NaN
+    * point is never found again), numbered in first-seen order. */
+  private final class Nodes(maxPoints: Int) {
+    var n = 0
+    val x = new Array[Double](maxPoints)
+    val y = new Array[Double](maxPoints)
+    private val mask = Integer.highestOneBit(Math.max(4, 2 * maxPoints)) * 2 - 1
+    private val slots = new Array[Int](mask + 1) // number + 1; 0 = empty
+    /** The point's number, numbering it if it is new. */
+    def id(px: Double, py: Double): Int = {
+      val s = slot(px, py)
+      if (slots(s) > 0) return slots(s) - 1
+      x(n) = px; y(n) = py
+      n += 1
+      slots(s) = n
+      n - 1
+    }
+    /** The point's number, or -1 if absent. */
+    def find(px: Double, py: Double): Int = slots(slot(px, py)) - 1
+    private def slot(px: Double, py: Double): Int = {
+      // + 0.0 maps -0.0 to 0.0, so both hash alike
+      var h = java.lang.Double.doubleToLongBits(px + 0.0) * 0x9E3779B97F4A7C15L +
+        java.lang.Double.doubleToLongBits(py + 0.0)
+      h = (h ^ (h >>> 33)) * 0xFF51AFD7ED558CCDL
+      h = (h ^ (h >>> 33)) * 0xC4CEB9FE1A85EC53L
+      var s = (h ^ (h >>> 33)).toInt & mask
+      while (slots(s) > 0 && !(x(slots(s) - 1) == px && y(slots(s) - 1) == py)) s = (s + 1) & mask
+      s
+    }
+  }
+
+  /** Cluster sub-edge endpoints that are within a relative epsilon of
+    * each other and rewrite every edge to its cluster representative.
+    * Sweep over distinct points sorted by (x, y); each point adopts the
+    * representative of the first earlier point within eps in both
+    * coordinates (transitive chains collapse to the earliest point).
+    * Edges whose endpoints merge are dropped. */
+  private def canonicalizeNodes(subs: Segs, epsRel: Double): Segs = {
+    if (subs.n == 0) return subs
+    val nodes = new Nodes(2 * subs.n)
+    val ends = new Array[Int](2 * subs.n)
+    var k = 0
+    while (k < subs.n) {
+      ends(2 * k) = nodeOf(nodes, subs.x1(k), subs.y1(k))
+      ends(2 * k + 1) = nodeOf(nodes, subs.x2(k), subs.y2(k))
+      k += 1
+    }
+    val nx = nodes.x; val ny = nodes.y
+    val order = Array.range(0, nodes.n)
+    StableSort.sort(order, nodes.n, nx, ny)
+    val rep = new Array[Int](nodes.n)
+    var i = 0
+    while (i < nodes.n) {
+      val p = order(i)
+      val eps = epsRel * (1.0 + Math.abs(nx(p)) + Math.abs(ny(p)))
+      var j = i - 1
+      rep(p) = p
+      var found = false
+      while (j >= 0 && !found && nx(p) - nx(order(j)) <= eps) {
+        val q = order(j)
+        if (Math.abs(ny(q) - ny(p)) <= eps) { rep(p) = rep(q); found = true }
+        j -= 1
+      }
+      i += 1
+    }
+    val out = new Segs(subs.n)
+    k = 0
+    while (k < subs.n) {
+      val a = rep(ends(2 * k))
+      val b = rep(ends(2 * k + 1))
+      if (a != b) out.add(nx(a), ny(a), nx(b), ny(b), subs.src(k))
+      k += 1
+    }
+    out
+  }
+
+  /** A NaN endpoint cannot be canonicalized; it fails as a lookup of
+    * an absent node. */
+  private def nodeOf(nodes: Nodes, x: Double, y: Double): Int = {
+    if (x != x || y != y) throw new NoSuchElementException(s"key not found: ($x,$y)")
+    nodes.id(x, y)
+  }
+
+  /** Post-canonicalization re-noding: split every sub-edge at any
+    * canonical node lying within the cluster epsilon of its INTERIOR.
+    * When the two inputs split a (near-)shared run differently — A
+    * into three pieces, B into one — the long piece has no exact-key
+    * partner, the shared-edge pairing falls back to nudged
+    * classification, and the selected edge set develops gaps that
+    * dead-end the ring walk (GEOS-ticket corpus, pg-list: union of two
+    * nearly-identical polygons returned EMPTY). Splitting both sides
+    * at the same canonical nodes makes shared-run decompositions
+    * identical, so pairing is exact again. */
+  private def splitAtNodes(subs: Segs, epsRel: Double): ArrayBuffer[Edge] = {
+    val out = ArrayBuffer[Edge]()
+    if (subs.n == 0) return out
+    val nodes = new Nodes(2 * subs.n)
+    var k = 0
+    while (k < subs.n) {
+      nodes.id(subs.x1(k), subs.y1(k)); nodes.id(subs.x2(k), subs.y2(k))
+      k += 1
+    }
+    val byX = StableSort.byKey(java.util.Arrays.copyOf(nodes.x, nodes.n))
+    val xs = new Array[Double](nodes.n)
+    val ys = new Array[Double](nodes.n)
+    var maxAbs = 1.0
+    k = 0
+    while (k < nodes.n) {
+      xs(k) = nodes.x(byX(k)); ys(k) = nodes.y(byX(k))
+      maxAbs = Math.max(maxAbs, Math.abs(xs(k)) + Math.abs(ys(k)))
+      k += 1
+    }
+    val epsMax = epsRel * (1.0 + maxAbs)
+    // a node cut into an edge lies within its eps (at most epsMax) of a
+    // point on the edge, so in y too within epsMax of the edge's range
+    // (plus rounding)
+    val reachY = epsMax * (1 + 1e-12) + 64 * Math.ulp(1.0 + maxAbs)
+    val run = new Run
+    k = 0
+    while (k < subs.n) {
+      val x1 = subs.x1(k); val y1 = subs.y1(k); val x2 = subs.x2(k); val y2 = subs.y2(k)
+      run.clear()
+      val minx = Math.min(x1, x2) - epsMax
+      val maxx = Math.max(x1, x2) + epsMax
+      val miny = Math.min(y1, y2) - reachY
+      val maxy = Math.max(y1, y2) + reachY
+      // first node with x >= minx
+      var q = 0
+      var end = xs.length
+      while (q < end) { val m = (q + end) >>> 1; if (xs(m) < minx) q = m + 1 else end = m }
+      val dx = x2 - x1
+      val dy = y2 - y1
+      val len2 = dx * dx + dy * dy
+      while (q < xs.length && xs(q) <= maxx) {
+        val nx = xs(q); val ny = ys(q)
+        if (ny >= miny && ny <= maxy &&
+            !(nx == x1 && ny == y1) && !(nx == x2 && ny == y2) && len2 > 0) {
+          val t = ((nx - x1) * dx + (ny - y1) * dy) / len2
+          if (t > 0 && t < 1) {
+            val ddx = nx - (x1 + t * dx)
+            val ddy = ny - (y1 + t * dy)
+            val eps = epsRel * (1.0 + Math.abs(nx) + Math.abs(ny))
+            if (ddx * ddx + ddy * ddy <= eps * eps) run.add(t, nx, ny)
+          }
+        }
+        q += 1
+      }
+      val src = subs.src(k)
+      if (run.n == 0) out += Edge(x1, y1, x2, y2, src)
+      else {
+        run.sortByT()
+        var px = x1; var py = y1
+        var c = 0
+        while (c < run.n) {
+          val x = run.x(run.ord(c)); val y = run.y(run.ord(c))
+          if (x != px || y != py) out += Edge(px, py, x, y, src)
+          px = x; py = y
+          c += 1
+        }
+        if (px != x2 || py != y2) out += Edge(px, py, x2, y2, src)
+      }
+      k += 1
+    }
+    out
+  }
+
   /** Step 4: the per-operation selection rule. */
   private def selectFrom(subs: ArrayBuffer[Edge], cls: Array[Int],
       a0: FlatGeom, b0: FlatGeom, op: Int, epsRel: Double): ArrayBuffer[Edge] = {
+    // shared-edge pairing: key by undirected endpoints, as the node
+    // numbers (low, high) of the two ends
+    val nodes = new Nodes(2 * subs.length)
+    val lo = new Array[Int](subs.length)
+    val hi = new Array[Int](subs.length)
     var i = 0
-    // shared-edge pairing: key by undirected endpoints
-    val keyOf = (e: Edge) => {
-      val k1 = (e.x1, e.y1); val k2 = (e.x2, e.y2)
-      if (k1._1 < k2._1 || (k1._1 == k2._1 && k1._2 <= k2._2)) (k1, k2) else (k2, k1)
-    }
-    val onA = MHashMap[((Double, Double), (Double, Double)), Int]() // key -> index of A on-edge
-    i = 0
     while (i < subs.length) {
-      if (cls(i) == 1 && subs(i).source == 0) onA(keyOf(subs(i))) = i
+      val a = nodes.id(subs(i).x1, subs(i).y1)
+      val b = nodes.id(subs(i).x2, subs(i).y2)
+      lo(i) = Math.min(a, b); hi(i) = Math.max(a, b)
       i += 1
     }
+    val pairs = new Nodes(subs.length)
+    val onA = new Array[Int](subs.length) // pair -> index of the last A on-edge
+    i = 0
+    while (i < subs.length) {
+      if (cls(i) == 1 && subs(i).source == 0) onA(pairs.id(lo(i), hi(i))) = i
+      i += 1
+    }
+    def partnerA(k: Int): Int = { val p = pairs.find(lo(k), hi(k)); if (p < 0) -1 else onA(p) }
 
     // selection
     val selected = ArrayBuffer[Edge]()
@@ -373,30 +725,30 @@ object Overlay {
       if (c == 1) {
         // handle shared edges from the A side only (keep one copy)
         if (e.source == 1) {
-          onA.get(keyOf(e)) match {
-            case Some(ai) =>
-              val ae = subs(ai)
-              val sameDir = (ae.x1 == e.x1 && ae.y1 == e.y1 && ae.x2 == e.x2 && ae.y2 == e.y2)
-              val keep = op match {
-                case OpIntersection => sameDir
-                case OpUnion => sameDir
-                case OpDifference => !sameDir
-                case _ => false
-              }
-              if (keep) selected += ae
-            case None =>
-              // B-edge on A's boundary with no exact A partner (partial
-              // overlap split differently) — treat by nudged midpoint
-              val c2 = classifyNudged(if (e.source == 1) a0 else b0, e, epsRel)
-              val keepB = op match {
-                case OpIntersection => c2 == 0
-                case OpUnion => c2 == 2
-                case OpDifference => c2 == 0
-                case _ => false
-              }
-              if (keepB) selected += (if (op == OpDifference) Edge(e.x2, e.y2, e.x1, e.y1, 1) else e)
+          val ai = partnerA(i)
+          if (ai >= 0) {
+            val ae = subs(ai)
+            val sameDir = (ae.x1 == e.x1 && ae.y1 == e.y1 && ae.x2 == e.x2 && ae.y2 == e.y2)
+            val keep = op match {
+              case OpIntersection => sameDir
+              case OpUnion => sameDir
+              case OpDifference => !sameDir
+              case _ => false
+            }
+            if (keep) selected += ae
+          } else {
+            // B-edge on A's boundary with no exact A partner (partial
+            // overlap split differently) — treat by nudged midpoint
+            val c2 = classifyNudged(if (e.source == 1) a0 else b0, e, epsRel)
+            val keepB = op match {
+              case OpIntersection => c2 == 0
+              case OpUnion => c2 == 2
+              case OpDifference => c2 == 0
+              case _ => false
+            }
+            if (keepB) selected += (if (op == OpDifference) Edge(e.x2, e.y2, e.x1, e.y1, 1) else e)
           }
-        } else if (!onA.contains(keyOf(e))) {
+        } else if (partnerA(i) < 0) {
           // A-edge on B's boundary with no B partner. For union, keep
           // it unless it is strictly INSIDE B: a near-shared run whose
           // nudged probe still lands "on" is part of the union's
@@ -436,125 +788,6 @@ object Overlay {
     selected
   }
 
-  /** If point (px,py) lies within a relative epsilon of edge `e`'s
-    * INTERIOR (not near either endpoint), record a cut at that point.
-    * The cut carries the point's own coordinates; node
-    * canonicalization merges the epsilon-twins afterwards. */
-  @inline private def proximityCut(
-      buf: ArrayBuffer[(Double, Double, Double)], e: Edge, px: Double, py: Double,
-      epsRel: Double): Unit = {
-    val eps = epsRel * (1.0 + Math.abs(px) + Math.abs(py))
-    if ((Math.abs(px - e.x1) <= eps && Math.abs(py - e.y1) <= eps) ||
-        (Math.abs(px - e.x2) <= eps && Math.abs(py - e.y2) <= eps)) return
-    if (Planar.pointSegDistance(px, py, e.x1, e.y1, e.x2, e.y2) <= eps) {
-      val t = param(e, px, py)
-      if (t > 0.0 && t < 1.0) buf += ((t, px, py))
-    }
-  }
-
-  /** Cluster sub-edge endpoints that are within a relative epsilon of
-    * each other and rewrite every edge to its cluster representative.
-    * Sweep over x-sorted distinct points; each point adopts the
-    * representative of the first earlier point within eps in both
-    * coordinates (transitive chains collapse to the earliest point).
-    * Edges whose endpoints merge are dropped. */
-  private def canonicalizeNodes(subs: ArrayBuffer[Edge], epsRel: Double): ArrayBuffer[Edge] = {
-    if (subs.isEmpty) return subs
-    val uniq = {
-      val set = scala.collection.mutable.LinkedHashSet[(Double, Double)]()
-      subs.foreach { e => set += ((e.x1, e.y1)); set += ((e.x2, e.y2)) }
-      set.toArray.sortBy(p => (p._1, p._2))
-    }
-    val canon = MHashMap[(Double, Double), (Double, Double)]()
-    var i = 0
-    while (i < uniq.length) {
-      val p = uniq(i)
-      val eps = epsRel * (1.0 + Math.abs(p._1) + Math.abs(p._2))
-      var j = i - 1
-      var rep = p
-      var found = false
-      while (j >= 0 && !found && p._1 - uniq(j)._1 <= eps) {
-        val q = uniq(j)
-        if (Math.abs(q._2 - p._2) <= eps) { rep = canon(q); found = true }
-        j -= 1
-      }
-      canon(p) = rep
-      i += 1
-    }
-    val out = ArrayBuffer[Edge]()
-    subs.foreach { e =>
-      val a = canon((e.x1, e.y1))
-      val b = canon((e.x2, e.y2))
-      if (a != b) out += Edge(a._1, a._2, b._1, b._2, e.source)
-    }
-    out
-  }
-
-  /** Post-canonicalization re-noding: split every sub-edge at any
-    * canonical node lying within the cluster epsilon of its INTERIOR.
-    * When the two inputs split a (near-)shared run differently — A
-    * into three pieces, B into one — the long piece has no exact-key
-    * partner, the shared-edge pairing falls back to nudged
-    * classification, and the selected edge set develops gaps that
-    * dead-end the ring walk (GEOS-ticket corpus, pg-list: union of two
-    * nearly-identical polygons returned EMPTY). Splitting both sides
-    * at the same canonical nodes makes shared-run decompositions
-    * identical, so pairing is exact again. */
-  private def splitAtNodes(subs: ArrayBuffer[Edge], epsRel: Double): ArrayBuffer[Edge] = {
-    if (subs.isEmpty) return subs
-    val nodes = {
-      val set = scala.collection.mutable.LinkedHashSet[(Double, Double)]()
-      subs.foreach { e => set += ((e.x1, e.y1)); set += ((e.x2, e.y2)) }
-      set.toArray.sortBy(_._1)
-    }
-    var maxAbs = 1.0
-    nodes.foreach { n => maxAbs = Math.max(maxAbs, Math.abs(n._1) + Math.abs(n._2)) }
-    val epsMax = epsRel * (1.0 + maxAbs)
-    val xs = nodes.map(_._1)
-    def lowerBound(v: Double): Int = {
-      var lo = 0; var hi = xs.length
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (xs(m) < v) lo = m + 1 else hi = m }
-      lo
-    }
-    val out = ArrayBuffer[Edge]()
-    val cuts = ArrayBuffer[(Double, Double, Double)]() // (t, x, y)
-    subs.foreach { e =>
-      cuts.clear()
-      val minx = Math.min(e.x1, e.x2) - epsMax
-      val maxx = Math.max(e.x1, e.x2) + epsMax
-      var k = lowerBound(minx)
-      val dx = e.x2 - e.x1
-      val dy = e.y2 - e.y1
-      val len2 = dx * dx + dy * dy
-      while (k < nodes.length && xs(k) <= maxx) {
-        val (nx, ny) = nodes(k)
-        if (!(nx == e.x1 && ny == e.y1) && !(nx == e.x2 && ny == e.y2) && len2 > 0) {
-          val t = ((nx - e.x1) * dx + (ny - e.y1) * dy) / len2
-          if (t > 0 && t < 1) {
-            val px = e.x1 + t * dx
-            val py = e.y1 + t * dy
-            val ddx = nx - px
-            val ddy = ny - py
-            val eps = epsRel * (1.0 + Math.abs(nx) + Math.abs(ny))
-            if (ddx * ddx + ddy * ddy <= eps * eps) cuts += ((t, nx, ny))
-          }
-        }
-        k += 1
-      }
-      if (cuts.isEmpty) out += e
-      else {
-        val ordered = cuts.sortBy(_._1)
-        var px = e.x1; var py = e.y1
-        ordered.foreach { case (_, x, y) =>
-          if (x != px || y != py) out += Edge(px, py, x, y, e.source)
-          px = x; py = y
-        }
-        if (px != e.x2 || py != e.y2) out += Edge(px, py, e.x2, e.y2, e.source)
-      }
-    }
-    out
-  }
-
   private val emptyMp = FlatGeom.multiPolygon(Nil)
 
   private def asMultiPolygon(g: FlatGeom): FlatGeom = g.kind match {
@@ -563,36 +796,48 @@ object Overlay {
     case _ => emptyMp
   }
 
-  @inline private def param(e: Edge, px: Double, py: Double): Double = {
-    val dx = e.x2 - e.x1; val dy = e.y2 - e.y1
-    if (Math.abs(dx) >= Math.abs(dy)) { if (dx == 0.0) 0.0 else (px - e.x1) / dx }
-    else (py - e.y1) / dy
-  }
-
-  @inline private def pointAt(e: Edge, t: Double): (Double, Double) = {
-    if (t == 0.0) (e.x1, e.y1)
-    else if (t == 1.0) (e.x2, e.y2)
-    else (e.x1 + t * (e.x2 - e.x1), e.y1 + t * (e.y2 - e.y1))
-  }
-
-  /** 0=in 1=on 2=out, tolerant near the boundary. */
-  private def classify(g: FlatGeom, x: Double, y: Double, e: Edge, epsRel: Double): Int = {
+  /** 0=in 1=on 2=out, tolerant near the boundary: "on" when any edge
+    * of `g` lies within tol, and always for an infinite tol (the
+    * nearest distance is at most +inf even when every distance is NaN
+    * or `g` has no edge). `gMax` is `g`'s largest |ordinate|. */
+  private def classify(g: FlatGeom, gMax: Double, x: Double, y: Double, epsRel: Double): Int = {
     val tol = epsRel * (1.0 + Math.abs(x) + Math.abs(y))
-    var best = Double.PositiveInfinity
-    FlatGeom.foreachRing(g) { (s, en) =>
-      var i = s
-      while (i < en - 1) {
-        val d = Planar.pointSegDistance(x, y, g.x(i), g.y(i), g.x(i + 1), g.y(i + 1))
-        if (d < best) best = d
-        i += 1
-      }
-    }
-    if (best <= tol) 1
+    if (tol == Double.PositiveInfinity || nearBoundary(g, gMax, x, y, tol)) 1
     else Planar.coordPos(g, x, y) match {
       case Planar.Inside => 0
       case Planar.OnBoundary => 1
       case _ => 2
     }
+  }
+
+  private def nearBoundary(g: FlatGeom, gMax: Double, x: Double, y: Double, tol: Double): Boolean = {
+    // pointSegWithin's bbox margin, widened to hold for every edge of
+    // g, rejects most edges before the call
+    val m = tol * (1 + 1e-12) + 1e-14 * (Math.abs(x) + Math.abs(y) + 4 * gMax)
+    val cs = g.coords
+    var s = 0
+    var r = 0
+    while (r < g.rings.length) {
+      val e = g.rings(r)
+      var i = s
+      while (i < e - 1) {
+        val x1 = cs(2 * i); val y1 = cs(2 * i + 1); val x2 = cs(2 * i + 2); val y2 = cs(2 * i + 3)
+        if (!(x - x1 > m && x - x2 > m) && !(x1 - x > m && x2 - x > m) &&
+            !(y - y1 > m && y - y2 > m) && !(y1 - y > m && y2 - y > m) &&
+            Planar.pointSegWithin(x, y, x1, y1, x2, y2, tol)) return true
+        i += 1
+      }
+      s = e
+      r += 1
+    }
+    false
+  }
+
+  private def maxAbsOrdinate(g: FlatGeom): Double = {
+    var m = 0.0
+    var k = 0
+    while (k < g.coords.length) { m = Math.max(m, Math.abs(g.coords(k))); k += 1 }
+    m
   }
 
   /** For an on-boundary edge, nudge the midpoint to the edge's LEFT
@@ -625,56 +870,83 @@ object Overlay {
     var droppedAny = false
     if (edges.isEmpty) return (emptyMp, false)
     val used = new Array[Boolean](edges.length)
-    val byStart = MHashMap[(Double, Double), ArrayBuffer[Int]]()
+    // edge indices grouped by start node, ascending within a group
+    val nodes = new Nodes(edges.length)
+    val startOf = new Array[Int](edges.length)
     var i = 0
-    while (i < edges.length) {
-      byStart.getOrElseUpdate((edges(i).x1, edges(i).y1), ArrayBuffer()) += i
-      i += 1
-    }
+    while (i < edges.length) { startOf(i) = nodes.id(edges(i).x1, edges(i).y1); i += 1 }
+    val first = new Array[Int](nodes.n + 1)
+    i = 0
+    while (i < edges.length) { first(startOf(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < nodes.n) { first(i + 1) += first(i); i += 1 }
+    val byStart = new Array[Int](edges.length)
+    val fill = java.util.Arrays.copyOf(first, nodes.n)
+    i = 0
+    while (i < edges.length) { byStart(fill(startOf(i))) = i; fill(startOf(i)) += 1; i += 1 }
 
     val ringsOut = ArrayBuffer[Array[Double]]()
+    var ring = new Array[Double](16)
+    var rn = 0
+    def push(x: Double, y: Double): Unit = {
+      if (rn + 2 > ring.length) ring = java.util.Arrays.copyOf(ring, 2 * ring.length)
+      ring(rn) = x; ring(rn + 1) = y
+      rn += 2
+    }
     i = 0
     while (i < edges.length) {
       if (!used(i)) {
-        val ring = ArrayBuffer[Double]()
+        rn = 0
         var cur = i
         var guard = edges.length + 5
         var closed = false
-        ring += edges(i).x1; ring += edges(i).y1
+        push(edges(i).x1, edges(i).y1)
         while (!closed && guard > 0) {
           guard -= 1
           used(cur) = true
           val e = edges(cur)
-          ring += e.x2; ring += e.y2
-          if (e.x2 == edges(i).x1 && e.y2 == edges(i).y1 && ring.length >= 8) {
+          push(e.x2, e.y2)
+          if (e.x2 == edges(i).x1 && e.y2 == edges(i).y1 && rn >= 8) {
             closed = true
           } else {
-            val outs = byStart.getOrElse((e.x2, e.y2), ArrayBuffer()).filter(k => !used(k))
-            if (outs.isEmpty) {
+            // unused edges leaving the end node, in index order
+            val node = nodes.find(e.x2, e.y2)
+            val from = if (node < 0) 0 else first(node)
+            val until = if (node < 0) 0 else first(node + 1)
+            var outs = 0
+            var only = -1
+            var q = from
+            while (q < until) { if (!used(byStart(q))) { outs += 1; if (only < 0) only = byStart(q) }; q += 1 }
+            if (outs == 0) {
               if (System.getenv("GRAFT_OVERLAY_DEBUG") != null)
-                System.err.println(s"[assemble] dead end at (${e.x2},${e.y2}) ringLen=${ring.length / 2}")
-              closed = true; ring.clear(); droppedAny = true
+                System.err.println(s"[assemble] dead end at (${e.x2},${e.y2}) ringLen=${rn / 2}")
+              closed = true; rn = 0; droppedAny = true
             } // dead end: drop
-            else if (outs.length == 1) cur = outs(0)
+            else if (outs == 1) cur = only
             else {
               // sharpest left turn relative to incoming direction
               val inAng = Math.atan2(e.y2 - e.y1, e.x2 - e.x1)
-              var bestK = outs(0)
+              var bestK = only
               var bestTurn = Double.PositiveInfinity
-              outs.foreach { k =>
-                val o = edges(k)
-                val outAng = Math.atan2(o.y2 - o.y1, o.x2 - o.x1)
-                // turn angle measured clockwise from incoming dir, in (0, 2π]
-                var turn = inAng + Math.PI - outAng
-                while (turn <= 0) turn += 2 * Math.PI
-                while (turn > 2 * Math.PI) turn -= 2 * Math.PI
-                if (turn < bestTurn) { bestTurn = turn; bestK = k }
+              q = from
+              while (q < until) {
+                val k = byStart(q)
+                if (!used(k)) {
+                  val o = edges(k)
+                  val outAng = Math.atan2(o.y2 - o.y1, o.x2 - o.x1)
+                  // turn angle measured clockwise from incoming dir, in (0, 2π]
+                  var turn = inAng + Math.PI - outAng
+                  while (turn <= 0) turn += 2 * Math.PI
+                  while (turn > 2 * Math.PI) turn -= 2 * Math.PI
+                  if (turn < bestTurn) { bestTurn = turn; bestK = k }
+                }
+                q += 1
               }
               cur = bestK
             }
           }
         }
-        if (ring.length >= 8) ringsOut += ring.toArray
+        if (rn >= 8) ringsOut += java.util.Arrays.copyOf(ring, rn)
       }
       i += 1
     }

@@ -421,6 +421,53 @@ object Planar {
     else Math.hypot(px - (x1 + t * dx), py - (y1 + t * dy))
   }
 
+  /** The squared length of the offset whose `Math.hypot` is
+    * `pointSegDistance(px, py, x1, y1, x2, y2)`: the same branches and
+    * the same operations, so only the final rounding differs. Square
+    * and sum err by at most a few ulps (while no square overflows or
+    * loses precision to underflow), hypot by under one, so an order on
+    * this value is the order on the distance outside a thin relative
+    * band. */
+  def pointSegDist2(px: Double, py: Double, x1: Double, y1: Double, x2: Double, y2: Double): Double = {
+    val dx = x2 - x1
+    val dy = y2 - y1
+    var ox = px - x1
+    var oy = py - y1
+    if (dx != 0.0 || dy != 0.0) {
+      val t = ((px - x1) * dx + (py - y1) * dy) / (dx * dx + dy * dy)
+      // a NaN t takes pointSegDistance's interior branch
+      if (t >= 1.0) { ox = px - x2; oy = py - y2 }
+      else if (!(t <= 0.0)) { ox = px - (x1 + t * dx); oy = py - (y1 + t * dy) }
+    }
+    ox * ox + oy * oy
+  }
+
+  /** Exactly `pointSegDistance(px, py, x1, y1, x2, y2) <= tol`, without
+    * its `Math.hypot` in all but a thin band. A point farther than
+    * `tol` (plus a rounding margin) from the segment's bbox is rejected
+    * first; otherwise `pointSegDist2` is compared with `tol²`, which
+    * decides outside a relative band of 1e-12. Inside the band, when
+    * `tol` lies outside [2^-500, 2^500] or the squared length is not
+    * finite (overflow, NaN), the distance itself is compared. */
+  def pointSegWithin(px: Double, py: Double, x1: Double, y1: Double, x2: Double, y2: Double,
+      tol: Double): Boolean = {
+    // the computed nearest point lies within a few ulps of the bbox
+    val m = tol * (1 + 1e-12) +
+      1e-14 * (Math.abs(px) + Math.abs(py) + Math.abs(x1) + Math.abs(y1) + Math.abs(x2) + Math.abs(y2))
+    if (px - Math.max(x1, x2) > m || Math.min(x1, x2) - px > m ||
+        py - Math.max(y1, y2) > m || Math.min(y1, y2) - py > m) return false
+    val d2 = pointSegDist2(px, py, x1, y1, x2, y2)
+    if (d2 < Double.PositiveInfinity && tol >= SquareTiny && tol <= SquareSafe) {
+      val t2 = tol * tol
+      if (d2 < t2 * (1 - 1e-12)) return true
+      if (d2 > t2 * (1 + 1e-12)) return false
+    }
+    pointSegDistance(px, py, x1, y1, x2, y2) <= tol
+  }
+
+  private val SquareSafe = Math.scalb(1.0, 500)
+  private val SquareTiny = Math.scalb(1.0, -500)
+
   /** Nearest point on a segment to p (for ClosestPoint semantics). */
   def closestOnSeg(px: Double, py: Double, x1: Double, y1: Double, x2: Double, y2: Double): Array[Double] = {
     val dx = x2 - x1

@@ -18,51 +18,86 @@ object Simplify {
     * range). Epsilon <= 0 → identity. */
   def rdpIndices(cs: Array[Double], start: Int, end: Int, epsilon: Double, initialMin: Int): Array[Int] = {
     val n = end - start
-    val all = Array.range(0, n)
-    if (epsilon <= 0.0 || n == 0) return all
-    val simplifiedLen = Array(n)
-    computeRdp(cs, start, all, simplifiedLen, epsilon, initialMin)
+    if (epsilon <= 0.0 || n <= 2) return Array.range(0, n)
+    val out = new Rdp(cs, start, n, epsilon, initialMin)
+    out.run(0, n - 1)
+    out.add(n - 1)
+    java.util.Arrays.copyOf(out.kept, out.size)
   }
 
-  private def computeRdp(cs: Array[Double], base: Int, idx: Array[Int],
-      simplifiedLen: Array[Int], epsilon: Double, initialMin: Int): Array[Int] = {
-    if (idx.isEmpty) return idx
-    if (idx.length == 2) return idx
-    if (idx.length == 1) return idx
-    val first = idx(0)
-    val last = idx(idx.length - 1)
-    val fx = cs(2 * (base + first)); val fy = cs(2 * (base + first) + 1)
-    val lx = cs(2 * (base + last)); val ly = cs(2 * (base + last) + 1)
+  /** One RDP pass: `run(lo, hi)` appends the kept indices of the range
+    * [lo, hi], all but `hi` itself (each range's last point is the next
+    * range's first), splitting left before right, so `simplifiedLen`
+    * counts down in left-to-right order (the `initialMin` cap depends on
+    * that order). */
+  private final class Rdp(cs: Array[Double], base: Int, n: Int, epsilon: Double, initialMin: Int) {
+    var kept = new Array[Int](16)
+    var size = 0
+    private var simplifiedLen = n
+    private val d2 = new Array[Double](n)
 
-    // farthest point from the first-last chord; `>=` keeps the LAST
-    // equally-far point (simplify.rs:109)
-    var farthestIndex = 0
-    var farthestDistance = 0.0
-    var i = 1
-    while (i < idx.length - 1) {
-      val px = cs(2 * (base + idx(i))); val py = cs(2 * (base + idx(i)) + 1)
-      val d = Planar.pointSegDistance(px, py, fx, fy, lx, ly)
-      if (d >= farthestDistance) { farthestIndex = i; farthestDistance = d }
-      i += 1
+    def add(i: Int): Unit = {
+      if (size == kept.length) kept = java.util.Arrays.copyOf(kept, 2 * size)
+      kept(size) = i
+      size += 1
     }
 
-    if (farthestDistance > epsilon) {
-      val left = computeRdp(cs, base, idx.slice(0, farthestIndex + 1), simplifiedLen, epsilon, initialMin)
-      val right = computeRdp(cs, base, idx.slice(farthestIndex, idx.length), simplifiedLen, epsilon, initialMin)
-      val out = new Array[Int](left.length - 1 + right.length)
-      System.arraycopy(left, 0, out, 0, left.length - 1)
-      System.arraycopy(right, 0, out, left.length - 1, right.length)
-      return out
+    private def addRange(lo: Int, hi: Int): Unit = { var i = lo; while (i < hi) { add(i); i += 1 } }
+
+    @inline private def x(i: Int): Double = cs(2 * (base + i))
+    @inline private def y(i: Int): Double = cs(2 * (base + i) + 1)
+
+    def run(lo: Int, hi: Int): Unit = {
+      if (hi - lo < 2) { addRange(lo, hi); return }
+      val f = farthest(lo, hi)
+      if (f >= 0) {
+        run(lo, f)
+        run(f, hi)
+        return
+      }
+      // cull everything between first and last, unless that would drop
+      // the total below initialMin (simplify.rs:135-150)
+      val newLength = simplifiedLen - (hi - lo - 1)
+      if (newLength < initialMin) addRange(lo, hi)
+      else { simplifiedLen = newLength; add(lo) }
     }
 
-    // cull everything between first and last, unless that would drop the
-    // total below initialMin (simplify.rs:135-150)
-    val numberCulled = idx.length - 2
-    val newLength = simplifiedLen(0) - numberCulled
-    if (newLength < initialMin) return idx
-    simplifiedLen(0) = newLength
-    Array(first, last)
+    /** The point of (lo, hi) farthest from the lo–hi chord if its
+      * distance exceeds epsilon, else -1. `>=` keeps the LAST
+      * equally-far point (simplify.rs:109). The scan ranks squared
+      * distances; only points within a relative 1e-12 of the largest
+      * can hold the largest distance or tie it, so only those are
+      * measured. A NaN, infinite or tiny squared distance measures
+      * every point. */
+    private def farthest(lo: Int, hi: Int): Int = {
+      val fx = x(lo); val fy = y(lo); val lx = x(hi); val ly = y(hi)
+      var max2 = 0.0
+      var plain = true
+      var i = lo + 1
+      while (i < hi) {
+        val v = Planar.pointSegDist2(x(i), y(i), fx, fy, lx, ly)
+        d2(i) = v
+        if (v > max2) max2 = v
+        else if (!(v <= max2)) plain = false // NaN
+        i += 1
+      }
+      plain &&= max2 < Double.PositiveInfinity && max2 >= RankSafe
+      val floor = if (plain) max2 * (1 - 1e-12) else Double.NegativeInfinity
+      var farthestIndex = -1
+      var farthestDistance = 0.0
+      i = lo + 1
+      while (i < hi) {
+        if (!plain || d2(i) >= floor) {
+          val d = Planar.pointSegDistance(x(i), y(i), fx, fy, lx, ly)
+          if (d >= farthestDistance) { farthestIndex = i; farthestDistance = d }
+        }
+        i += 1
+      }
+      if (farthestDistance > epsilon) farthestIndex else -1
+    }
   }
+
+  private val RankSafe = Math.scalb(1.0, -1000)
 
   private def extractIndices(cs: Array[Double], start: Int, kept: Array[Int]): Array[Double] = {
     val out = new Array[Double](kept.length * 2)
